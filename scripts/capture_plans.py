@@ -61,12 +61,12 @@ def main() -> None:
     real_lcp = DataFrame.localCheckpoint
     feeders: list[str] = []
 
-    def capturing_lcp(self, eager=True):  # noqa: ANN001
+    def capturing_lcp(self, *args, **kwargs):  # noqa: ANN001
         try:
             feeders.append(_explain(self))
         except Exception as exc:  # noqa: BLE001
             feeders.append(f"ERROR capturing feeder plan: {exc}")
-        return real_lcp(self, eager)
+        return real_lcp(self, *args, **kwargs)
 
     DataFrame.localCheckpoint = capturing_lcp
     try:

@@ -3,12 +3,34 @@
 Local-mode defaults match the driver environment (local[32], single JVM);
 on a real cluster the same settings are sane starting points — AQE handles
 runtime re-planning, Arrow accelerates the few pandas_udf kernels.
+
+Local filesystem. Without libhadoop, Hadoop's local filesystem forks
+``chmod`` for every file and directory it creates and ``readlink`` for
+every ``FileContext`` rename, so each streaming micro-batch spawned
+~120-370 processes to write its state, offset and commit files.
+``get_spark`` swaps in ``NioLocalFileSystem``/``NioLocalFs``
+(``jvm/*.java``): the same classes with those two calls done through
+``java.nio`` in-process, and nothing else changed (checksums, rename
+atomicity, symlink handling). It compiles them once with the ``javac``
+next to the JVM Spark runs on and caches the jar per source hash and
+pyspark version. The swap is active only when it is safe and possible:
+a ``local[…]`` master (driver JVM = executor JVM), a call that launches
+the JVM (the jar must be on its classpath), and a JDK compiler. Every
+call logs the filesystem in use and why at INFO.
 """
 
 from __future__ import annotations
 
+import hashlib
+import logging
 import os
+import shutil
+import subprocess
+import tempfile
+import zipfile
+from collections.abc import Callable
 
+from pyspark import SparkContext
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -39,6 +61,102 @@ def _default_driver_mem(master: str) -> str:
     return os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g")
 
 
+_LOG = logging.getLogger(__name__)
+
+_JVM_SRC = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm")
+NIO_FS = "org.semanticcpp.fs.NioLocalFileSystem"
+NIO_AFS = "org.semanticcpp.fs.NioLocalFs"
+STOCK_FS = "org.apache.hadoop.fs.LocalFileSystem"
+_FS_KEY = "spark.hadoop.fs.file.impl"
+_CP_KEY = "spark.driver.extraClassPath"
+
+
+def _javac() -> str | None:
+    """The ``javac`` beside the ``java`` Spark's launcher runs
+    (``$JAVA_HOME/bin/java``, else ``java`` on PATH)."""
+    if os.environ.get("JAVA_HOME"):
+        bindir = os.path.join(os.environ["JAVA_HOME"], "bin")
+    else:
+        java = shutil.which("java")
+        if java is None:
+            return None
+        bindir = os.path.dirname(os.path.realpath(java))
+    javac = os.path.join(bindir, "javac")
+    return javac if os.access(javac, os.X_OK) else None
+
+
+def nio_fs_jar() -> str | None:
+    """Path of the jar holding ``jvm/*.java``, compiled on first use
+    against ``$SPARK_HOME/jars``; None when no JDK compiler is found.
+
+    The jar lives in the user cache dir (not the repo, not TMPDIR, which
+    callers point at per-run scratch), keyed by the sources, the pyspark
+    version and the compiler, and is published with an atomic rename so
+    concurrent sessions never load a half-written file."""
+    import pyspark
+    from pyspark.find_spark_home import _find_spark_home
+
+    javac = _javac()
+    if javac is None:
+        return None
+    sources = sorted(
+        os.path.join(_JVM_SRC, f) for f in os.listdir(_JVM_SRC) if f.endswith(".java")
+    )
+    key = hashlib.sha256(f"{pyspark.__version__}\0{os.path.realpath(javac)}".encode())
+    for src in sources:
+        with open(src, "rb") as f:
+            key.update(f.read())
+    cache = os.path.join(
+        os.environ.get("XDG_CACHE_HOME") or os.path.expanduser("~/.cache"),
+        "semantic_cpp_spark",
+    )
+    jar = os.path.join(cache, f"nio-localfs-{key.hexdigest()[:16]}.jar")
+    if os.path.exists(jar):
+        return jar
+    os.makedirs(cache, exist_ok=True)
+    with tempfile.TemporaryDirectory(dir=cache) as tmp:
+        classes = os.path.join(tmp, "classes")
+        subprocess.run(
+            [javac, "-nowarn", "-proc:none", "-d", classes,
+             "-cp", os.path.join(_find_spark_home(), "jars", "*"), *sources],
+            check=True, capture_output=True, text=True, timeout=300,
+        )
+        part = os.path.join(tmp, "part.jar")
+        with zipfile.ZipFile(part, "w") as z:
+            for root, _, files in os.walk(classes):
+                for name in files:
+                    path = os.path.join(root, name)
+                    z.write(path, os.path.relpath(path, classes))
+        os.replace(part, jar)
+    return jar
+
+
+def local_fs_conf(
+    master: str, jvm_running: bool, jar: Callable[[], str | None]
+) -> tuple[dict[str, str], str]:
+    """Session conf that binds the fork-free local filesystem, and the
+    reason it is or is not bound: ``active``, ``non-local master``,
+    ``existing JVM``, ``javac unavailable`` or ``jar build failed``.
+    ``jar`` is only called when the first two checks pass."""
+    if not (master == "local" or master.startswith("local[")):
+        return {}, "non-local master"
+    if jvm_running:
+        return {}, "existing JVM"
+    try:
+        path = jar()
+    except (OSError, subprocess.SubprocessError) as ex:
+        detail = getattr(ex, "stderr", None) or ex
+        _LOG.warning("get_spark: building the local filesystem jar failed: %s", detail)
+        return {}, "jar build failed"
+    if path is None:
+        return {}, "javac unavailable"
+    return {
+        _CP_KEY: path,
+        _FS_KEY: NIO_FS,
+        "spark.hadoop.fs.AbstractFileSystem.file.impl": NIO_AFS,
+    }, "active"
+
+
 def get_spark(
     app_name: str = "semantic_cpp_spark",
     master: str | None = None,
@@ -52,6 +170,8 @@ def get_spark(
     - shuffle.partitions ~= cores locally; on a cluster leave to AQE.
     - Arrow on for pandas_udf kernels (FFT, gradient, multimodal).
     - UTC session timezone so timestamps hash-match the DuckDB oracle.
+    - Fork-free local filesystem when this call launches a local[…] JVM
+      (see the module docstring); logged at INFO either way.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
     master = master or os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
@@ -83,11 +203,25 @@ def get_spark(
         # reference's policy. Pinned by tests/test_charsets_hypothesis.py.
         .config("spark.sql.legacy.codingErrorAction", "true")
     )
-    if extra_conf:
-        for k, v in extra_conf.items():
-            builder = builder.config(k, v)
+    # Under spark-submit the JVM is up before Python and hands over its
+    # gateway port; either way this call's classpath could not apply.
+    jvm_running = (
+        SparkContext._gateway is not None or "PYSPARK_GATEWAY_PORT" in os.environ
+    )
+    conf, fs_reason = local_fs_conf(master, jvm_running, nio_fs_jar)
+    for k, v in (extra_conf or {}).items():
+        if k == _CP_KEY and k in conf:
+            v = os.pathsep.join([conf[k], v])
+        conf[k] = v
+    for k, v in conf.items():
+        builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    _LOG.info(
+        "get_spark: local filesystem %s (%s)",
+        spark.sparkContext.getConf().get(_FS_KEY, STOCK_FS),
+        fs_reason,
+    )
     # ADVICE r15: builder confs only take effect when THIS call launches
     # the JVM; getOrCreate against a pre-existing session silently keeps
     # its heap. Surface the mismatch so a heap-sensitive run (bench,

@@ -50,17 +50,34 @@ _CORE_MODULES = {
 }
 
 
-def pytest_collection_modifyitems(config, items):
-    import os as _os
+def _full_battery() -> bool:
+    return bool(os.environ.get("SEM_FULL_TESTS"))
 
-    if _os.environ.get("SEM_FULL_TESTS"):
+
+def _outside_core(item) -> bool:
+    mod = getattr(item, "module", None)
+    return (mod.__name__.rsplit(".", 1)[-1] if mod else "") not in _CORE_MODULES
+
+
+def pytest_collection_modifyitems(config, items):
+    if _full_battery():
         return
     skip = pytest.mark.skip(
         reason="full-battery test: run with SEM_FULL_TESTS=1 "
         "(default run is the driver-budget core battery)"
     )
     for item in items:
-        mod = getattr(item, "module", None)
-        name = mod.__name__.rsplit(".", 1)[-1] if mod else ""
-        if name not in _CORE_MODULES:
+        if _outside_core(item):
             item.add_marker(skip)
+
+
+def pytest_report_collectionfinish(config, start_path, items):
+    # Reported after collection rather than in pytest_report_header: the
+    # header is written before the count exists, and ``-q`` hides it.
+    if _full_battery():
+        return "full battery (SEM_FULL_TESTS=1): no test skipped by battery selection"
+    n = sum(map(_outside_core, items))
+    return (
+        f"core battery: skipping {n} of {len(items)} tests outside "
+        f"{sorted(_CORE_MODULES)}; set SEM_FULL_TESTS=1 to run them"
+    )

@@ -956,9 +956,9 @@ def test_lm_trigram_feeder_checkpoint_shape(spark):
     feeders = []
     real = CDF.localCheckpoint
 
-    def grab(self, eager=True):
+    def grab(self, *args, **kwargs):
         feeders.append(self._jdf.queryExecution().executedPlan().toString())
-        return real(self, eager)
+        return real(self, *args, **kwargs)
 
     CDF.localCheckpoint = grab
     try:

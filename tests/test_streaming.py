@@ -1,6 +1,8 @@
 """Structured Streaming surface: batch/stream parity and cross-batch
 state (semantic_cpp_spark.streaming.ops)."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -941,3 +943,137 @@ def test_dsir_scoring_runs_on_structured_streaming(spark, tmp_path):
         ).collect())
     )
     assert got == want
+
+
+# -- fork-free local filesystem (session.get_spark) ---------------------------
+# Checkpoints, offsets and state stores are written through Hadoop's local
+# filesystem. The session binds NioLocalFileSystem/NioLocalFs, which must
+# behave exactly like stock Hadoop; a session that silently falls back to
+# stock Hadoop still works but forks per file, so that must fail here too.
+
+
+def _raw_local_fs(spark, cls):
+    jvm = spark.sparkContext._jvm
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    fs = jvm.org.apache.hadoop.util.ReflectionUtils.newInstance(jvm.java.lang.Class.forName(cls), conf)
+    fs.initialize(jvm.java.net.URI("file:///"), conf)
+    return fs
+
+
+def _both_raw_fs(spark):
+    return {
+        "stock": _raw_local_fs(spark, "org.apache.hadoop.fs.RawLocalFileSystem"),
+        "nio": _raw_local_fs(spark, "org.semanticcpp.fs.NioLocalFileSystem$Raw"),
+    }
+
+
+def test_session_binds_fork_free_local_fs(spark):
+    from semantic_cpp_spark import session
+
+    jvm = spark.sparkContext._jvm
+    uri = jvm.java.net.URI("file:///")
+    # streaming checkpoints resolve through the session state's hadoop conf
+    for conf in (
+        spark.sparkContext._jsc.hadoopConfiguration(),
+        spark._jsparkSession.sessionState().newHadoopConf(),
+    ):
+        fs = jvm.org.apache.hadoop.fs.FileSystem.get(uri, conf)
+        assert fs.getClass().getName() == session.NIO_FS
+        assert fs.getRawFileSystem().getClass().getName() == session.NIO_FS + "$Raw"
+        fc = jvm.org.apache.hadoop.fs.FileContext.getFileContext(uri, conf)
+        assert fc.getDefaultFileSystem().getClass().getName() == session.NIO_AFS
+
+
+def test_local_fs_conf_binds_only_when_safe():
+    import subprocess
+
+    from semantic_cpp_spark.session import NIO_AFS, NIO_FS, local_fs_conf
+
+    def never():
+        raise AssertionError("jar built although the shim cannot apply")
+
+    for master in ("yarn", "spark://h:7077", "local-cluster[2,1,1024]", "k8s://h"):
+        assert local_fs_conf(master, False, never) == ({}, "non-local master")
+    assert local_fs_conf("local[4]", True, never) == ({}, "existing JVM")
+    assert local_fs_conf("local[4]", False, lambda: None) == ({}, "javac unavailable")
+
+    def broken():
+        raise subprocess.CalledProcessError(1, "javac", stderr="error: boom")
+
+    assert local_fs_conf("local[4]", False, broken) == ({}, "jar build failed")
+    for master in ("local", "local[4]", "local[*]", "local[4,2]"):
+        conf, why = local_fs_conf(master, False, lambda: "/jars/nio.jar")
+        assert why == "active"
+        assert conf == {
+            "spark.driver.extraClassPath": "/jars/nio.jar",
+            "spark.hadoop.fs.file.impl": NIO_FS,
+            "spark.hadoop.fs.AbstractFileSystem.file.impl": NIO_AFS,
+        }
+
+
+def test_nio_fs_jar_is_cached_outside_repo_and_tmpdir(spark):
+    import tempfile
+
+    from semantic_cpp_spark.session import nio_fs_jar
+
+    jar = nio_fs_jar()
+    assert jar is not None and os.path.isfile(jar)
+    assert nio_fs_jar() == jar
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    for root in (repo, tempfile.gettempdir()):
+        assert not os.path.realpath(jar).startswith(os.path.realpath(root) + os.sep)
+    assert jar in spark.sparkContext.getConf().get("spark.driver.extraClassPath")
+
+
+def test_get_spark_logs_one_local_fs_line(spark, caplog):
+    import logging
+
+    from semantic_cpp_spark.session import NIO_FS, get_spark
+
+    with caplog.at_level(logging.INFO, logger="semantic_cpp_spark.session"):
+        assert get_spark("tests", master="local[4]", shuffle_partitions=4) is spark
+    lines = [r.getMessage() for r in caplog.records if "local filesystem" in r.getMessage()]
+    assert lines == [f"get_spark: local filesystem {NIO_FS} (existing JVM)"]
+
+
+@pytest.mark.parametrize("mode", [0o644, 0o755, 0o600, 0o777, 0o1777])
+def test_nio_set_permission_matches_stock_hadoop(spark, tmp_path, mode):
+    jvm = spark.sparkContext._jvm
+    perm = jvm.org.apache.hadoop.fs.permission.FsPermission(f"{mode:o}")
+    assert perm.toShort() == mode
+    modes = {}
+    for name, fs in _both_raw_fs(spark).items():
+        f, d = tmp_path / f"{name}.txt", tmp_path / f"{name}_dir"
+        f.write_text("x")
+        d.mkdir()
+        for target in (f, d):
+            fs.setPermission(jvm.org.apache.hadoop.fs.Path(str(target)), perm)
+        modes[name] = [os.stat(f).st_mode, os.stat(d).st_mode]
+        for target in (f, d):
+            os.chmod(target, 0o755)
+    assert modes["nio"] == modes["stock"]
+
+
+def test_nio_file_link_status_matches_stock_hadoop(spark, tmp_path):
+    from py4j.protocol import Py4JJavaError
+
+    jvm = spark.sparkContext._jvm
+    (tmp_path / "file.txt").write_text("hello")
+    (tmp_path / "dir").mkdir()
+    os.symlink(tmp_path / "file.txt", tmp_path / "link")
+    os.symlink(tmp_path / "dir", tmp_path / "dirlink")
+
+    def status(fs, p):
+        st = fs.getFileLinkStatus(jvm.org.apache.hadoop.fs.Path(p))
+        link = str(st.getSymlink().toString()) if st.isSymlink() else None
+        return st.isFile(), st.isDirectory(), st.isSymlink(), st.getLen(), link
+
+    fss = _both_raw_fs(spark)
+    for name in ("file.txt", "dir", "link", "dirlink"):
+        for p in (str(tmp_path / name), (tmp_path / name).as_uri()):
+            assert status(fss["nio"], p) == status(fss["stock"], p), p
+    for p in (str(tmp_path / "missing"), (tmp_path / "missing").as_uri()):
+        for fs in fss.values():
+            with pytest.raises(Py4JJavaError) as ex:
+                status(fs, p)
+            assert ex.value.java_exception.getClass().getName() == "java.io.FileNotFoundException"
