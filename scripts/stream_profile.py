@@ -7,7 +7,9 @@ split into query construction, start→first-progress, processAllAvailable,
 and stop, plus the per-micro-batch durationMs breakdown Spark itself
 reports (addBatch / getBatch / latestOffset / queryPlanning /
 triggerExecution / walCommit / commitOffsets) and the state-operator
-commit times.
+commit times, and the CPU seconds the gate cost in each process: this
+driver, the JVM, and the JVM's Python worker daemon and workers (read
+from /proc, so reaped workers count through the daemon).
 
 Usage: python scripts/stream_profile.py <sf_dir> [gate ...]
        SPARK_GRAFT_STREAM_CONF='k=v,k=v' to A/B session confs.
@@ -28,6 +30,37 @@ GATES = [
     "stream_running_stats",
     "stream_distinct_keys",
 ]
+
+
+def cpu_ticks(root: int) -> dict[str, int]:
+    """CPU clock ticks (user + system, including reaped children) used so
+    far by ``root`` (``driver``), the JVM it launched (``jvm``) and the
+    Python processes under that JVM (``python_workers``)."""
+    parent, comm, ticks = {}, {}, {}
+    for d in filter(str.isdigit, os.listdir("/proc")):
+        try:
+            with open(f"/proc/{d}/stat") as f:
+                stat = f.read()
+        except OSError:
+            continue
+        rest = stat[stat.rfind(")") + 2:].split()
+        parent[int(d)] = int(rest[1])
+        comm[int(d)] = stat[stat.find("(") + 1:stat.rfind(")")]
+        ticks[int(d)] = sum(int(x) for x in rest[11:15])
+    out = {"driver": 0, "jvm": 0, "python_workers": 0}
+    for pid, t in ticks.items():
+        depth, p = 0, pid
+        while p and p != root:
+            depth, p = depth + 1, parent.get(p, 0)
+        if p != root:
+            continue
+        if depth == 0:
+            out["driver"] += t
+        elif depth > 1 and comm[pid].startswith("python"):
+            out["python_workers"] += t
+        else:
+            out["jvm"] += t
+    return out
 
 
 def main() -> None:
@@ -106,13 +139,16 @@ def main() -> None:
 
     real = ops.run_to_memory
     ops.run_to_memory = profiled_run
+    hz = os.sysconf("SC_CLK_TCK")
     try:
         for g in gates:
+            cpu0 = cpu_ticks(os.getpid())
             t0 = time.time()
             df = qs[g](spark, sf_dir)
             t_build = time.time()
             n = df.count()
             t_collect = time.time()
+            cpu1 = cpu_ticks(os.getpid())
             info = getattr(profiled_run, "last", {})
             print(
                 json.dumps(
@@ -122,6 +158,7 @@ def main() -> None:
                         "construct_and_run_s": round(t_build - t0, 3),
                         "result_count_s": round(t_collect - t_build, 3),
                         "rows": n,
+                        "cpu_s": {k: round((cpu1[k] - cpu0[k]) / hz, 2) for k in cpu1},
                         **info,
                     }
                 ),

@@ -747,63 +747,67 @@ from semantic_cpp_spark import registry_events  # noqa: E402,F401
 #     by the mm/passage consolidations, corrected arithmetic in the
 #     r15 block above.]
 _PRIORITY: list[str] = [
-    # -- (c) the 45 r11-vintage due queries (recount r16:
-    #    `python scripts/rotation_recount.py 16`) --
-    "dedup_incremental_batch",
-    "dedup_minhash_containment",
-    "dedup_minhash_lsh",
-    "emb_dim_stats",
-    "emb_jl_project",
-    "emb_pca_project",
-    "emb_whiten_norms",
+    # -- (c) the 43 r12-vintage due queries (recount r17:
+    #    `python scripts/rotation_recount.py 17 --emit-priority`) --
+    "agg_salted_hot_key",
+    "asof_next_purchase_after_signup",
+    "dedup_cc_clusters",
+    "dedup_cluster_stats",
+    "emb_cluster_cohesion",
+    "emb_ivf_balance",
+    "emb_kmeans_step",
+    "evt_inter_event_gaps",
+    "evt_sliding_uniques",
+    "evt_top_paths",
+    "graph_kcore_membership",
+    "ir_hybrid_rrf",
+    "pipe_dedup_funnel",
+    "rel_basket_lift",
+    "rel_brand_return_rate",
+    "rel_customers_without_urgent_orders",
+    "rel_q10_returned_items",
+    "rel_q17_small_qty_revenue",
+    "rel_q18_large_orders",
+    "rel_q19_bracketed_discounts",
+    "rel_q22_idle_balance",
+    "rel_q4_semi_join",
+    "rel_q7_nation_volume",
+    "rel_q8_market_share",
+    "rel_scd2_customer_history",
+    "samp_negative_pairs",
+    "samp_train_val_split",
+    "sim_dim_truncation_recall",
+    "sim_lsh_recall_at_5",
+    "stream_count_windows",
+    "stream_distinct_keys",
+    "stream_running_stats",
+    "stream_session_5m",
+    "stream_slide_2h_30m",
+    "stream_sliding_uniques",
+    "stream_sliding_uniques_bounded",
+    "stream_sliding_uniques_hll",
+    "stream_stream_join",
+    "stream_topk_per_user",
+    "stream_tumble_hour",
+    "txt_bpe_merges",
+    "txt_bpe_merges_eow",
+    "txt_bpe_segment_kernel",
+    # -- (a) r17 re-entries: the consumers of the bucket-histogram
+    #    percentile path (stats.percentiles_exact_sorted), which replaced
+    #    exact percentiles after their last driver rows, oldest row first.
+    #    pipe_clean_corpus reaches that path only through
+    #    curation.quality_above_median, re-verified here by
+    #    txt_quality_above_median; it keeps its r16 row. The r17 numpy
+    #    rewrite of the per-key stream folds is bit-identical to the
+    #    pandas folds (tests/test_streaming.py); stream_running_stats
+    #    and stream_count_windows re-verify it from the due cohort. --
+    "agg_quantiles",
+    "txt_lm_perplexity_bands",
     "evt_conversion_latency",
-    "evt_debounce",
-    "evt_decayed_activity",
-    "evt_last_touch_attribution",
-    "evt_mad_outliers",
-    "evt_max_concurrency",
     "evt_rfm_segments",
-    "evt_user_trend",
-    "graph_triangle_counts",
-    "mm_compressed_text",
-    "mm_feature_extract",
-    "mm_gif_features",
-    "mm_pgm_features",
-    "mm_png_features",
-    "mm_resize_features",
-    "pipe_clean_corpus",
     "rel_equidepth_histogram",
-    "rel_grouping_sets",
-    "rel_order_gaps_lead_lag",
-    "samp_weighted_topk",
-    "sim_ann_router_banded",
-    "sim_ann_router_bucket",
-    "sim_cosine_topk",
-    "sim_ivf_multiprobe",
-    "sim_lsh_banded_topk",
-    "sim_lsh_multiprobe_topk",
-    "stream_last_touch",
-    "txt_bigram_cross_entropy",
-    "txt_boilerplate_removal",
-    "txt_chunk_overlap",
-    "txt_line_dedup",
-    "txt_pmi_bigrams",
     "txt_quality_above_median",
     "txt_quality_bands",
-    "txt_source_report",
-    "txt_zipf_fit",
-    "udaf_per_order_weighted_avg",
-    "udaf_weighted_avg",
-    # -- (a) r16 changed-code re-entries: ngram_novelty (window
-    #    first-occurrence rewrite), sem_sort_stable + txt_vocab_ids
-    #    (deterministic quantile-bounds ordinal path),
-    #    sim_ivfpq_family_topk (shared residual index build),
-    #    graph_pagerank_top10 (checkpoint cadence) --
-    "txt_ngram_novelty",
-    "sem_sort_stable",
-    "txt_vocab_ids",
-    "sim_ivfpq_family_topk",
-    "graph_pagerank_top10",
     # -- WINDOW CUT at position 50. Rotating? Recount first:
     #    `python scripts/rotation_recount.py <next_round>`. --
 ]

@@ -15,8 +15,16 @@ atomicity, symlink handling). It compiles them once with the ``javac``
 next to the JVM Spark runs on and caches the jar per source hash and
 pyspark version. The swap is active only when it is safe and possible:
 a ``local[…]`` master (driver JVM = executor JVM), a call that launches
-the JVM (the jar must be on its classpath), and a JDK compiler. Every
-call logs the filesystem in use and why at INFO.
+the JVM (the jar must be on its classpath), and a JDK compiler.
+
+Python worker daemon. Under the same two conditions (a ``local[…]``
+master, whose workers import this checkout, and a JVM launched by the
+call) ``get_spark`` runs Python workers under ``pyworker``: the stock
+``pyspark.daemon`` minus a per-task re-read of ``pyspark.zip``'s
+directory (see that module). The engine's parent directory goes on the
+workers' ``PYTHONPATH`` so the daemon does not depend on the JVM's
+working directory. Every call logs the filesystem and the daemon in use,
+and why, in one INFO line.
 """
 
 from __future__ import annotations
@@ -69,6 +77,11 @@ NIO_AFS = "org.semanticcpp.fs.NioLocalFs"
 STOCK_FS = "org.apache.hadoop.fs.LocalFileSystem"
 _FS_KEY = "spark.hadoop.fs.file.impl"
 _CP_KEY = "spark.driver.extraClassPath"
+PY_DAEMON = "semantic_cpp_spark.pyworker"
+STOCK_DAEMON = "pyspark.daemon"
+_DAEMON_KEY = "spark.python.daemon.module"
+_PYPATH_KEY = "spark.executorEnv.PYTHONPATH"
+_ENGINE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _javac() -> str | None:
@@ -131,6 +144,16 @@ def nio_fs_jar() -> str | None:
     return jar
 
 
+def _unbindable(master: str, jvm_running: bool) -> str | None:
+    """Why this call cannot bind engine code into the JVM it runs on
+    (``non-local master`` or ``existing JVM``); None when it can."""
+    if not (master == "local" or master.startswith("local[")):
+        return "non-local master"
+    if jvm_running:
+        return "existing JVM"
+    return None
+
+
 def local_fs_conf(
     master: str, jvm_running: bool, jar: Callable[[], str | None]
 ) -> tuple[dict[str, str], str]:
@@ -138,10 +161,9 @@ def local_fs_conf(
     reason it is or is not bound: ``active``, ``non-local master``,
     ``existing JVM``, ``javac unavailable`` or ``jar build failed``.
     ``jar`` is only called when the first two checks pass."""
-    if not (master == "local" or master.startswith("local[")):
-        return {}, "non-local master"
-    if jvm_running:
-        return {}, "existing JVM"
+    why = _unbindable(master, jvm_running)
+    if why:
+        return {}, why
     try:
         path = jar()
     except (OSError, subprocess.SubprocessError) as ex:
@@ -157,6 +179,14 @@ def local_fs_conf(
     }, "active"
 
 
+def python_daemon_conf(master: str, jvm_running: bool) -> dict[str, str]:
+    """Session conf that runs Python workers under ``pyworker``, behind
+    the same gate as ``local_fs_conf``."""
+    if _unbindable(master, jvm_running):
+        return {}
+    return {_DAEMON_KEY: PY_DAEMON, _PYPATH_KEY: _ENGINE_ROOT}
+
+
 def get_spark(
     app_name: str = "semantic_cpp_spark",
     master: str | None = None,
@@ -170,8 +200,9 @@ def get_spark(
     - shuffle.partitions ~= cores locally; on a cluster leave to AQE.
     - Arrow on for pandas_udf kernels (FFT, gradient, multimodal).
     - UTC session timezone so timestamps hash-match the DuckDB oracle.
-    - Fork-free local filesystem when this call launches a local[…] JVM
-      (see the module docstring); logged at INFO either way.
+    - Fork-free local filesystem and the ``pyworker`` Python daemon when
+      this call launches a local[…] JVM (see the module docstring);
+      logged at INFO either way.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
     master = master or os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
@@ -209,18 +240,21 @@ def get_spark(
         SparkContext._gateway is not None or "PYSPARK_GATEWAY_PORT" in os.environ
     )
     conf, fs_reason = local_fs_conf(master, jvm_running, nio_fs_jar)
+    conf.update(python_daemon_conf(master, jvm_running))
     for k, v in (extra_conf or {}).items():
-        if k == _CP_KEY and k in conf:
+        if k in (_CP_KEY, _PYPATH_KEY) and k in conf:
             v = os.pathsep.join([conf[k], v])
         conf[k] = v
     for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    bound = spark.sparkContext.getConf()
     _LOG.info(
-        "get_spark: local filesystem %s (%s)",
-        spark.sparkContext.getConf().get(_FS_KEY, STOCK_FS),
+        "get_spark: local filesystem %s (%s), python worker daemon %s",
+        bound.get(_FS_KEY, STOCK_FS),
         fs_reason,
+        bound.get(_DAEMON_KEY, STOCK_DAEMON),
     )
     # ADVICE r15: builder confs only take effect when THIS call launches
     # the JVM; getOrCreate against a pre-existing session silently keeps

@@ -31,6 +31,7 @@ from __future__ import annotations
 import uuid
 from typing import Any, Iterator, Tuple
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -218,6 +219,28 @@ def purchases_after_signup(events: DataFrame, window_s: int = 3600) -> DataFrame
 
 # -- custom stateful operators ---------------------------------------------
 
+
+def _sorted_columns(
+    pdfs: Iterator[pd.DataFrame], keys: Tuple[str, ...], cols: Tuple[str, ...]
+) -> list:
+    """One key's rows, from all its chunks, as a Python list per column of
+    ``cols``, ordered by ``keys`` (first key most significant, stable).
+
+    The per-key folds below run once per key and micro-batch, so they
+    avoid pandas: ``pd.concat`` + ``sort_values`` + iterating a Series
+    cost several times the numpy route per call. The rows come out in
+    the order ``sort_values(list(keys))`` gives for distinct keys, as
+    the same Python scalars, so every float fold adds in the same
+    order."""
+    chunks = list(pdfs)
+    arr = {
+        c: np.concatenate([p[c].to_numpy() for p in chunks])
+        for c in dict.fromkeys(keys + cols)
+    }
+    order = np.lexsort([arr[k] for k in reversed(keys)])
+    return [arr[c][order].tolist() for c in cols]
+
+
 _STATS_OUT = T.StructType(
     [
         T.StructField("user_id", T.LongType()),
@@ -251,8 +274,8 @@ def _stats_update(
         n, s1, s2 = state.get
     else:
         n, s1, s2 = 0, 0.0, 0.0
-    rows = pd.concat(list(pdfs))
-    for v in rows.sort_values("event_id")["value"]:
+    (vals,) = _sorted_columns(pdfs, ("event_id",), ("value",))
+    for v in vals:
         n += 1
         s1 += v
         s2 += v * v
@@ -392,8 +415,8 @@ def _make_count_window_update(size: int):
         else:
             seen, buf_sum, buf_n = 0, 0.0, 0
         out = []
-        rows = pd.concat(list(pdfs)).sort_values("event_id")
-        for v in rows["value"]:
+        (vals,) = _sorted_columns(pdfs, ("event_id",), ("value",))
+        for v in vals:
             buf_sum += v
             buf_n += 1
             if buf_n == size:
@@ -509,8 +532,9 @@ def _make_funnel_update(steps: Tuple[str, str, str]):
             t1, t2, t3 = state.get
         else:
             t1 = t2 = t3 = -1
-        rows = pd.concat(list(pdfs)).sort_values(["tus", "event_id"])
-        for et, t in zip(rows["event_type"], rows["tus"]):
+        for et, t in zip(
+            *_sorted_columns(pdfs, ("tus", "event_id"), ("event_type", "tus"))
+        ):
             t = int(t)
             if et == s1 and t1 < 0:
                 t1 = t
@@ -590,10 +614,11 @@ def _make_attr_update(
         semantics. Same time-ordered-stream assumption as the funnel
         kernel; out-of-order arrival would need watermark buffering."""
         lt = state.get[0] if state.exists else -1
-        rows = pd.concat(list(pdfs)).sort_values(["tus", "event_id"])
         out = []
         uid = key[0]
-        for eid, et, t in zip(rows["event_id"], rows["event_type"], rows["tus"]):
+        for eid, et, t in zip(*_sorted_columns(
+            pdfs, ("tus", "event_id"), ("event_id", "event_type", "tus")
+        )):
             t = int(t)
             if et == conversion:
                 if lt >= 0 and t - lt // 8 <= lookback_us:

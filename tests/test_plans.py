@@ -252,16 +252,22 @@ def test_incremental_dedup_corpus_join_not_hinted(spark, qs):
 
 
 def test_conversion_latency_no_global_percentile_reducer(spark, qs):
-    """evt_conversion_latency routes p50/p90 through the distributed
-    sort + rank-selection path: no `percentile(` aggregate (the
-    single-reducer shape), and the ordinal sort must be DISTRIBUTED —
-    either the r15 range exchange or the r16 quantile-bounds bucket
-    exchange (hash on the __sem_pid bucket), never a global
-    single-partition window."""
+    """evt_conversion_latency routes p50/p90 through the bucket-histogram
+    rank selection (stats.percentiles_exact_sorted): no `percentile(`
+    aggregate (the single-reducer shape), and the rank window is
+    DISTRIBUTED — partitioned by the value bucket over a hash exchange on
+    that same bucket, never a global single-partition window."""
+    import re
+
     plan = _plan(qs["evt_conversion_latency"](spark, SF))
-    low = plan.lower()
-    assert "rangepartitioning" in low or "__sem_pid" in low
     assert "percentile(" not in plan
+    windows = re.findall(
+        r"Window \[.*\], \[(.*)\], \[.*\n.*Sort .*\n.*Exchange (\w+)(?:\((\w+)#)?", plan
+    )
+    assert windows, plan[:3000]
+    for keys, exchange, on in windows:
+        assert keys and exchange == "hashpartitioning", plan[:3000]
+        assert keys.split("#")[0] == on
 
 
 def test_chunk_overlap_zero_exchange(spark, qs):

@@ -14,82 +14,79 @@ import pytest
 
 from semantic_cpp_spark import registry
 
-# Queries that re-enter in round 16 on a behavioral/plan change —
+# Queries that re-enter in round 17 on a behavioral/plan change —
 # each must sit inside this round's 50-slot driver window for a fresh
-# row (rule (a) of the standing rotation policy):
-TOUCHED_IN_R16 = [
-    # window-form first-occurrence rewrite (VERDICT r15 #1)
-    "txt_ngram_novelty",
-    # deterministic quantile-bounds ordinal path (indexing.py r16)
-    "sem_sort_stable",
-    "txt_vocab_ids",
-    # shared residual index build in the family gate
-    "sim_ivfpq_family_topk",
-    # checkpoint-cadence parameter (default decided by the sf1.0 A/B)
-    "graph_pagerank_top10",
-]
-
-# The 45 r11-vintage queries at the rotation deadline
-# (scripts/rotation_recount.py 16 — due rule: latest row <= N-5).
-R11_VINTAGE_DUE = [
-    "dedup_incremental_batch",
-    "dedup_minhash_containment",
-    "dedup_minhash_lsh",
-    "emb_dim_stats",
-    "emb_jl_project",
-    "emb_pca_project",
-    "emb_whiten_norms",
+# row (rule (a) of the standing rotation policy): the consumers of the
+# bucket-histogram percentile path (stats.percentiles_exact_sorted).
+TOUCHED_THIS_ROUND = [
+    "agg_quantiles",
+    "txt_lm_perplexity_bands",
     "evt_conversion_latency",
-    "evt_debounce",
-    "evt_decayed_activity",
-    "evt_last_touch_attribution",
-    "evt_mad_outliers",
-    "evt_max_concurrency",
     "evt_rfm_segments",
-    "evt_user_trend",
-    "graph_triangle_counts",
-    "mm_compressed_text",
-    "mm_feature_extract",
-    "mm_gif_features",
-    "mm_pgm_features",
-    "mm_png_features",
-    "mm_resize_features",
-    "pipe_clean_corpus",
     "rel_equidepth_histogram",
-    "rel_grouping_sets",
-    "rel_order_gaps_lead_lag",
-    "samp_weighted_topk",
-    "sim_ann_router_banded",
-    "sim_ann_router_bucket",
-    "sim_cosine_topk",
-    "sim_ivf_multiprobe",
-    "sim_lsh_banded_topk",
-    "sim_lsh_multiprobe_topk",
-    "stream_last_touch",
-    "txt_bigram_cross_entropy",
-    "txt_boilerplate_removal",
-    "txt_chunk_overlap",
-    "txt_line_dedup",
-    "txt_pmi_bigrams",
     "txt_quality_above_median",
     "txt_quality_bands",
-    "txt_source_report",
-    "txt_zipf_fit",
-    "udaf_per_order_weighted_avg",
-    "udaf_weighted_avg",
 ]
 
-# r16 window policy: 45 r11-vintage due + 5 rule-(a) changed-code
+# The 43 r12-vintage queries at the rotation deadline
+# (scripts/rotation_recount.py 17 — due rule: latest row <= N-5).
+DUE_THIS_ROUND = [
+    "agg_salted_hot_key",
+    "asof_next_purchase_after_signup",
+    "dedup_cc_clusters",
+    "dedup_cluster_stats",
+    "emb_cluster_cohesion",
+    "emb_ivf_balance",
+    "emb_kmeans_step",
+    "evt_inter_event_gaps",
+    "evt_sliding_uniques",
+    "evt_top_paths",
+    "graph_kcore_membership",
+    "ir_hybrid_rrf",
+    "pipe_dedup_funnel",
+    "rel_basket_lift",
+    "rel_brand_return_rate",
+    "rel_customers_without_urgent_orders",
+    "rel_q10_returned_items",
+    "rel_q17_small_qty_revenue",
+    "rel_q18_large_orders",
+    "rel_q19_bracketed_discounts",
+    "rel_q22_idle_balance",
+    "rel_q4_semi_join",
+    "rel_q7_nation_volume",
+    "rel_q8_market_share",
+    "rel_scd2_customer_history",
+    "samp_negative_pairs",
+    "samp_train_val_split",
+    "sim_dim_truncation_recall",
+    "sim_lsh_recall_at_5",
+    "stream_count_windows",
+    "stream_distinct_keys",
+    "stream_running_stats",
+    "stream_session_5m",
+    "stream_slide_2h_30m",
+    "stream_sliding_uniques",
+    "stream_sliding_uniques_bounded",
+    "stream_sliding_uniques_hll",
+    "stream_stream_join",
+    "stream_topk_per_user",
+    "stream_tumble_hour",
+    "txt_bpe_merges",
+    "txt_bpe_merges_eow",
+    "txt_bpe_segment_kernel",
+]
+
+# r17 window policy: 43 r12-vintage due + 7 rule-(a) changed-code
 # re-entries = exactly 50. Nothing is pushed below the cut.
 EXPECTED_SPILL = 0
 
 
-def test_r16_touched_and_due_queries_inside_50_window():
+def test_touched_and_due_queries_inside_50_window():
     window = list(registry.queries())[:50]
-    missing = [n for n in R11_VINTAGE_DUE + TOUCHED_IN_R16 if n not in window]
+    missing = [n for n in DUE_THIS_ROUND + TOUCHED_THIS_ROUND if n not in window]
     assert not missing, f"outside driver window: {missing}"
-    # the policy deadline: the 45 due queries LEAD the window
-    assert window[:45] == R11_VINTAGE_DUE
+    # the policy deadline: the due queries LEAD the window
+    assert window[:len(DUE_THIS_ROUND)] == DUE_THIS_ROUND
 
 
 def test_priority_names_all_exist():

@@ -1011,6 +1011,88 @@ def test_local_fs_conf_binds_only_when_safe():
         }
 
 
+def test_python_daemon_conf_binds_only_when_safe():
+    from semantic_cpp_spark import session
+
+    for master in ("yarn", "spark://h:7077", "local-cluster[2,1,1024]", "k8s://h"):
+        assert session.python_daemon_conf(master, False) == {}
+    assert session.python_daemon_conf("local[4]", True) == {}
+    root = os.path.dirname(os.path.dirname(os.path.abspath(session.__file__)))
+    for master in ("local", "local[4]", "local[*]", "local[4,2]"):
+        assert session.python_daemon_conf(master, False) == {
+            "spark.python.daemon.module": "semantic_cpp_spark.pyworker",
+            "spark.executorEnv.PYTHONPATH": root,
+        }
+
+
+def test_session_workers_run_engine_invalidate_caches(spark):
+    """Python workers of the tests session come from the engine's daemon,
+    so each task's ``importlib.invalidate_caches()`` runs its zip guard."""
+    import pandas as pd
+
+    from semantic_cpp_spark import pyworker
+
+    def probe(pdfs):
+        import zipimport
+
+        for _ in pdfs:
+            code = zipimport.zipimporter.invalidate_caches.__code__
+            yield pd.DataFrame({"f": [code.co_filename], "fn": [code.co_name]})
+
+    rows = set(map(tuple, spark.range(4).repartition(2).mapInPandas(
+        probe, "f string, fn string").collect()))
+    assert rows == {(os.path.abspath(pyworker.__file__), "invalidate_caches")}
+
+
+_ZIP_GUARD = r"""
+import importlib, os, sys, zipfile, zipimport
+
+archive = sys.argv[1]
+
+def write(mods):
+    tmp = archive + ".part"
+    with zipfile.ZipFile(tmp, "w") as z:
+        for name in mods:
+            z.writestr(name + ".py", f"NAME = {name!r}\n")
+    os.replace(tmp, archive)
+
+write(["zg_first"])
+sys.path.insert(0, archive)
+from semantic_cpp_spark import pyworker
+import zg_first
+pyworker.install()
+importlib.invalidate_caches()  # the daemon's one read at start-up
+
+reads = []
+real = zipimport._read_directory
+zipimport._read_directory = lambda path: reads.append(path) or real(path)
+for _ in range(3):
+    importlib.invalidate_caches()
+unchanged = reads.count(archive)
+
+write(["zg_first", "zg_added"])
+importlib.invalidate_caches()
+import zg_added
+print(unchanged, reads.count(archive), zg_added.NAME)
+"""
+
+
+def test_worker_zip_guard_reads_only_changed_archives(tmp_path):
+    """Unchanged archive: no directory read on ``invalidate_caches()``
+    however many importers and tasks. Rewritten archive: read again, so a
+    module added to it (``addPyFile``) imports."""
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", _ZIP_GUARD, str(tmp_path / "lib.zip")],
+        capture_output=True, text=True, timeout=120, check=True,
+        env={**os.environ, "PYTHONPATH": root},
+    ).stdout.split()
+    assert out == ["0", "1", "zg_added"]
+
+
 def test_nio_fs_jar_is_cached_outside_repo_and_tmpdir(spark):
     import tempfile
 
@@ -1028,12 +1110,15 @@ def test_nio_fs_jar_is_cached_outside_repo_and_tmpdir(spark):
 def test_get_spark_logs_one_local_fs_line(spark, caplog):
     import logging
 
-    from semantic_cpp_spark.session import NIO_FS, get_spark
+    from semantic_cpp_spark.session import NIO_FS, PY_DAEMON, get_spark
 
     with caplog.at_level(logging.INFO, logger="semantic_cpp_spark.session"):
         assert get_spark("tests", master="local[4]", shuffle_partitions=4) is spark
     lines = [r.getMessage() for r in caplog.records if "local filesystem" in r.getMessage()]
-    assert lines == [f"get_spark: local filesystem {NIO_FS} (existing JVM)"]
+    assert lines == [
+        f"get_spark: local filesystem {NIO_FS} (existing JVM), "
+        f"python worker daemon {PY_DAEMON}"
+    ]
 
 
 @pytest.mark.parametrize("mode", [0o644, 0o755, 0o600, 0o777, 0o1777])
@@ -1077,3 +1162,234 @@ def test_nio_file_link_status_matches_stock_hadoop(spark, tmp_path):
             with pytest.raises(Py4JJavaError) as ex:
                 status(fs, p)
             assert ex.value.java_exception.getClass().getName() == "java.io.FileNotFoundException"
+
+
+# -- per-key update folds vs the pandas route they replaced -----------------
+# The four applyInPandasWithState folds order a key's rows with numpy
+# instead of pd.concat + sort_values. The copies below are the pandas
+# bodies as they were; outputs and states must match bit for bit (floats
+# compared by bit pattern, so a changed summation order fails and NaN
+# matches NaN).
+
+
+class _State:
+    def __init__(self, value=None):
+        self.value = value
+
+    @property
+    def exists(self):
+        return self.value is not None
+
+    @property
+    def get(self):
+        return self.value
+
+    def update(self, value):
+        self.value = value
+
+
+def _pandas_stats_update(key, pdfs, state):
+    import pandas as pd
+
+    if state.exists:
+        n, s1, s2 = state.get
+    else:
+        n, s1, s2 = 0, 0.0, 0.0
+    rows = pd.concat(list(pdfs))
+    for v in rows.sort_values("event_id")["value"]:
+        n += 1
+        s1 += v
+        s2 += v * v
+    state.update((n, s1, s2))
+    yield pd.DataFrame(
+        {"user_id": [key[0]], "n": [n], "sum_value": [s1], "sum_squares": [s2]}
+    )
+
+
+def _pandas_count_window_update(size):
+    import pandas as pd
+
+    def update(key, pdfs, state):
+        if state.exists:
+            seen, buf_sum, buf_n = state.get
+        else:
+            seen, buf_sum, buf_n = 0, 0.0, 0
+        out = []
+        rows = pd.concat(list(pdfs)).sort_values("event_id")
+        for v in rows["value"]:
+            buf_sum += v
+            buf_n += 1
+            if buf_n == size:
+                out.append({"user_id": key[0], "win": seen // size,
+                            "n": buf_n, "sum_value": buf_sum})
+                seen += buf_n
+                buf_sum, buf_n = 0.0, 0
+        state.update((seen, buf_sum, buf_n))
+        yield pd.DataFrame(out, columns=["user_id", "win", "n", "sum_value"])
+
+    return update
+
+
+def _pandas_funnel_update(steps):
+    import pandas as pd
+
+    s1, s2, s3 = steps
+
+    def update(key, pdfs, state):
+        if state.exists:
+            t1, t2, t3 = state.get
+        else:
+            t1 = t2 = t3 = -1
+        rows = pd.concat(list(pdfs)).sort_values(["tus", "event_id"])
+        for et, t in zip(rows["event_type"], rows["tus"]):
+            t = int(t)
+            if et == s1 and t1 < 0:
+                t1 = t
+            elif et == s2 and t1 >= 0 and t2 < 0 and t > t1:
+                t2 = t
+            elif et == s3 and t2 >= 0 and t3 < 0 and t > t2:
+                t3 = t
+        state.update((t1, t2, t3))
+        stage = 3 if t3 >= 0 else 2 if t2 >= 0 else 1 if t1 >= 0 else 0
+        yield pd.DataFrame([{
+            "user_id": key[0],
+            "t_1": None if t1 < 0 else t1,
+            "t_2": None if t2 < 0 else t2,
+            "t_3": None if t3 < 0 else t3,
+            "stage": stage,
+        }])
+
+    return update
+
+
+def _pandas_attr_update(conversion, ranked, lookback_us):
+    import pandas as pd
+
+    rank = {ty: i for i, ty in enumerate(ranked)}
+
+    def update(key, pdfs, state):
+        lt = state.get[0] if state.exists else -1
+        rows = pd.concat(list(pdfs)).sort_values(["tus", "event_id"])
+        out = []
+        uid = key[0]
+        for eid, et, t in zip(rows["event_id"], rows["event_type"], rows["tus"]):
+            t = int(t)
+            if et == conversion:
+                if lt >= 0 and t - lt // 8 <= lookback_us:
+                    out.append((int(eid), uid, t, lt // 8, ranked[lt % 8], t - lt // 8))
+                else:
+                    out.append((int(eid), uid, t, None, None, None))
+            r = rank.get(et)
+            if r is not None:
+                enc = t * 8 + r
+                if enc > lt:
+                    lt = enc
+        state.update((lt,))
+        yield pd.DataFrame(out, columns=[
+            "event_id", "user_id", "t_conv", "t_touch", "touch_type", "latency_us",
+        ])
+
+    return update
+
+
+def _bits(x):
+    if isinstance(x, float):
+        return x.hex()
+    if isinstance(x, tuple):
+        return tuple(map(_bits, x))
+    return x
+
+
+def _fold(fn, chunks, state):
+    import pandas as pd
+
+    st = _State(state)
+    (out,) = fn((7,), iter([c.copy() for c in chunks]), st)
+    assert isinstance(out, pd.DataFrame)
+    rows = [_bits(r) for r in out.itertuples(index=False, name=None)]
+    return list(out.columns), list(map(str, out.dtypes)), rows, _bits(st.value)
+
+
+def _chunks(columns, rows, cuts):
+    """``rows`` split at ``cuts`` into frames of ``columns`` (the arrival
+    order of one key's rows inside a micro-batch)."""
+    import pandas as pd
+
+    bounds = [0, *cuts, len(rows)]
+    return [
+        pd.DataFrame(rows[a:b], columns=columns).astype(
+            {"user_id": "int64", "event_id": "int64"}
+        )
+        for a, b in zip(bounds, bounds[1:])
+    ]
+
+
+def _value_chunks(null_at=None):
+    # Summing in arrival order and in event_id order gives different
+    # floats, so a fold in the wrong order cannot pass.
+    vals = [1e16, 0.1, -1e16, 0.7, 0.2, 1e-3, 3.3, -0.1, 2.5, 1e15, 0.3]
+    ids = [9, 2, 5, 0, 10, 7, 1, 4, 8, 3, 6]
+    if null_at is not None:
+        vals[null_at] = float("nan")
+    rows = [(7, i, v) for i, v in zip(ids, vals)]
+    return _chunks(["user_id", "event_id", "value"], rows, [3, 4, 8])
+
+
+def test_fold_fixture_is_order_sensitive():
+    import math
+
+    vals = [v for c in _value_chunks() for v in c["value"]]
+    by_id = [v for _, v in sorted(
+        zip([i for c in _value_chunks() for i in c["event_id"]], vals))]
+    assert math.fsum(vals) == math.fsum(by_id)
+    assert sum(vals) != sum(by_id)
+
+
+@pytest.mark.parametrize("state", [None, (2, 0.1, 0.01)])
+@pytest.mark.parametrize("null_at", [None, 6])
+def test_stats_update_matches_pandas_fold(state, null_at):
+    chunks = _value_chunks(null_at)
+    assert _fold(ops._stats_update, chunks, state) == _fold(
+        _pandas_stats_update, chunks, state)
+
+
+@pytest.mark.parametrize("state", [None, (20, 0.1, 2)])
+@pytest.mark.parametrize("null_at", [None, 6])
+def test_count_window_update_matches_pandas_fold(state, null_at):
+    chunks = _value_chunks(null_at)
+    got = _fold(ops._make_count_window_update(3), chunks, state)
+    assert got == _fold(_pandas_count_window_update(3), chunks, state)
+    assert len(got[2]) >= 3
+
+
+_M = 1_000_000
+# (user_id, event_id, event_type, tus): tied tus at 40 and 60 s, where
+# event_id decides the order; event_id order unlike tus order; a null
+# event_type; arrival out of order.
+_FLOW_ROWS = [
+    (7, 6, "purchase", 60 * _M), (7, 11, "signup", 40 * _M),
+    (7, 13, "view", 40 * _M), (7, 5, None, 50 * _M),
+    (7, 12, "click", 40 * _M), (7, 14, "purchase", 40 * _M),
+    (7, 8, "view", 60 * _M), (7, 7, "click", 60 * _M),
+    (7, 9, "purchase", 70 * _M), (7, 20, "view", 30 * _M),
+]
+
+
+@pytest.mark.parametrize("state", [None, (20 * _M, -1, -1)])
+def test_funnel_update_matches_pandas_fold(state):
+    steps = ("signup", "view", "purchase")
+    chunks = _chunks(["user_id", "event_id", "event_type", "tus"], _FLOW_ROWS, [4, 7])
+    got = _fold(ops._make_funnel_update(steps), chunks, state)
+    assert got == _fold(_pandas_funnel_update(steps), chunks, state)
+
+
+@pytest.mark.parametrize("state", [None, (10 * _M * 8 + 2,)])
+def test_attr_update_matches_pandas_fold(state):
+    args = ("purchase", ("click", "signup", "view"), 25 * _M)
+    chunks = _chunks(["user_id", "event_id", "event_type", "tus"], _FLOW_ROWS, [2, 3, 8])
+    got = _fold(ops._make_attr_update(*args), chunks, state)
+    assert got == _fold(_pandas_attr_update(*args), chunks, state)
+    # ties: purchase 14 sorts after the touches at 40 s and is credited to
+    # one of them; purchase 6 sorts before the touches at 60 s, so it is not
+    touch_s = {r[0]: r[3] // _M for r in got[2]}
+    assert touch_s == {14: 40, 6: 40, 9: 60}
