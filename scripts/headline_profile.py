@@ -1,0 +1,105 @@
+"""Per-query build and exec CPU of the headline queries in a warm session.
+
+A query's cost splits into its build phase (the registry function: table
+loads with their schema inference, and eager probe jobs such as counts,
+min/max aggregates and sketches) and its exec phase (the main job, here a
+noop write, as the benchmark runs it). At sf0.1 the build phase's fixed
+per-query jobs can cost as much as the main job, which one number per
+query hides. This script runs the queries in one session, warms it for
+``--warm`` passes, then for ``--passes`` passes measures per query and
+phase the CPU seconds of the driver, the JVM and its Python workers (read
+from /proc with ``perfbench.workloads.cpu_snapshot``, JIT compiler
+threads left out, as the benchmark's ``query_cpu_s``) and the Spark jobs
+the phase started. Every query starts with the engine's memos flushed
+(``release_ordinal_caches``), as in the benchmark's timed passes.
+
+Usage: python scripts/headline_profile.py <sf_dir> [query ...] [--warm N] [--passes N]
+
+Prints one row per query with the median CPU per phase, then one JSON
+object with the same figures as its last line.
+"""
+
+from __future__ import annotations
+
+import argparse
+import json
+import os
+import statistics
+import sys
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+
+from perfbench.workloads import HEADLINE_QUERIES, cpu_delta_s, cpu_snapshot  # noqa: E402
+
+
+def _phase(spark, group, fn):
+    """(fn(), CPU seconds it took) with its Spark jobs tagged ``group``."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        a = cpu_snapshot(os.getpid())
+        out = fn()
+        b = cpu_snapshot(os.getpid())
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, cpu_delta_s(a, b)[0]
+
+
+def main() -> None:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("sf_dir")
+    ap.add_argument("queries", nargs="*", default=HEADLINE_QUERIES)
+    ap.add_argument("--warm", type=int, default=2)
+    ap.add_argument("--passes", type=int, default=3)
+    args = ap.parse_args()
+
+    from semantic_cpp_spark import registry
+    from semantic_cpp_spark.indexing import release_ordinal_caches
+    from semantic_cpp_spark.session import get_spark
+
+    spark = get_spark("headline_profile")
+    spark.sparkContext.setLogLevel("ERROR")
+    qs = registry.queries()
+    cpu = {q: {"build": [], "exec": []} for q in args.queries}
+    last = args.warm + args.passes - 1
+    try:
+        for p in range(args.warm + args.passes):
+            for q in args.queries:
+                release_ordinal_caches()
+                df, build = _phase(spark, f"{q}:{p}:build", lambda: qs[q](spark, args.sf_dir))
+                _, run = _phase(
+                    spark, f"{q}:{p}:exec",
+                    lambda: df.write.format("noop").mode("overwrite").save(),
+                )
+                if p >= args.warm:
+                    cpu[q]["build"].append(build)
+                    cpu[q]["exec"].append(run)
+        sc = spark.sparkContext
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        tracker = sc.statusTracker()
+        out = {}
+        for q in args.queries:
+            out[q] = {
+                "build_cpu_s": round(statistics.median(cpu[q]["build"]), 3),
+                "build_jobs": len(tracker.getJobIdsForGroup(f"{q}:{last}:build")),
+                "exec_cpu_s": round(statistics.median(cpu[q]["exec"]), 3),
+                "exec_jobs": len(tracker.getJobIdsForGroup(f"{q}:{last}:exec")),
+            }
+    finally:
+        spark.stop()
+
+    print(f"{'query':<26}{'build_cpu_s':>12}{'jobs':>6}{'exec_cpu_s':>12}{'jobs':>6}")
+    for q, r in out.items():
+        print(f"{q:<26}{r['build_cpu_s']:>12.3f}{r['build_jobs']:>6}"
+              f"{r['exec_cpu_s']:>12.3f}{r['exec_jobs']:>6}")
+    tot = {k: round(sum(r[k] for r in out.values()), 3)
+           for k in ("build_cpu_s", "build_jobs", "exec_cpu_s", "exec_jobs")}
+    print(f"{'total':<26}{tot['build_cpu_s']:>12.3f}{tot['build_jobs']:>6}"
+          f"{tot['exec_cpu_s']:>12.3f}{tot['exec_jobs']:>6}")
+    print(json.dumps({"sf_dir": args.sf_dir, "warm": args.warm, "passes": args.passes,
+                      "queries": out, "total": tot}))
+
+
+if __name__ == "__main__":
+    main()

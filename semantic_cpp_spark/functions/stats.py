@@ -7,11 +7,22 @@ builtins are population estimators) we compose the reference formula from
 sum/avg/stddev_pop primitives — still fully JVM-side partial+final
 aggregation, one shuffle, no UDFs.
 
-All builders return Column aggregate expressions usable in ``df.agg`` /
-``groupBy().agg``.
+The builders return Column aggregate expressions usable in ``df.agg`` /
+``groupBy().agg``. The exception is ``percentiles_exact_sorted``, exact
+percentiles over a column that scales with the data: it runs a few small
+eager jobs (a count/min/max aggregate, then histogram-narrowing rounds
+that locate each needed rank in an ever smaller value range) and returns
+a 1-row DataFrame whose lazy final job ranks only the rows left in those
+ranges. ``F.percentile`` would instead merge every distinct value on one
+reducer.
 """
 
 from __future__ import annotations
+
+import functools
+import logging
+import math
+import operator
 
 from pyspark.sql import Column, Window
 from pyspark.sql import functions as F
@@ -108,161 +119,258 @@ def mode_deterministic(col: Column, idx: Column) -> Column:
     raise NotImplementedError("use operators.collectors.mode_df (groupBy pipeline)")
 
 
-def percentile_approx_scale(col: Column, p: float, accuracy: int = 10000) -> Column:
-    """The documented SCALE escape hatch for percentile: exact percentile
-    (the reference's contract, collector.h:2279-2335) buffers per-partition
-    value counts; at extreme cardinality a production pipeline should opt
-    into Spark's approx_percentile (t-digest-style sketch, bounded memory,
-    mergeable). Not oracle-checked — approximation is engine-specific."""
-    if not 0.0 <= p <= 100.0:
-        raise ValueError("percentile must be in [0, 100]")
-    return F.percentile_approx(col, F.lit(p / 100.0), F.lit(accuracy))
+# Exact percentiles by histogram narrowing (percentiles_exact_sorted).
+# Sub-buckets per range in one narrowing round.
+_NB = 1024
+# A range holding more than _REFINE * n / _NB rows is narrowed again;
+# smaller ones are ranked by the final window.
+_REFINE = 4
+# Narrowing rounds per call at most: a long-tailed column needs a round
+# per outlier scale, and whatever is still open after the last round is
+# ranked by the final window, exact either way.
+_MAX_ROUNDS = 4
+
+_log = logging.getLogger(__name__)
+
+
+def narrow_ranges(ranges, hist, need):
+    """Driver-side bookkeeping of one narrowing round (a pure function).
+
+    ``ranges[i]`` is ``(lo, hi, below, count)``: ``count`` rows have a
+    value in ``[lo, hi]`` and ``below`` rows a value under ``lo``.
+    ``hist`` holds one ``(i, sub_bucket, count, min, max)`` per non-empty
+    sub-bucket of range ``i``. Sub-buckets are a monotone function of the
+    value, so a sub-bucket's rows are exactly the rows in its
+    ``[min, max]`` and sub-bucket order is value order. ``need`` holds
+    the global ranks (0-based, ascending value order) to locate.
+
+    Returns ``(resolved, open)``: ``resolved`` maps each needed rank whose
+    sub-bucket holds one value to that value; ``open`` lists, as
+    ``(lo, hi, below, count)``, the other sub-buckets holding a needed
+    rank. Returns None when some range's sub-bucket counts do not sum to
+    its count: the input changed between jobs, and offsets taken from it
+    would point at the wrong rows."""
+    parts: dict[int, list] = {}
+    for i, sb, c, mn, mx in hist:
+        parts.setdefault(i, []).append((sb, c, mn, mx))
+    resolved, open_ = {}, []
+    for i, (_, _, below, count) in enumerate(ranges):
+        subs = sorted(parts.get(i, []), key=lambda t: t[0])
+        if sum(c for _, c, _, _ in subs) != count:
+            return None
+        acc = below
+        for _, c, mn, mx in subs:
+            hit = [r for r in need if acc <= r < acc + c]
+            if hit and mn == mx:
+                resolved.update(dict.fromkeys(hit, mn))
+            elif hit:
+                open_.append((mn, mx, acc, c))
+            acc += c
+    return resolved, open_
+
+
+def _width(lo, hi) -> float:
+    """Sub-bucket width of ``[lo, hi]`` in doubles; 0 when the double
+    cast cannot tell the ends apart (long > 2^53, long decimals)."""
+    return float(hi) / _NB - float(lo) / _NB
+
+
+def _case(ranges, vtype, value):
+    """CASE over the ``[lo, hi]`` ranges of ``__v`` (true-typed bounds):
+    ``value(i, lo, hi)`` for the range holding the row, null outside."""
+    v = F.col("__v")
+    out = F  # F.when opens the CASE, Column.when extends it
+    for i, (lo, hi, _, _) in enumerate(ranges):
+        inside = (v >= F.lit(lo).cast(vtype)) & (v <= F.lit(hi).cast(vtype))
+        out = out.when(inside, value(i, lo, hi))
+    return out
+
+
+def _narrow_round(vals, ranges, vtype):
+    """One eager ``groupBy(range, sub-bucket).agg(count, min, max)`` over
+    the rows inside ``ranges``. The sub-bucket
+    ``floor(least((double(v) - lo) / w, NB - 1))`` is non-strictly
+    monotone in ``v`` for any finite ``lo`` and positive ``w`` (an
+    overflow to +inf lands in the last sub-bucket); a lossy
+    double cast merges neighbouring values into one sub-bucket and never
+    reorders them."""
+    def sub(i, lo, hi):
+        d = (F.col("__v").cast("double") - F.lit(float(lo))) / F.lit(_width(lo, hi))
+        return F.floor(F.least(d, F.lit(float(_NB - 1))))
+
+    return [
+        tuple(r)
+        for r in vals.select(
+            _case(ranges, vtype, lambda i, lo, hi: F.lit(i)).alias("__rid"),
+            _case(ranges, vtype, sub).alias("__sb"),
+            "__v",
+        )
+        .filter(F.col("__rid").isNotNull())
+        .groupBy("__rid", "__sb")
+        .agg(F.count(F.lit(1)), F.min("__v"), F.max("__v"))
+        .collect()
+    ]
+
+
+def _rank_values(frame, conds, resolved, vtype):
+    """1-row frame with a ``__r{rank}`` column per needed rank: a literal
+    for ranks resolved on the driver, else the ``__v`` of the one row of
+    ``frame`` matching ``conds[rank]``."""
+    consts = [F.lit(v).cast(vtype).alias(f"__r{r}") for r, v in resolved.items()]
+    if not conds:
+        return frame.sparkSession.range(1).select(*consts)
+    pred = functools.reduce(operator.or_, conds.values())
+    return frame.filter(pred).agg(
+        *[F.min(F.when(c, F.col("__v"))).alias(f"__r{r}") for r, c in conds.items()],
+        *consts,
+    )
+
+
+def _exact_ranks(vals, ps):
+    """``(frame, bounds, info)``: ``frame`` is 1-row with a ``__r{rank}``
+    column per global rank (0-based, ascending ``__v``) that the
+    percentiles ``ps`` read, ``bounds[i]`` is ``(lo rank, hi rank,
+    fraction)`` of ``ps[i]`` and ``info`` the decision record. ``frame``
+    is None for an empty input and when a count check failed."""
+    from semantic_cpp_spark.indexing import with_ordinal
+
+    vtype = vals.schema["__v"].dataType
+    row = vals.agg(
+        F.count(F.lit(1)).alias("n"), F.min("__v").alias("mn"), F.max("__v").alias("mx")
+    ).first()
+    n, mn, mx = row["n"], row["mn"], row["mx"]
+    info = {"n": n, "rounds": 0, "window_rows": 0, "driver_ranks": 0, "fallback": None}
+    if n == 0:
+        return None, [], info
+    bounds = []
+    for p in ps:
+        r = p * (n - 1)
+        lo = int(r // 1)
+        bounds.append((lo, -int(-r // 1), r - lo))
+    need = sorted({r for lo, hi, _ in bounds for r in (lo, hi)})
+    if not (math.isfinite(float(mn)) and math.isfinite(float(mx))):
+        # NaN or ±inf: no finite sub-bucket width. Rank every row.
+        info.update(fallback="non-finite min or max", window_rows=n)
+        ranked = with_ordinal(vals, ["__v"], name="__r", strategy="range")
+        conds = {r: F.col("__r") == F.lit(r) for r in need}
+        return _rank_values(ranked, conds, {}, vtype), bounds, info
+
+    resolved = dict.fromkeys(need, mn) if mn == mx else {}
+    open_ = [] if mn == mx else [(mn, mx, 0, n)]
+    final, tried = [], set()
+    limit = _REFINE * n / _NB
+    while open_:
+        refine = []
+        for g in open_:
+            more = info["rounds"] < _MAX_ROUNDS and g[3] > limit
+            # a range that came back whole from its own round cannot be
+            # split by the double cast: rank it instead
+            if more and g not in tried and _width(g[0], g[1]) > 0:
+                refine.append(g)
+            else:
+                final.append(g)
+        if not refine:
+            break
+        tried.update(refine)
+        step = narrow_ranges(refine, _narrow_round(vals, refine, vtype), need)
+        info["rounds"] += 1
+        if step is None:
+            return None, bounds, info
+        got, open_ = step
+        resolved.update(got)
+
+    info.update(driver_ranks=len(resolved), window_rows=sum(g[3] for g in final))
+    conds = {}
+    ranked = vals
+    if final:
+        ranked = (
+            vals.withColumn("__rid", _case(final, vtype, lambda i, lo, hi: F.lit(i)))
+            .filter(F.col("__rid").isNotNull())
+            .withColumn(
+                "__lr",
+                F.row_number().over(Window.partitionBy("__rid").orderBy("__v")) - 1,
+            )
+        )
+        for i, (_, _, below, count) in enumerate(final):
+            for r in need:
+                if below <= r < below + count:
+                    conds[r] = (F.col("__rid") == i) & (F.col("__lr") == r - below)
+    return _rank_values(ranked, conds, resolved, vtype), bounds, info
 
 
 def percentiles_exact_sorted(df, col: Column, ps: list[float], names: list[str]):
-    """Exact percentiles by BUCKET-HISTOGRAM RANK SELECTION — the scale
-    path for the exact contract. `F.percentile` is algebraically partial
-    but its final merge sorts every distinct value on ONE reducer
-    (measured: parallelizing the partial phase doesn't move the ~1.7 s
-    floor on 600k rows because the merge dominates). Here (r16, guide
-    §2.3) the column is bucketed by frozen percentile_approx boundary
-    literals (monotone in value order), ONE exact per-bucket histogram
-    locates each needed global rank's (bucket, local offset) on the
-    driver, and the final job sorts ONLY the buckets containing a
-    needed rank — the full column is never shuffled, and only the
-    ≤2·len(ps) boundary rows feed the 1-row interpolation aggregate.
-    (The r15 shape ranked EVERY row through with_ordinal's range sort;
-    it remains the fallback for degenerate boundary sets.)
+    """Exact percentiles by HISTOGRAM NARROWING — the scale path for the
+    exact contract. `F.percentile` is algebraically partial but its
+    final merge sorts every distinct value on ONE reducer (measured: a
+    ~1.7 s floor on 600k rows that parallelizing the partial phase does
+    not move).
+
+    Only the ≤2·len(ps) rows at the ranks the interpolation reads
+    matter. One eager aggregate takes ``count``, ``min`` and ``max`` of
+    the non-null values. Each narrowing round (one eager
+    ``groupBy(range, sub-bucket).agg(count, min, max)``) splits every
+    value range still holding a needed rank into ``_NB`` sub-buckets by
+    a monotone function of the value, and the driver moves each rank
+    into its sub-bucket (``narrow_ranges``). A sub-bucket holding one
+    value resolves its ranks on the driver; one holding more than
+    ``_REFINE·n/_NB`` rows is narrowed again (long-tailed columns), up
+    to ``_MAX_ROUNDS``. The final, lazy job ranks only the rows of the
+    ranges still open, with ``row_number`` by the true value within each
+    range, so lossy double casts (long > 2^53, decimals) stay exact.
+    A NaN or ±inf min or max has no finite sub-bucket width and falls
+    back to ranking every row (``indexing.with_ordinal``).
+
+    Guards: a nondeterministic input plan is pinned once (a persist
+    registered for ``release_ordinal_caches``) so every job sees the
+    same rows; a round whose counts do not add up to its range's count
+    restarts from a pinned input rather than use stale offsets.
 
     Same linear-interpolation rule as `F.percentile` / DuckDB
     quantile_cont (rank p·(n−1), collector.h:2279-2335), pinned by a
-    cross-implementation test. ps are fractions in [0, 1]. Returns a
-    1-row DataFrame with `names` columns (null when the input is empty).
+    cross-implementation test; a rank that lands on a row, or whose
+    neighbours are equal, returns that value itself (so ±inf survive).
+    ps are fractions in [0, 1]. Returns a 1-row DataFrame with double
+    `names` columns (null when the input is empty). Logs one DEBUG
+    record per call whose ``decision`` attribute holds ``n``,
+    ``rounds``, ``window_rows`` (rows ranked by the final window),
+    ``driver_ranks`` (ranks resolved on the driver), ``fallback`` (the
+    reason for ranking every row, or None) and ``pinned``.
     """
-    from semantic_cpp_spark.indexing import with_ordinal
+    from semantic_cpp_spark.indexing import pin, pin_if_nondeterministic
 
     if len(ps) != len(names):
         raise ValueError("ps and names must align")
     if not ps:
-        # zero percentiles: a 0-column select is legal downstream but the
-        # isin() rank filter below would throw — short-circuit (ADVICE r3)
+        # zero percentiles: a 0-column select is legal downstream (ADVICE r3)
         return df.sparkSession.range(1).select()
     for p in ps:
         if not 0.0 <= p <= 1.0:
             raise ValueError("percentile fraction must be in [0, 1]")
-    vals = df.select(col.alias("__v")).filter(col.isNotNull())
-    n = vals.count()
-    spark = df.sparkSession
-    if n == 0:
-        return spark.range(1).select(
+    vals = pin_if_nondeterministic(
+        df.select(col.alias("__v")).filter(F.col("__v").isNotNull())
+    )
+    while True:
+        picked, bounds, info = _exact_ranks(vals, ps)
+        if picked is not None or info["n"] == 0 or vals.is_cached:
+            break
+        # counts moved between jobs over an unpinned input: pin, redo
+        vals = pin(vals)
+    info["pinned"] = vals.is_cached
+    _log.debug("percentiles_exact_sorted %s", info, extra={"decision": info})
+    if info["n"] == 0:
+        return df.sparkSession.range(1).select(
             *[F.lit(None).cast("double").alias(nm) for nm in names]
         )
-    bounds: list[tuple[int, int, float]] = []
-    need: set[int] = set()
-    for p in ps:
-        r = p * (n - 1)
-        lo, hi = int(r // 1), -int(-r // 1)
-        bounds.append((lo, hi, r - lo))
-        need.update((lo, hi))
-
-    # r16 (guide §2.3 — shuffle fewer bytes): only len(need) <= 2·len(ps)
-    # GLOBAL RANKS are ever read, so ranking every row was waste. Bucket
-    # the column by frozen percentile_approx boundaries (the same
-    # monotone-coarsening scheme as indexing.with_ordinal's r16 range
-    # path: bucket = #bounds <= value, null -> 0, NaN -> last — a pure
-    # deterministic row function), take ONE exact per-bucket histogram,
-    # locate each needed rank's bucket + local offset on the driver
-    # (<= nb rows), and sort ONLY the buckets that contain a needed
-    # rank: the final job filters to ~len(need)/nb of the rows before
-    # its exchange and the full column is never shuffled. Values at the
-    # selected global ranks are identical to the full-ordinal path
-    # (bucket order is consistent with value order; within-bucket ties
-    # carry equal __v, so any tie order yields the same value at a
-    # rank). Degenerate boundary sets (constant column, all-null probe)
-    # fall back to the full ordinal sort.
-    nb = max(spark.sparkContext.defaultParallelism, 2)
-    brow = vals.agg(
-        F.percentile_approx(
-            F.col("__v").cast("double"),
-            F.array(*[F.lit(i / nb) for i in range(1, nb)]),
-            F.lit(1000),
-        ).alias("__b")
-    ).first()
-    qb = sorted({b for b in (brow["__b"] or []) if b is not None and b == b})
-    if qb:
-        kd = F.col("__v").cast("double")
-        terms = [
-            F.when(kd >= F.lit(float(b)), F.lit(1)).otherwise(F.lit(0))
-            for b in qb
-        ]
-        bexpr = sum(terms[1:], terms[0]).cast("long")
-        hist = {
-            r["__bk"]: r["__c"]
-            for r in vals.groupBy(bexpr.alias("__bk"))
-            .agg(F.count(F.lit(1)).alias("__c"))
-            .collect()
-        }
-        offsets: dict[int, int] = {}
-        acc = 0
-        for bk in sorted(hist):
-            offsets[bk] = acc
-            acc += hist[bk]
-        # (bucket, local_rank) for every needed global rank
-        targets: dict[int, tuple[int, int]] = {}
-        for r in need:
-            bk = max(b for b in offsets if offsets[b] <= r)
-            targets[r] = (bk, r - offsets[bk])
-        hit_buckets = sorted({bk for bk, _ in targets.values()})
-        sel = vals.withColumn("__bk", bexpr).filter(
-            F.col("__bk").isin(*[F.lit(b) for b in hit_buckets])
+    if picked is None:
+        raise RuntimeError(
+            "percentiles_exact_sorted: row counts changed between jobs "
+            "over a pinned input"
         )
-        w = Window.partitionBy("__bk").orderBy("__v")
-        ranked_local = sel.withColumn("__lr", F.row_number().over(w) - 1)
-        conds = [
-            (F.col("__bk") == F.lit(bk)) & (F.col("__lr") == F.lit(lr))
-            for bk, lr in set(targets.values())
-        ]
-        pred = conds[0]
-        for c in conds[1:]:
-            pred = pred | c
-        picked_rows = ranked_local.filter(pred)
-        aggs = []
-        for i, (lo, hi, _) in enumerate(bounds):
-            lo_bk, lo_lr = targets[lo]
-            hi_bk, hi_lr = targets[hi]
-            aggs.append(
-                F.min(
-                    F.when(
-                        (F.col("__bk") == lo_bk) & (F.col("__lr") == lo_lr),
-                        F.col("__v"),
-                    )
-                ).alias(f"__lo{i}")
-            )
-            aggs.append(
-                F.min(
-                    F.when(
-                        (F.col("__bk") == hi_bk) & (F.col("__lr") == hi_lr),
-                        F.col("__v"),
-                    )
-                ).alias(f"__hi{i}")
-            )
-        picked = picked_rows.agg(*aggs)
-    else:
-        ranked = with_ordinal(vals, ["__v"], name="__r", strategy="range")
-        sel = ranked.filter(F.col("__r").isin(*[F.lit(x) for x in need]))
-        aggs = []
-        for i, (lo, hi, _) in enumerate(bounds):
-            aggs.append(
-                F.min(F.when(F.col("__r") == lo, F.col("__v"))).alias(f"__lo{i}")
-            )
-            aggs.append(
-                F.min(F.when(F.col("__r") == hi, F.col("__v"))).alias(f"__hi{i}")
-            )
-        picked = sel.agg(*aggs)
     outs = []
-    for i, (_, _, frac) in enumerate(bounds):
-        v = F.col(f"__lo{i}") + F.lit(frac) * (F.col(f"__hi{i}") - F.col(f"__lo{i}"))
-        outs.append(v.alias(names[i]))
+    for nm, (lo, hi, frac) in zip(names, bounds):
+        a, b = F.col(f"__r{lo}"), F.col(f"__r{hi}")
+        v = a if frac == 0 else F.when(a == b, a).otherwise(a + F.lit(frac) * (b - a))
+        outs.append(v.cast("double").alias(nm))
     return picked.select(*outs)
 
 

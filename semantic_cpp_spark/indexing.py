@@ -91,6 +91,25 @@ def release_ordinal_caches() -> int:
             pass
     return n
 
+
+def pin(df: DataFrame) -> DataFrame:
+    """Persist ``df`` so every later job reads the rows its first job
+    computed; registered for ``release_ordinal_caches``."""
+    pinned = df.persist(StorageLevel.MEMORY_AND_DISK)
+    _PERSISTED.append(pinned)
+    return pinned
+
+
+def pin_if_nondeterministic(df: DataFrame) -> DataFrame:
+    """``pin(df)`` when its analyzed plan is nondeterministic (an
+    upstream ``rand()``, a sample) and it is not pinned yet; else ``df``.
+    Multi-job paths that locate rows by counts from one job and read
+    them in another need both jobs to see the same rows."""
+    if df.is_cached or df._jdf.queryExecution().analyzed().deterministic():
+        return df
+    return pin(df)
+
+
 _NUMERIC = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
 
 # types the deterministic quantile-bounds range path accepts: anything
@@ -233,6 +252,8 @@ def with_ordinal(
                 qkey = None
         bounds = None
         if qkey is not None:
+            # the bounds probe and the final job both read df
+            df = pin_if_nondeterministic(df)
             bk = (
                 df._jdf.queryExecution().analyzed().semanticHash(),
                 hash(tuple(sorted(df.inputFiles()))),
@@ -295,13 +316,10 @@ def with_ordinal(
             )
             tagged = _RANGE_CACHE.get(rk)
             if tagged is None:
-                tagged = (
-                    df.repartitionByRange(n, *cols)
-                    .withColumn(_PID, F.spark_partition_id())
-                    .persist(StorageLevel.MEMORY_AND_DISK)
+                tagged = pin(
+                    df.repartitionByRange(n, *cols).withColumn(_PID, F.spark_partition_id())
                 )
                 _RANGE_CACHE[rk] = tagged
-                _PERSISTED.append(tagged)
     else:
         raise ValueError(f"unknown strategy {strategy!r}")
 

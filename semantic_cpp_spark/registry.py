@@ -388,13 +388,15 @@ def agg_dispersion(spark, sf_dir):
 def agg_quantiles(spark, sf_dir):
     """useMedian/usePercentile — EXACT with linear interpolation on rank
     p·(n−1) (collector.h:2205-2335); Spark `percentile`, DuckDB
-    `quantile_cont`, and the sort-path used here share the rule.
+    `quantile_cont`, and the path used here share the rule.
 
-    Computed via distributed sort + rank selection
-    (stats.percentiles_exact_sorted): `F.percentile`'s final merge sorts
-    every distinct value on one reducer — measured ~1.7 s floor on 600k
-    rows regardless of input parallelism — while the range-partitioned
-    sort scales out; cross-implementation agreement is test-pinned."""
+    Computed by histogram narrowing (stats.percentiles_exact_sorted):
+    one count/min/max job, then rounds of a 1024-sub-bucket histogram
+    that move each needed rank into ever smaller value ranges, and a
+    final rank window over only the few rows left in those ranges.
+    `F.percentile`'s final merge sorts every distinct value on one
+    reducer (measured ~1.7 s floor on 600k rows regardless of input
+    parallelism); cross-implementation agreement is test-pinned."""
     from semantic_cpp_spark.functions.stats import percentiles_exact_sorted
 
     li = load_table(spark, sf_dir, "lineitem")

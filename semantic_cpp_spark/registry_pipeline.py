@@ -1563,9 +1563,8 @@ _QUALITY_SQL = """(length(list_filter(regexp_split_to_array(trim(text), '\\s+'),
 def txt_quality_above_median(spark, sf_dir):
     """Corpus-relative quality filter: keep the top half by composite
     quality score — the exact corpus median is a 1-row aggregate
-    broadcast back over the scan (curation.quality_above_median;
-    production swaps in approx_percentile — stats.percentile_approx_scale
-    is the documented escape hatch)."""
+    broadcast back over the scan (curation.quality_above_median, by
+    histogram narrowing: no sort of the corpus, no single reducer)."""
     docs = load_table(spark, sf_dir, "documents")
     q = text.quality_score(F.col("text"))
     kept = curation.quality_above_median(docs, q)

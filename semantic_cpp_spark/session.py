@@ -305,7 +305,74 @@ def load_table(spark: SparkSession, sf_dir: str, name: str):
     # U+FFFD replacement on invalid charset input (see get_spark) — the
     # reference's decode policy must hold on the driver's session too.
     spark.conf.set("spark.sql.legacy.codingErrorAction", "true")
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    return read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
+
+
+# Session confs that change the schema Spark infers from parquet footers.
+_PARQUET_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.caseSensitive",
+)
+# inferred parquet schemas: (abspath, file stamps, conf values) -> StructType
+_SCHEMA_MEMO: dict[tuple, T.StructType] = {}
+_SCHEMA_MEMO_MAX = 256
+
+
+def _file_stamps(path: str) -> tuple | None:
+    """``(relative path, size, mtime_ns, inode)`` of every file at or
+    under ``path``, sorted; None when something there cannot be stat'ed
+    (a missing or non-local path)."""
+
+    def stamp(p: str) -> tuple:
+        st = os.stat(p)
+        return (os.path.relpath(p, path), st.st_size, st.st_mtime_ns, st.st_ino)
+
+    def fail(err: OSError):
+        raise err
+
+    try:
+        if not os.path.isdir(path):
+            return (stamp(path),)
+        return tuple(sorted(
+            stamp(os.path.join(d, f))
+            for d, _, files in os.walk(path, onerror=fail)
+            for f in files
+        ))
+    except OSError:
+        return None
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers the schema once per file
+    set. Inference is a Spark job (a footer read per file); the inferred
+    ``StructType`` is memoized under the absolute path, every data file's
+    ``(size, mtime_ns, inode)`` and the inference confs of ``spark``, and
+    a hit reads with ``.schema(...)``: no job, the same schema. A path
+    that cannot be stat'ed is read without the memo. The memo describes
+    files, not data, so ``indexing.release_ordinal_caches`` keeps it.
+    Logs one DEBUG record per call; its ``decision`` attribute says
+    ``hit``, ``miss`` or ``unstamped``."""
+    full = os.path.abspath(path)
+    stamps = _file_stamps(full)
+    key = None
+    if stamps is not None:
+        key = (full, stamps, tuple(spark.conf.get(k, None) for k in _PARQUET_SCHEMA_CONFS))
+    schema = _SCHEMA_MEMO.get(key) if key else None
+    memo = "unstamped" if key is None else ("miss" if schema is None else "hit")
+    _LOG.debug("read_parquet schema memo %s: %s", memo, path,
+               extra={"decision": {"memo": memo, "path": path}})
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    if key is not None:
+        if len(_SCHEMA_MEMO) >= _SCHEMA_MEMO_MAX:
+            _SCHEMA_MEMO.pop(next(iter(_SCHEMA_MEMO)))
+        _SCHEMA_MEMO[key] = df.schema
+    return df
 
 
 def ts_micros(df: DataFrame, col: str = "ts") -> Column:

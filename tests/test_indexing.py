@@ -1,7 +1,17 @@
-"""with_ordinal strategy equivalence + determinism."""
+"""Row-location machinery: with_ordinal strategy equivalence and
+determinism, exact percentiles by histogram narrowing, and the parquet
+schema memo every fixture load goes through."""
 
+import logging
+import math
+import random
+from decimal import Decimal
+
+import pytest
 from pyspark.sql import functions as F
 
+from semantic_cpp_spark.functions import stats
+from semantic_cpp_spark.functions.stats import narrow_ranges, percentiles_exact_sorted
 from semantic_cpp_spark.indexing import IDX, normalize_index, rebase_index, with_ordinal
 
 
@@ -135,3 +145,308 @@ def test_range_quantile_bounds_deterministic(spark):
     release_ordinal_caches()
     b = {r["tie"]: r[IDX] for r in with_ordinal(df, ["k", "tie"], strategy="range").collect()}
     assert a == b
+
+
+def _noisy():
+    """A value that changes on every evaluation of the plan."""
+    return F.udf(lambda i: i + random.random(), "double").asNondeterministic()
+
+
+def test_range_quantile_bounds_pins_nondeterministic_input(spark):
+    """The bounds probe and the final job read the input twice: a
+    nondeterministic input is pinned, so the ordinal is still dense and
+    ordered by the key the rows carry."""
+    from semantic_cpp_spark.indexing import release_ordinal_caches
+
+    df = spark.range(3000).select(_noisy()("id").alias("k"), F.col("id").alias("tie"))
+    try:
+        out = sorted(with_ordinal(df, ["k", "tie"], strategy="range").collect(),
+                     key=lambda r: r[IDX])
+    finally:
+        release_ordinal_caches()
+    assert [r[IDX] for r in out] == list(range(3000))
+    ks = [r["k"] for r in out]
+    assert ks == sorted(ks)
+
+
+# -- exact percentiles (stats.percentiles_exact_sorted) ---------------------
+
+_STATS_LOG = "semantic_cpp_spark.functions.stats"
+_PS = [0.0, 0.25, 0.5, 0.9137, 1.0]
+_INF = float("inf")
+
+
+def _close(got, exp):
+    """Within 1e-9 absolute, the bound the test had before the narrowing
+    path (it holds for long > 2^53 and decimal too: both engines
+    interpolate in double); NaN, ±inf and null match only themselves."""
+    if got is None or exp is None:
+        return got is exp
+    if math.isnan(exp) or math.isinf(exp):
+        return math.isnan(got) if math.isnan(exp) else got == exp
+    return abs(got - exp) < 1e-9
+
+
+def _percentiles(df, caplog, ps=_PS):
+    """(1-row result, its column names, the call's decision record)."""
+    names = [f"p{i}" for i in range(len(ps))]
+    with caplog.at_level(logging.DEBUG, logger=_STATS_LOG):
+        caplog.clear()
+        out = percentiles_exact_sorted(df, F.col("v"), ps, names)
+    [rec] = [r.decision for r in caplog.records if r.name == _STATS_LOG]
+    return out, names, rec
+
+
+def _builtin(df, ps=_PS):
+    q = df.agg(F.percentile("v", F.array(*[F.lit(p) for p in ps])).alias("q")).first()["q"]
+    return [None] * len(ps) if q is None else q
+
+
+def _uniform(spark):
+    rng = random.Random(11)
+    data = [(round(rng.uniform(0, 1000), 2),) for _ in range(997)]
+    return spark.createDataFrame(data + [(42.0,)] * 50, "v double")
+
+
+def _long_tail(spark):
+    rng = random.Random(5)
+    data = [(rng.expovariate(1.0),) for _ in range(5000)] + [(1e12,)]
+    return spark.createDataFrame(data, "v double")
+
+
+def _one_value(spark):
+    rng = random.Random(3)
+    # whole numbers: every sub-bucket of [7, 199] holds one value
+    data = [(7.0,)] * 9000 + [(float(rng.randrange(100, 200)),) for _ in range(1000)]
+    return spark.createDataFrame(data, "v double")
+
+
+def _no_window(rec, out):
+    assert rec["window_rows"] == 0 and rec["driver_ranks"] > 0
+    assert "Window" not in out._jdf.queryExecution().executedPlan().toString()
+
+
+def _narrowed(rounds=1):
+    def check(rec, out):
+        assert rec["fallback"] is None and rec["rounds"] >= rounds, rec
+    return check
+
+
+def _fallback(rec, out):
+    assert rec["fallback"] and rec["window_rows"] == rec["n"], rec
+
+
+_CASES = {
+    "uniform": (_uniform, _narrowed()),
+    "long_tail": (_long_tail, _narrowed(rounds=2)),
+    "one_value_90pct": (_one_value, _no_window),
+    "signed_zero": (
+        lambda s: s.createDataFrame([(-0.0,), (0.0,)] * 40 + [(1.5,), (-2.0,)], "v double"),
+        _narrowed(),
+    ),
+    "nan": (
+        lambda s: s.createDataFrame([(float(i),) for i in range(20)] + [(math.nan,)] * 3, "v double"),
+        _fallback,
+    ),
+    "inf": (
+        lambda s: s.createDataFrame([(-_INF,), (_INF,), (0.25,), (0.5,), (0.75,)], "v double"),
+        _fallback,
+    ),
+    "nulls": (
+        lambda s: s.createDataFrame([(float(i % 17),) for i in range(60)] + [(None,)] * 9, "v double"),
+        _narrowed(),
+    ),
+    "all_null": (lambda s: s.createDataFrame([(None,)] * 4, "v double"), lambda rec, out: None),
+    "empty": (lambda s: s.createDataFrame([], "v double"), lambda rec, out: None),
+    "long_above_2_53": (
+        lambda s: s.createDataFrame([(2**60 + i * 37,) for i in range(1000)], "v long"),
+        _narrowed(),
+    ),
+    "decimal_18_4": (
+        lambda s: s.createDataFrame(
+            [(Decimal(i * 7919 % 100003) / Decimal("7.5"),) for i in range(1500)],
+            "v decimal(18,4)",
+        ),
+        _narrowed(),
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_CASES))
+def test_percentiles_sorted_matches_builtin(spark, caplog, case):
+    """Histogram narrowing agrees with F.percentile (hence DuckDB
+    quantile_cont) on duplicates, exact-integer and interpolated ranks,
+    and every input shape the narrowing treats apart; its decision
+    record says which way it went."""
+    build, check = _CASES[case]
+    df = build(spark)
+    out, names, rec = _percentiles(df, caplog)
+    got = out.collect()[0]
+    exp = _builtin(df)
+    for i, nm in enumerate(names):
+        assert _close(got[nm], exp[i]), (case, _PS[i], got[nm], exp[i])
+    assert rec["n"] == df.filter(F.col("v").isNotNull()).count()
+    check(rec, out)
+
+
+def test_percentiles_exact_rank_returns_value_itself(spark, caplog):
+    """A rank on a row, or between equal values, returns that value:
+    ±inf survive instead of becoming inf − inf = NaN. DuckDB and
+    F.percentile agree."""
+    import duckdb
+
+    con = duckdb.connect()
+    for data, ps, want in (
+        ([-_INF, _INF, 0.25, 0.5, 0.75], [0.0, 1.0], [-_INF, _INF]),
+        ([0.5, _INF, _INF], [0.9], [_INF]),
+    ):
+        df = spark.createDataFrame([(x,) for x in data], "v double")
+        out, names, _ = _percentiles(df, caplog, ps)
+        got = [out.first()[nm] for nm in names]
+        con.execute("CREATE OR REPLACE TABLE t(v DOUBLE)")
+        con.executemany("INSERT INTO t VALUES (?)", [(x,) for x in data])
+        duck = [con.execute("SELECT quantile_cont(v, ?) FROM t", [p]).fetchone()[0] for p in ps]
+        assert got == want == duck == list(_builtin(df, ps)), (data, got, duck)
+
+
+def test_percentiles_sorted_empty_and_validation(spark):
+    df = spark.createDataFrame([], "v double")
+    row = percentiles_exact_sorted(df, F.col("v"), [0.5], ["m"]).collect()[0]
+    assert row["m"] is None
+    with pytest.raises(ValueError):
+        percentiles_exact_sorted(df, F.col("v"), [1.5], ["m"])
+    # ps=[] short-circuits to a 0-column row instead of crashing in the
+    # rank filter (ADVICE r3/r4)
+    some = spark.createDataFrame([(1.0,), (2.0,)], "v double")
+    out = percentiles_exact_sorted(some, F.col("v"), [], [])
+    assert out.columns == [] and out.count() == 1
+
+
+def test_percentiles_sorted_pins_nondeterministic_input(spark, caplog):
+    """Every job of the call reads one pinned copy of a nondeterministic
+    input: the answer equals the same percentiles over those rows."""
+    import numpy as np
+
+    from semantic_cpp_spark import indexing
+
+    df = spark.range(4000).select(_noisy()("id").alias("v")).filter(F.rand() < 0.7)
+    try:
+        out, names, rec = _percentiles(df, caplog)
+        got = out.first()
+        rows = [r["__v"] for r in indexing._PERSISTED[-1].collect()]
+    finally:
+        indexing.release_ordinal_caches()
+    assert rec["pinned"] and rec["n"] == len(rows)
+    for i, nm in enumerate(names):
+        assert _close(got[nm], float(np.percentile(rows, 100 * _PS[i]))), _PS[i]
+
+
+def test_percentiles_sorted_recomputes_on_count_mismatch(spark, caplog, monkeypatch):
+    """A round whose counts do not add up is never used: the call pins
+    its input and starts over."""
+    from semantic_cpp_spark import indexing
+
+    calls = []
+
+    def stale_once(ranges, hist, need):
+        calls.append(1)
+        return None if len(calls) == 1 else narrow_ranges(ranges, hist, need)
+
+    monkeypatch.setattr(stats, "narrow_ranges", stale_once)
+    df = _uniform(spark)
+    try:
+        out, names, rec = _percentiles(df, caplog)
+        got = out.first()
+    finally:
+        indexing.release_ordinal_caches()
+    assert len(calls) >= 2 and rec["pinned"]
+    for nm, exp in zip(names, _builtin(df)):
+        assert _close(got[nm], exp)
+
+
+def test_narrow_ranges_bookkeeping():
+    """Pure driver bookkeeping: ranks move into the sub-bucket that holds
+    them, single-valued sub-buckets resolve, and counts that do not add
+    up to the range's count return None."""
+    ranges = [(0.0, 100.0, 10, 20), (500.0, 600.0, 50, 5)]
+    # sub-buckets arrive in any order; bucket order is value order
+    hist = [(0, 7, 8, 70.0, 90.0), (1, 3, 5, 550.0, 550.0), (0, 0, 12, 0.0, 10.0)]
+    need = [10, 21, 22, 29, 52]
+    resolved, open_ = narrow_ranges(ranges, hist, need)
+    assert resolved == {52: 550.0}
+    assert open_ == [(0.0, 10.0, 10, 12), (70.0, 90.0, 22, 8)]
+    # a sub-bucket holding no needed rank is dropped
+    assert narrow_ranges(ranges, hist, [10]) == ({}, [(0.0, 10.0, 10, 12)])
+    # counts short of the range's count (rows moved between jobs)
+    assert narrow_ranges(ranges, hist[:2] + [(0, 0, 11, 0.0, 10.0)], need) is None
+    # a range whose rows all vanished
+    assert narrow_ranges(ranges, [h for h in hist if h[0] == 0], need) is None
+
+
+# -- parquet schema memo (session.read_parquet) ------------------------------
+
+
+def _read_logged(spark, path, caplog, group):
+    """(DataFrame, memo decision, Spark jobs started) of one read."""
+    from semantic_cpp_spark.session import read_parquet
+
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        with caplog.at_level(logging.DEBUG, logger="semantic_cpp_spark.session"):
+            caplog.clear()
+            df = read_parquet(spark, path)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    [memo] = [r.decision["memo"] for r in caplog.records if hasattr(r, "decision")]
+    return df, memo, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_schema_memo_hit_starts_no_job(spark, tmp_path, caplog):
+    """A second read of unchanged files reuses the inferred schema: equal
+    schema, no Spark job. Rewriting the file or flipping an inference
+    conf misses."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"a": [1, 2, 3], "b": ["x", "y", "z"]}), path)
+    cold, memo, jobs = _read_logged(spark, path, caplog, "memo-cold")
+    assert memo == "miss" and jobs >= 1  # inference is a job
+    warm, memo, jobs = _read_logged(spark, path, caplog, "memo-warm")
+    assert memo == "hit" and jobs == 0
+    assert warm.schema == cold.schema
+    assert sorted(warm.collect()) == sorted(cold.collect())
+
+    tmp = str(tmp_path / "t.tmp")
+    pq.write_table(pa.table({"a": [1.5], "b": ["w"]}), tmp)
+    os.replace(tmp, path)
+    df, memo, _ = _read_logged(spark, path, caplog, "memo-rewritten")
+    assert memo == "miss" and df.schema["a"].dataType.typeName() == "double"
+
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    prev = spark.conf.get(key, None)
+    flipped = "false" if prev == "true" else "true"
+    spark.conf.set(key, flipped)
+    try:
+        _, memo, _ = _read_logged(spark, path, caplog, "memo-conf")
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
+    assert memo == "miss"
+
+
+def test_schema_memo_skips_unstampable_path(spark, caplog):
+    """A path that cannot be stat'ed is read without the memo, and the
+    reader's own error surfaces."""
+    from semantic_cpp_spark.session import read_parquet
+
+    with caplog.at_level(logging.DEBUG, logger="semantic_cpp_spark.session"):
+        with pytest.raises(Exception, match="PATH_NOT_FOUND|does not exist"):
+            read_parquet(spark, "/nonexistent/x.parquet")
+    assert [r.decision["memo"] for r in caplog.records if hasattr(r, "decision")] == ["unstamped"]

@@ -251,20 +251,30 @@ def test_incremental_dedup_corpus_join_not_hinted(spark, qs):
     assert "ResolvedHint" not in analyzed
 
 
-def test_conversion_latency_no_global_percentile_reducer(spark, qs):
-    """evt_conversion_latency routes p50/p90 through the bucket-histogram
-    rank selection (stats.percentiles_exact_sorted): no `percentile(`
-    aggregate (the single-reducer shape), and the rank window is
-    DISTRIBUTED — partitioned by the value bucket over a hash exchange on
-    that same bucket, never a global single-partition window."""
+def test_conversion_latency_no_global_percentile_reducer(spark, qs, caplog):
+    """evt_conversion_latency routes p50/p90 through histogram narrowing
+    (stats.percentiles_exact_sorted): no `percentile(` aggregate (the
+    single-reducer shape), the ranks come from narrowing rather than the
+    rank-every-row fallback (its decision record), and any rank window
+    left is DISTRIBUTED: every `Window [` node is partitioned by a range
+    key over a hash exchange on that same key, never a global
+    single-partition window. At this scale the narrowing may resolve
+    every rank on the driver and leave no window at all."""
+    import logging
     import re
 
-    plan = _plan(qs["evt_conversion_latency"](spark, SF))
+    with caplog.at_level(logging.DEBUG, logger="semantic_cpp_spark.functions.stats"):
+        plan = _plan(qs["evt_conversion_latency"](spark, SF))
+    records = [r.decision for r in caplog.records
+               if r.name == "semantic_cpp_spark.functions.stats"]
+    assert records, "no percentiles_exact_sorted decision record"
+    for rec in records:
+        assert rec["fallback"] is None and rec["rounds"] >= 1, rec
     assert "percentile(" not in plan
     windows = re.findall(
         r"Window \[.*\], \[(.*)\], \[.*\n.*Sort .*\n.*Exchange (\w+)(?:\((\w+)#)?", plan
     )
-    assert windows, plan[:3000]
+    assert len(windows) == plan.count("Window ["), plan[:3000]
     for keys, exchange, on in windows:
         assert keys and exchange == "hashpartitioning", plan[:3000]
         assert keys.split("#")[0] == on
@@ -782,11 +792,33 @@ def test_lm_scoring_joins_never_cartesian(spark, qs):
     their n-gram keys (hash joins at any scale — co-partitioned shuffle
     when the tables outgrow the broadcast threshold, broadcast below
     it); the only nested-loop is the 1-row totals/cutoff broadcast. A
-    CartesianProduct anywhere means a join key got lost."""
-    plan = _plan(qs["txt_lm_perplexity_bands"](spark, SF))
-    assert "CartesianProduct" not in plan
-    # per-doc rollup and every model count aggregate map-side partials
-    assert "partial_count" in plan or "partial" in plan
+    CartesianProduct anywhere means a join key got lost. The scoring
+    joins and the per-doc rollup sit under localCheckpoints, so the
+    checkpointed feeders are pinned along with the final plan."""
+    import re
+
+    from pyspark.sql.classic.dataframe import DataFrame as CDF
+
+    feeders = []
+    real = CDF.localCheckpoint
+
+    def grab(self, *args, **kwargs):
+        feeders.append(self._jdf.queryExecution().executedPlan().toString())
+        return real(self, *args, **kwargs)
+
+    CDF.localCheckpoint = grab
+    try:
+        plan = _plan(qs["txt_lm_perplexity_bands"](spark, SF))
+    finally:
+        CDF.localCheckpoint = real
+    assert feeders, "txt_lm_perplexity_bands no longer checkpoints its feeders"
+    for p in [plan] + feeders:
+        assert "CartesianProduct" not in p
+    # the scored feeder (checkpointed last): the model lookups' hash
+    # joins and the per-doc rollup's map-side partial aggregates
+    scored = feeders[-1]
+    assert re.search(r"BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin", scored), scored[:3000]
+    assert "partial_" in scored, scored[:3000]
 
 
 def test_kn_scoring_joins_never_cartesian(spark, qs):

@@ -76,49 +76,6 @@ def test_small_n_guards(spark):
     assert three.agg(stats.kurtosis_ref(F.col("v")).alias("k")).first()["k"] == 0.0
 
 
-def test_percentiles_sorted_matches_builtin(spark):
-    """The distributed sort-path percentile must agree with F.percentile
-    (and hence DuckDB quantile_cont) on duplicates, exact-integer ranks,
-    and interpolated ranks."""
-    import random
-
-    from pyspark.sql import functions as F
-
-    from semantic_cpp_spark.functions.stats import percentiles_exact_sorted
-
-    rng = random.Random(11)
-    data = [(i, round(rng.uniform(0, 1000), 2)) for i in range(997)]
-    data += [(1000 + i, 42.0) for i in range(50)]  # duplicate block
-    df = spark.createDataFrame(data, "id long, v double")
-    ps = [0.0, 0.25, 0.5, 0.9137, 1.0]
-    names = [f"p{i}" for i in range(len(ps))]
-    got = percentiles_exact_sorted(df, F.col("v"), ps, names).collect()[0]
-    exp = df.agg(
-        F.percentile(F.col("v"), F.array(*[F.lit(p) for p in ps])).alias("q")
-    ).collect()[0]["q"]
-    for i in range(len(ps)):
-        assert abs(got[names[i]] - exp[i]) < 1e-9, (ps[i], got[names[i]], exp[i])
-
-
-def test_percentiles_sorted_empty_and_validation(spark):
-    from pyspark.sql import functions as F
-
-    from semantic_cpp_spark.functions.stats import percentiles_exact_sorted
-
-    df = spark.createDataFrame([], "v double")
-    row = percentiles_exact_sorted(df, F.col("v"), [0.5], ["m"]).collect()[0]
-    assert row["m"] is None
-    import pytest as _pt
-
-    with _pt.raises(ValueError):
-        percentiles_exact_sorted(df, F.col("v"), [1.5], ["m"])
-    # ps=[] short-circuits to a 0-column row instead of crashing in the
-    # isin() rank filter (ADVICE r3/r4)
-    some = spark.createDataFrame([(1.0,), (2.0,)], "v double")
-    out = percentiles_exact_sorted(some, F.col("v"), [], [])
-    assert out.columns == [] and out.count() == 1
-
-
 def test_approx_count_distinct_within_tolerance(spark):
     """The sketch path for profiling at scale: HLL++ estimate lands
     within its documented relative error on a known cardinality."""
