@@ -176,8 +176,13 @@ def with_ordinal(
         w = Window.partitionBy(F.pmod(F.spark_partition_id(), F.lit(1))).orderBy(*cols)
         return df.withColumn(name, (F.row_number().over(w) - 1).cast("long"))
 
+    key = _leading_numeric_key(df, order_by)
+    if strategy in ("auto", "bucket") and key is not None:
+        # the density probe or the bucket counts job, and the final job,
+        # each read df
+        df = pin_if_nondeterministic(df)
+
     if strategy == "auto":
-        key = _leading_numeric_key(df, order_by)
         if key is not None:
             if len(order_by) == 1:
                 # single-key density probe: dense → ordinal is a pure map.
@@ -215,7 +220,6 @@ def with_ordinal(
             strategy = "range"
 
     if strategy == "bucket":
-        key = _leading_numeric_key(df, order_by)
         if key is None:
             raise ValueError("bucket strategy needs a leading integer-like key")
         bucket = F.floor(F.col(key).cast("long") / F.lit(bucket_width)).cast("long")

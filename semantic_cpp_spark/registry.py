@@ -801,8 +801,10 @@ _PRIORITY: list[str] = [
     #    curation.quality_above_median, re-verified here by
     #    txt_quality_above_median; it keeps its r16 row. The r17 numpy
     #    rewrite of the per-key stream folds is bit-identical to the
-    #    pandas folds (tests/test_streaming.py); stream_running_stats
-    #    and stream_count_windows re-verify it from the due cohort. --
+    #    pandas folds (tests/test_streaming.py); stream_count_windows
+    #    re-verifies it from the due cohort. stream_running_stats, also
+    #    due, re-verifies the native stateful aggregate that replaced
+    #    its Python fold. --
     "agg_quantiles",
     "txt_lm_perplexity_bands",
     "evt_conversion_latency",

@@ -98,9 +98,9 @@ def stream_distinct(spark, sf_dir):
        FROM events GROUP BY user_id""",
 )
 def stream_running_stats(spark, sf_dir):
-    """Custom stateful operator: per-user running (count, Σx, Σx²) via
-    applyInPandasWithState — the streaming form of the reference's
-    single-pass stats accumulators (collector.h:488-760)."""
+    """Per-user running (count, Σx, Σx²) as Spark's native stateful
+    aggregate (update mode, no Python worker) — the streaming form of the
+    reference's single-pass stats accumulators (collector.h:488-760)."""
     ev = ops.read_events_stream(spark, sf_dir)
     out = ops.run_to_memory(
         ops.running_stats_per_user(ev), "update", skip_no_data_batch=True

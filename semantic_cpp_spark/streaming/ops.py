@@ -8,12 +8,23 @@ supplies what a STREAMING version of that library needs on Spark:
 - event-time tumbling/sliding windows (``window()``) and session windows
   (``session_window()``) with ``withWatermark`` lateness handling;
 - streaming dedup (``dropDuplicates`` / ``dropDuplicatesWithinWatermark``);
+- per-key running statistics (count, Σx, Σx² — the streaming form of
+  the reference's stats collectors, collector.h:488-760) as Spark's
+  NATIVE stateful aggregate (``running_stats_per_user``);
 - CUSTOM STATEFUL OPERATORS via ``applyInPandasWithState``:
-  - per-key running statistics (Welford count/mean/M2 — the streaming
-    form of the reference's variance collector, collector.h:688-760);
   - per-key COUNT-BASED tumbling windows over an unbounded stream — the
     reference's ``tumble`` (semantic.h:910-913) lifted to streaming,
-    with explicit buffered-remainder state and eviction on emit.
+    with explicit buffered-remainder state and eviction on emit;
+  - per-key top-k, funnel stages and last-touch attribution;
+  - sliding-window unique users (exact, HyperLogLog), count-min user
+    frequencies and value quantile sketches.
+
+The rule for choosing between the two: a fold with identity, accumulate
+and combine stages (counts, sums, min/max) is a ``groupBy().agg()``,
+which Spark runs as StateStoreRestore/Save around a partial aggregate
+below the shuffle, with no Python worker. Only order-dependent state
+machines and custom sketches run a Python update function, and they pay
+pyspark's per-key, per-micro-batch Arrow-to-pandas serializer for it.
 
 Batch/stream parity: every operator here has identical batch semantics,
 which is how the driver's DuckDB oracle checks them — the streaming query
@@ -74,9 +85,11 @@ def run_to_memory(
     A caller whose query emits every result row from DATA batches —
     inner stream-stream joins and dropDuplicates emit eagerly,
     complete-mode re-emits the full result each batch, update-mode
-    custom stateful operators emit from their own update logic —
-    passes True to skip that batch (results pinned identical by the
-    batch==stream parity suite and the driver oracle). Append-mode
+    aggregations without a watermark emit every touched key in the
+    batch that touched it, update-mode custom stateful operators emit
+    from their own update logic — passes True to skip that batch
+    (results pinned identical by the batch==stream parity suite and the
+    driver oracle). Append-mode
     WATERMARKED AGGREGATIONS must keep the default False: their final
     windows only emit when the no-data batch advances the watermark
     past the window end (test_streaming pins one such gate). The
@@ -241,68 +254,24 @@ def _sorted_columns(
     return [arr[c][order].tolist() for c in cols]
 
 
-_STATS_OUT = T.StructType(
-    [
-        T.StructField("user_id", T.LongType()),
-        T.StructField("n", T.LongType()),
-        T.StructField("sum_value", T.DoubleType()),
-        T.StructField("sum_squares", T.DoubleType()),
-    ]
-)
-_STATS_STATE = T.StructType(
-    [
-        T.StructField("n", T.LongType()),
-        T.StructField("s1", T.DoubleType()),
-        T.StructField("s2", T.DoubleType()),
-    ]
-)
-
-
-def _stats_update(
-    key: Tuple[Any, ...],
-    pdfs: Iterator[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
-    """Running (count, Σx, Σx²) per key — the reference collector's
-    identity/accumulate/combine stages (collector.h:51-153) as streaming
-    state. Power sums rather than Welford mean/M2 on purpose: the fixture
-    values carry ≤2 decimals, so the true sums are exact 2/4-decimal
-    quantities and rounding is boundary-safe when compared against the
-    batch oracle (a mean like sum/64 can land EXACTLY on a rounding
-    boundary where engines disagree by one ulp)."""
-    if state.exists:
-        n, s1, s2 = state.get
-    else:
-        n, s1, s2 = 0, 0.0, 0.0
-    (vals,) = _sorted_columns(pdfs, ("event_id",), ("value",))
-    for v in vals:
-        n += 1
-        s1 += v
-        s2 += v * v
-    state.update((n, s1, s2))
-    yield pd.DataFrame(
-        {
-            "user_id": [key[0]],
-            "n": [n],
-            "sum_value": [s1],
-            "sum_squares": [s2],
-        }
-    )
-
-
 def running_stats_per_user(events: DataFrame) -> DataFrame:
-    """Custom stateful operator #1: per-user running (count, Σx, Σx²) —
-    mean/variance derivable — maintained across micro-batches."""
-    return (
-        events.select("user_id", "event_id", "value")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _stats_update,
-            outputStructType=_STATS_OUT,
-            stateStructType=_STATS_STATE,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    """Per-user running (count, Σx, Σx²) — mean/variance derivable —
+    maintained across micro-batches: the reference collector's
+    identity/accumulate/combine stages (collector.h:51-153) as Spark's
+    native stateful aggregate. In update mode every micro-batch emits one
+    row per user it touched, carrying that user's running totals. SQL
+    semantics: ``n`` counts every row; the sums skip null values and are
+    null for a user with no non-null value. Power sums rather than
+    Welford mean/M2 on purpose: the fixture values carry ≤2 decimals, so
+    the true sums are exact 2/4-decimal quantities and rounding them is
+    boundary-safe whatever the summation order (a mean like sum/64 can
+    land EXACTLY on a rounding boundary where engines disagree by one
+    ulp)."""
+    v = F.col("value")
+    return events.groupBy("user_id").agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(v).alias("sum_value"),
+        F.sum(v * v).alias("sum_squares"),
     )
 
 

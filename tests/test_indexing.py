@@ -169,6 +169,56 @@ def test_range_quantile_bounds_pins_nondeterministic_input(spark):
     assert ks == sorted(ks)
 
 
+def _ordinal_over_pinned(df, order_by, **kw):
+    """(rows by ordinal, the pinned input's rows) of one ``with_ordinal``
+    call whose input must be pinned; caches released afterwards."""
+    from semantic_cpp_spark import indexing
+
+    before = len(indexing._PERSISTED)
+    try:
+        out = sorted(with_ordinal(df, order_by, **kw).collect(), key=lambda r: r[IDX])
+        assert len(indexing._PERSISTED) == before + 1
+        pinned = indexing._PERSISTED[-1].collect()
+    finally:
+        indexing.release_ordinal_caches()
+    return out, pinned
+
+
+def test_dense_probe_pins_nondeterministic_input(spark):
+    """The auto density probe and the final job read the input twice.
+    Here row 0 survives each evaluation with probability 1/2, so two
+    reads can disagree on the key's minimum; pinned, the ordinal is
+    ``key - min`` over the one set of rows both jobs see."""
+    df = spark.range(3000).select(F.col("id").alias("k")).filter(
+        (F.col("k") > 0) | (_noisy()("k") < 0.5))
+    out, pinned = _ordinal_over_pinned(df, ["k"])
+    assert [r[IDX] for r in out] == list(range(len(pinned)))
+    assert [r["k"] for r in out] == sorted(r["k"] for r in pinned)
+
+
+@pytest.mark.parametrize("strategy", ["auto", "bucket"])
+def test_bucket_ordinal_pins_nondeterministic_input(spark, strategy):
+    """The bucket counts job and the final job read the input twice; a
+    random 70% of the keys survives each evaluation, so unpinned the
+    offsets would count other rows than the ones they number."""
+    df = spark.range(3000).select(F.col("id").alias("k")).filter(
+        _noisy()("k") - F.col("k") < 0.7)
+    out, pinned = _ordinal_over_pinned(df, ["k"], strategy=strategy, bucket_width=64)
+    assert [r[IDX] for r in out] == list(range(len(pinned)))
+    assert [r["k"] for r in out] == sorted(r["k"] for r in pinned)
+
+
+@pytest.mark.parametrize("strategy", ["auto", "bucket"])
+def test_deterministic_ordinal_input_is_not_pinned(spark, strategy):
+    from semantic_cpp_spark import indexing
+
+    before = len(indexing._PERSISTED)
+    df = _mk(spark, 200)
+    out = with_ordinal(df, ["key"], strategy=strategy, bucket_width=64)
+    assert sorted(r[IDX] for r in out.collect()) == list(range(200))
+    assert len(indexing._PERSISTED) == before
+
+
 # -- exact percentiles (stats.percentiles_exact_sorted) ---------------------
 
 _STATS_LOG = "semantic_cpp_spark.functions.stats"

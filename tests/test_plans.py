@@ -1008,3 +1008,106 @@ def test_lm_trigram_feeder_checkpoint_shape(spark):
     tri = feeders[0]
     assert tri.count("FileScan") == 1
     assert "HashAggregate" in tri and "partial" in tri
+
+
+def _python_pids_under_jvm() -> set:
+    """Python processes below a child of this process (the JVM): its
+    Python worker daemon and workers."""
+    import os
+
+    parent, comm = {}, {}
+    for d in filter(str.isdigit, os.listdir("/proc")):
+        try:
+            with open(f"/proc/{d}/stat") as f:
+                stat = f.read()
+        except OSError:
+            continue
+        parent[int(d)] = int(stat[stat.rfind(")") + 2:].split()[1])
+        comm[int(d)] = stat[stat.find("(") + 1:stat.rfind(")")]
+    out = set()
+    for pid in parent:
+        depth, p = 0, pid
+        while p and p != os.getpid():
+            depth, p = depth + 1, parent.get(p, 0)
+        if p and depth > 1 and comm[pid].startswith("python"):
+            out.add(pid)
+    return out
+
+
+def test_running_stats_is_native_stateful_aggregate(spark):
+    """Per-user running stats are an algebraic fold, so they run as
+    Spark's native stateful aggregate: a StateStoreSave over a partial
+    aggregate below the shuffle, no Python node in the plan, and no
+    Python worker started by the drain. Moving the operator back onto
+    applyInPandasWithState fails here."""
+    import re
+    import uuid
+
+    from semantic_cpp_spark.streaming import ops
+
+    before = _python_pids_under_jvm()
+    ev = ops.read_events_stream(spark, SF)
+    q = (
+        ops.running_stats_per_user(ev).writeStream.outputMode("update")
+        .format("memory").queryName(f"stats_pin_{uuid.uuid4().hex[:8]}").start()
+    )
+    try:
+        q.processAllAvailable()
+        plan = q._jsq.streamingQuery().lastExecution().executedPlan().toString()
+    finally:
+        q.stop()
+    save = plan.index("StateStoreSave")
+    exchange = plan.index("Exchange hashpartitioning", save)
+    assert "StateStoreRestore" in plan[save:exchange]
+    below = plan[exchange:]
+    assert "partial_count(1)" in below and "partial_sum(" in below, plan
+    assert not re.search(r"(?i)python|pandas|arrow", plan), plan
+    assert not _python_pids_under_jvm() - before
+
+
+# Spark jobs each bench.py headline query starts while it is built
+# (``fn(spark, sf)``: its eager probes, no main job), at this fixture,
+# with the parquet schema memo warm and the engine memos flushed, as
+# bench.py flushes them before every timed run. A new eager probe shows
+# up here as a changed count.
+_HEADLINE_BUILD_JOBS = {
+    "rel_q1_pricing_summary": 0,
+    "rel_q3_top_revenue": 0,
+    "rel_q5_nation_revenue": 0,
+    "rel_topk_per_segment": 0,
+    "sem_sort_stable": 4,
+    "sem_filter_rebases_idx": 4,
+    "agg_skew_kurt": 0,
+    "agg_quantiles": 4,
+    "grp_frequency_profile": 2,
+    "win_tumble": 2,
+    "win_slide": 2,
+    "dedup_minhash_lsh": 5,
+    "sim_cosine_topk": 0,
+    "txt_quality_score": 0,
+}
+
+
+def test_headline_build_jobs(spark, qs):
+    import uuid
+
+    import bench
+    from semantic_cpp_spark.indexing import release_ordinal_caches
+
+    assert list(_HEADLINE_BUILD_JOBS) == bench.BENCH_QUERIES
+    sc = spark.sparkContext
+    tag = f"build_jobs_{uuid.uuid4().hex[:8]}"
+    for q in bench.BENCH_QUERIES:  # loads every table: schema memo warm
+        qs[q](spark, SF)
+    for q in bench.BENCH_QUERIES:
+        release_ordinal_caches()
+        sc.setJobGroup(f"{tag}:{q}", q)
+        try:
+            qs[q](spark, SF)
+        finally:
+            sc._jsc.clearJobGroup()
+    release_ordinal_caches()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    got = {q: len(tracker.getJobIdsForGroup(f"{tag}:{q}")) for q in bench.BENCH_QUERIES}
+    assert got == _HEADLINE_BUILD_JOBS

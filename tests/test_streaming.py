@@ -80,18 +80,78 @@ def test_stateful_ops_across_micro_batches(spark, tmp_path):
     for r in out.collect():  # update mode appends one row per user per batch
         cur = latest.get(r["user_id"])
         if cur is None or r["n"] > cur[0]:
-            latest[r["user_id"]] = (r["n"], r["sum_value"])
+            latest[r["user_id"]] = (r["n"], r["sum_value"], r["sum_squares"])
+    v = F.col("value")
     batch = {
-        r["user_id"]: (r["n"], r["s"])
+        r["user_id"]: (r["n"], r["s"], r["s2"])
         for r in _batch_events(spark)
         .groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("s"))
+        .agg(F.count(F.lit(1)).alias("n"), F.sum(v).alias("s"),
+             F.sum(v * v).alias("s2"))
         .collect()
     }
     assert set(latest) == set(batch)
     for u in batch:
         assert latest[u][0] == batch[u][0]
         assert abs(latest[u][1] - batch[u][1]) < 1e-6
+        assert abs(latest[u][2] - batch[u][2]) <= 1e-9 * max(1.0, batch[u][2])
+
+
+def test_running_stats_matches_sql_contract(spark, tmp_path):
+    """``running_stats_per_user`` over three files, one per trigger,
+    against ``stream_running_stats``'s registered SQL: ``n`` counts rows
+    with a null value, the sums skip nulls, and a user whose values are
+    all null has null sums. Update mode emits one row per user and
+    micro-batch that touched it, carrying the running totals. Values are
+    binary fractions, so every sum is exact in any order."""
+    from pyspark.sql import types as T
+
+    from semantic_cpp_spark import registry
+
+    schema = T.StructType([
+        T.StructField("user_id", T.LongType()),
+        T.StructField("event_id", T.LongType()),
+        T.StructField("value", T.DoubleType()),
+    ])
+    files = [
+        [(1, 1.5), (2, None), (3, 2.0)],
+        [(1, None), (2, None), (3, -0.25), (4, 1.0)],
+        [(1, 2.25), (3, None), (2, None), (3, 0.5)],
+    ]
+    src = str(tmp_path / "stats_src")
+    eid = 0
+    for rows in files:
+        rows = [(u, eid + i, v) for i, (u, v) in enumerate(rows)]
+        eid += len(rows)
+        spark.createDataFrame(rows, schema).coalesce(1).write.mode("append").parquet(src)
+    stream = (spark.readStream.schema(schema)
+              .option("maxFilesPerTrigger", "1").parquet(src))
+    rows = ops.run_to_memory(
+        ops.running_stats_per_user(stream), "update", skip_no_data_batch=True
+    ).collect()
+
+    emitted, final = {}, {}
+    for r in rows:
+        u = r["user_id"]
+        emitted[u] = emitted.get(u, 0) + 1
+        if u not in final or r["n"] > final[u][0]:
+            final[u] = (r["n"], r["sum_value"], r["sum_squares"])
+    assert emitted == {1: 3, 2: 3, 3: 3, 4: 1}
+    assert final == {
+        1: (3, 3.75, 7.3125),
+        2: (3, None, None),
+        3: (4, 2.25, 4.3125),
+        4: (1, 1.0, 1.0),
+    }
+
+    sql = registry.oracle_sql()["stream_running_stats"].replace(
+        "FROM events", "FROM {events}")
+    batch = spark.read.schema(schema).parquet(src)
+    expect = {
+        r["user_id"]: (r["n"], r["sum_value"], r["sum_squares"])
+        for r in spark.sql(sql, events=batch).collect()
+    }
+    assert final == expect
 
 
 def test_count_windows_across_micro_batches(spark, tmp_path):
@@ -1165,7 +1225,7 @@ def test_nio_file_link_status_matches_stock_hadoop(spark, tmp_path):
 
 
 # -- per-key update folds vs the pandas route they replaced -----------------
-# The four applyInPandasWithState folds order a key's rows with numpy
+# The three applyInPandasWithState folds order a key's rows with numpy
 # instead of pd.concat + sort_values. The copies below are the pandas
 # bodies as they were; outputs and states must match bit for bit (floats
 # compared by bit pattern, so a changed summation order fails and NaN
@@ -1186,24 +1246,6 @@ class _State:
 
     def update(self, value):
         self.value = value
-
-
-def _pandas_stats_update(key, pdfs, state):
-    import pandas as pd
-
-    if state.exists:
-        n, s1, s2 = state.get
-    else:
-        n, s1, s2 = 0, 0.0, 0.0
-    rows = pd.concat(list(pdfs))
-    for v in rows.sort_values("event_id")["value"]:
-        n += 1
-        s1 += v
-        s2 += v * v
-    state.update((n, s1, s2))
-    yield pd.DataFrame(
-        {"user_id": [key[0]], "n": [n], "sum_value": [s1], "sum_squares": [s2]}
-    )
 
 
 def _pandas_count_window_update(size):
@@ -1343,14 +1385,6 @@ def test_fold_fixture_is_order_sensitive():
         zip([i for c in _value_chunks() for i in c["event_id"]], vals))]
     assert math.fsum(vals) == math.fsum(by_id)
     assert sum(vals) != sum(by_id)
-
-
-@pytest.mark.parametrize("state", [None, (2, 0.1, 0.01)])
-@pytest.mark.parametrize("null_at", [None, 6])
-def test_stats_update_matches_pandas_fold(state, null_at):
-    chunks = _value_chunks(null_at)
-    assert _fold(ops._stats_update, chunks, state) == _fold(
-        _pandas_stats_update, chunks, state)
 
 
 @pytest.mark.parametrize("state", [None, (20, 0.1, 2)])
