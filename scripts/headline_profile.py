@@ -9,9 +9,12 @@ query hides. This script runs the queries in one session, warms it for
 ``--warm`` passes, then for ``--passes`` passes measures per query and
 phase the CPU seconds of the driver, the JVM and its Python workers (read
 from /proc with ``perfbench.workloads.cpu_snapshot``, JIT compiler
-threads left out, as the benchmark's ``query_cpu_s``) and the Spark jobs
-the phase started. Every query starts with the engine's memos flushed
-(``release_ordinal_caches``), as in the benchmark's timed passes.
+threads left out, as the benchmark's ``query_cpu_s``), the Spark jobs
+the phase started and the generated classes it compiled (Janino compiles,
+from Spark's ``CodegenMetrics``; 0 once the session's codegen cache holds
+the query's classes). Every query starts with the engine's memos flushed
+(``release_ordinal_caches``), as in the benchmark's timed passes. Job and
+compile counts are those of the last pass.
 
 Usage: python scripts/headline_profile.py <sf_dir> [query ...] [--warm N] [--passes N]
 
@@ -31,19 +34,23 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
 from perfbench.workloads import HEADLINE_QUERIES, cpu_delta_s, cpu_snapshot  # noqa: E402
+from semantic_cpp_spark.session import codegen_compiles  # noqa: E402
 
 
 def _phase(spark, group, fn):
-    """(fn(), CPU seconds it took) with its Spark jobs tagged ``group``."""
+    """(fn(), CPU seconds it took, classes it compiled) with its Spark
+    jobs tagged ``group``."""
     sc = spark.sparkContext
     sc.setJobGroup(group, group)
     try:
+        n = codegen_compiles(spark)
         a = cpu_snapshot(os.getpid())
         out = fn()
         b = cpu_snapshot(os.getpid())
+        n = codegen_compiles(spark) - n
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, cpu_delta_s(a, b)[0]
+    return out, cpu_delta_s(a, b)[0], n
 
 
 def main() -> None:
@@ -62,16 +69,20 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     qs = registry.queries()
     cpu = {q: {"build": [], "exec": []} for q in args.queries}
+    compiled = {}
     last = args.warm + args.passes - 1
     try:
         for p in range(args.warm + args.passes):
             for q in args.queries:
                 release_ordinal_caches()
-                df, build = _phase(spark, f"{q}:{p}:build", lambda: qs[q](spark, args.sf_dir))
-                _, run = _phase(
+                df, build, build_n = _phase(
+                    spark, f"{q}:{p}:build", lambda: qs[q](spark, args.sf_dir)
+                )
+                _, run, run_n = _phase(
                     spark, f"{q}:{p}:exec",
                     lambda: df.write.format("noop").mode("overwrite").save(),
                 )
+                compiled[q] = (build_n, run_n)
                 if p >= args.warm:
                     cpu[q]["build"].append(build)
                     cpu[q]["exec"].append(run)
@@ -83,20 +94,22 @@ def main() -> None:
             out[q] = {
                 "build_cpu_s": round(statistics.median(cpu[q]["build"]), 3),
                 "build_jobs": len(tracker.getJobIdsForGroup(f"{q}:{last}:build")),
+                "build_compiles": compiled[q][0],
                 "exec_cpu_s": round(statistics.median(cpu[q]["exec"]), 3),
                 "exec_jobs": len(tracker.getJobIdsForGroup(f"{q}:{last}:exec")),
+                "exec_compiles": compiled[q][1],
             }
     finally:
         spark.stop()
 
-    print(f"{'query':<26}{'build_cpu_s':>12}{'jobs':>6}{'exec_cpu_s':>12}{'jobs':>6}")
-    for q, r in out.items():
-        print(f"{q:<26}{r['build_cpu_s']:>12.3f}{r['build_jobs']:>6}"
-              f"{r['exec_cpu_s']:>12.3f}{r['exec_jobs']:>6}")
-    tot = {k: round(sum(r[k] for r in out.values()), 3)
-           for k in ("build_cpu_s", "build_jobs", "exec_cpu_s", "exec_jobs")}
-    print(f"{'total':<26}{tot['build_cpu_s']:>12.3f}{tot['build_jobs']:>6}"
-          f"{tot['exec_cpu_s']:>12.3f}{tot['exec_jobs']:>6}")
+    print(f"{'query':<26}{'build_cpu_s':>12}{'jobs':>6}{'compiles':>9}"
+          f"{'exec_cpu_s':>12}{'jobs':>6}{'compiles':>9}")
+    cols = ("build_cpu_s", "build_jobs", "build_compiles",
+            "exec_cpu_s", "exec_jobs", "exec_compiles")
+    tot = {k: round(sum(r[k] for r in out.values()), 3) for k in cols}
+    for q, r in [*out.items(), ("total", tot)]:
+        print(f"{q:<26}{r['build_cpu_s']:>12.3f}{r['build_jobs']:>6}{r['build_compiles']:>9}"
+              f"{r['exec_cpu_s']:>12.3f}{r['exec_jobs']:>6}{r['exec_compiles']:>9}")
     print(json.dumps({"sf_dir": args.sf_dir, "warm": args.warm, "passes": args.passes,
                       "queries": out, "total": tot}))
 

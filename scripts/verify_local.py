@@ -6,18 +6,23 @@ sorted by name, exact match after canonicalisation; doubles compared to
 1e-9 relative as a diagnostic fallback so we can tell "tiny float drift"
 from "wrong answer").
 
+The summary line also gives the generated classes the sweep compiled
+(Janino compiles, from Spark's ``CodegenMetrics``), so a change in how
+often generated code is rebuilt shows without a profiler.
+
 Usage: python scripts/verify_local.py [sf_dir] [name_filter]
 """
 
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
@@ -63,7 +68,7 @@ def main():
     name_filter = sys.argv[2] if len(sys.argv) > 2 else ""
 
     import __spark_entry__ as e
-    from semantic_cpp_spark.session import get_spark
+    from semantic_cpp_spark.session import codegen_compiles, get_spark
 
     spark = get_spark("verify_local")
     con = duckdb.connect()
@@ -72,6 +77,7 @@ def main():
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
         )
 
+    compiled0, t_sweep = codegen_compiles(spark), time.time()
     qs, oracles = e.queries(), e.oracle_sql()
     passed = failed = skipped = 0
     for name, fn in qs.items():
@@ -119,7 +125,9 @@ def main():
         else:
             print(f"PASS {name} ({len(srows)} rows, {time.time()-t0:.1f}s)", flush=True)
             passed += 1
-    print(f"\n{passed} passed, {failed} failed, {skipped} rows-only")
+    print(f"\n{passed} passed, {failed} failed, {skipped} rows-only, "
+          f"{codegen_compiles(spark) - compiled0} classes compiled, "
+          f"{time.time() - t_sweep:.0f} s")
     return 1 if failed else 0
 
 

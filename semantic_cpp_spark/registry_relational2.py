@@ -16,6 +16,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from semantic_cpp_spark.registry import register
+from semantic_cpp_spark.relational import money, money_sum
 from semantic_cpp_spark.session import load_table
 
 
@@ -23,7 +24,9 @@ from semantic_cpp_spark.session import load_table
     "rel_q7_nation_volume",
     """SELECT sn.n_name AS supp_nation, cn.n_name AS cust_nation,
               year(l_shipdate) AS l_year,
-              round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
+              CAST(round(sum(CAST(l_extendedprice AS DECIMAL(15,2))
+                             * (1 - CAST(l_discount AS DECIMAL(15,2)))), 2) AS DOUBLE)
+                AS revenue
        FROM lineitem
        JOIN orders   ON l_orderkey = o_orderkey
        JOIN supplier ON l_suppkey = s_suppkey
@@ -63,18 +66,16 @@ def rel_q7(spark, sf_dir):
         .groupBy(
             "supp_nation", "cust_nation", F.year("l_shipdate").cast("long").alias("l_year")
         )
-        .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("revenue")
-        )
+        .agg(money_sum(money("l_extendedprice") * (1 - money("l_discount"))).alias("revenue"))
     )
 
 
 @register(
     "rel_q10_returned_items",
     """SELECT c_custkey, c_name, n_name,
-              round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
+              CAST(round(sum(CAST(l_extendedprice AS DECIMAL(15,2))
+                             * (1 - CAST(l_discount AS DECIMAL(15,2)))), 2) AS DOUBLE)
+                AS revenue,
               round(any_value(c_acctbal), 2) AS c_acctbal
        FROM lineitem
        JOIN orders   ON l_orderkey = o_orderkey
@@ -99,9 +100,7 @@ def rel_q10(spark, sf_dir):
         .join(F.broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey"))
         .groupBy("c_custkey", "c_name", "n_name")
         .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("revenue"),
+            money_sum(money("l_extendedprice") * (1 - money("l_discount"))).alias("revenue"),
             F.round(F.any_value("c_acctbal"), 2).alias("c_acctbal"),
         )
         .orderBy(F.col("revenue").desc(), "c_custkey")
@@ -141,7 +140,9 @@ def rel_q14(spark, sf_dir):
 
 @register(
     "rel_q19_bracketed_discounts",
-    """SELECT round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
+    """SELECT CAST(round(sum(CAST(l_extendedprice AS DECIMAL(15,2))
+                             * (1 - CAST(l_discount AS DECIMAL(15,2)))), 2) AS DOUBLE)
+                AS revenue
        FROM lineitem JOIN part ON l_partkey = p_partkey
        WHERE (p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 15
               AND l_quantity BETWEEN 1 AND 20)
@@ -166,11 +167,7 @@ def rel_q19(spark, sf_dir):
     return (
         li.join(part, F.col("l_partkey") == F.col("p_partkey"))
         .filter(cond)
-        .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("revenue")
-        )
+        .agg(money_sum(money("l_extendedprice") * (1 - money("l_discount"))).alias("revenue"))
     )
 
 
@@ -227,7 +224,8 @@ def rel_anti(spark, sf_dir):
 
 @register(
     "rel_q6_forecast_revenue",
-    """SELECT round(sum(l_extendedprice * l_discount), 2) AS revenue,
+    """SELECT CAST(round(sum(CAST(l_extendedprice AS DECIMAL(15,2))
+                             * CAST(l_discount AS DECIMAL(15,2))), 2) AS DOUBLE) AS revenue,
               count(*) AS n_lines
        FROM lineitem
        WHERE l_shipdate >= '1996-01-01' AND l_shipdate < '1997-01-01'
@@ -248,9 +246,7 @@ def rel_q6(spark, sf_dir):
             & (F.col("l_quantity") < 24)
         )
         .agg(
-            F.round(F.sum(F.col("l_extendedprice") * F.col("l_discount")), 2).alias(
-                "revenue"
-            ),
+            money_sum(money("l_extendedprice") * money("l_discount")).alias("revenue"),
             F.count(F.lit(1)).alias("n_lines"),
         )
     )
@@ -906,9 +902,10 @@ def rel_scd2_customer_history(spark, sf_dir):
               round(sum(CASE WHEN l.l_returnflag = 'R'
                              THEN l.l_quantity ELSE 0 END)
                     / sum(l.l_quantity), 6) AS return_rate,
-              round(sum(CASE WHEN l.l_returnflag = 'R'
-                             THEN l.l_extendedprice * (1 - l.l_discount)
-                             ELSE 0 END), 2) AS revenue_at_risk
+              CAST(round(sum(CASE WHEN l.l_returnflag = 'R'
+                             THEN CAST(l.l_extendedprice AS DECIMAL(15,2))
+                                  * (1 - CAST(l.l_discount AS DECIMAL(15,2)))
+                             ELSE 0 END), 2) AS DOUBLE) AS revenue_at_risk
        FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
        GROUP BY p.p_brand""",
 )
@@ -921,7 +918,7 @@ def rel_brand_return_rate(spark, sf_dir):
     li = load_table(spark, sf_dir, "lineitem")
     p = load_table(spark, sf_dir, "part")
     ret = F.col("l_returnflag") == "R"
-    rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
+    rev = money("l_extendedprice") * (1 - money("l_discount"))
     return (
         li.join(p, li.l_partkey == p.p_partkey)
         .groupBy("p_brand")
@@ -934,6 +931,6 @@ def rel_brand_return_rate(spark, sf_dir):
                 / F.sum("l_quantity"),
                 6,
             ).alias("return_rate"),
-            F.round(F.sum(F.when(ret, rev).otherwise(0)), 2).alias("revenue_at_risk"),
+            money_sum(F.when(ret, rev).otherwise(0)).alias("revenue_at_risk"),
         )
     )

@@ -15,10 +15,27 @@ shuffle-hash/sort-merge beyond it; tests/test_plans.py pins both halves.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from semantic_cpp_spark.session import load_table
+
+
+def money(name: str) -> Column:
+    """A 2-decimal money or rate column as an exact ``DECIMAL(15,2)``.
+
+    Products of such columns have 4 (or 6) decimals, so a 2-decimal
+    rounding of their sum can land exactly on a half cent, and then a
+    double sum rounds either way with the summation order (Spark and
+    DuckDB disagreed at some seeds). Summed as decimals the value is
+    exact; it is rounded half-up once and then cast to DOUBLE, the same
+    in the registered SQL."""
+    return F.col(name).cast("decimal(15,2)")
+
+
+def money_sum(amount: Column) -> Column:
+    """``CAST(round(sum(amount), 2) AS DOUBLE)`` of an exact decimal."""
+    return F.round(F.sum(amount), 2).cast("double")
 
 
 def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -30,16 +47,16 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     each partition to ≤ |flag×status| rows before the shuffle.
     """
     li = load_table(spark, sf_dir, "lineitem")
-    disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    charge = disc_price * (1 + F.col("l_tax"))
+    disc_price = money("l_extendedprice") * (1 - money("l_discount"))
+    charge = disc_price * (1 + money("l_tax"))
     return (
         li.filter(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp"))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
             F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
             F.round(F.sum("l_extendedprice"), 2).alias("sum_base_price"),
-            F.round(F.sum(disc_price), 2).alias("sum_disc_price"),
-            F.round(F.sum(charge), 2).alias("sum_charge"),
+            money_sum(disc_price).alias("sum_disc_price"),
+            money_sum(charge).alias("sum_charge"),
             F.round(F.avg("l_quantity"), 6).alias("avg_qty"),
             F.round(F.avg("l_extendedprice"), 6).alias("avg_price"),
             F.round(F.avg("l_discount"), 6).alias("avg_disc"),
@@ -55,8 +72,13 @@ SELECT
   l_linestatus,
   round(sum(l_quantity), 2)                                    AS sum_qty,
   round(sum(l_extendedprice), 2)                               AS sum_base_price,
-  round(sum(l_extendedprice * (1 - l_discount)), 2)            AS sum_disc_price,
-  round(sum(l_extendedprice * (1 - l_discount) * (1 + l_tax)), 2) AS sum_charge,
+  CAST(round(sum(CAST(l_extendedprice AS DECIMAL(15,2))
+                 * (1 - CAST(l_discount AS DECIMAL(15,2)))), 2) AS DOUBLE)
+                                                               AS sum_disc_price,
+  CAST(round(sum(CAST(l_extendedprice AS DECIMAL(15,2))
+                 * (1 - CAST(l_discount AS DECIMAL(15,2)))
+                 * (1 + CAST(l_tax AS DECIMAL(15,2)))), 2) AS DOUBLE)
+                                                               AS sum_charge,
   round(avg(l_quantity), 6)                                    AS avg_qty,
   round(avg(l_extendedprice), 6)                               AS avg_price,
   round(avg(l_discount), 6)                                    AS avg_disc,
@@ -81,12 +103,12 @@ def q3_top_unshipped(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     orders = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")
-    revenue = F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount")))
+    revenue = money_sum(money("l_extendedprice") * (1 - money("l_discount")))
     return (
         li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
         .join(cust, F.col("o_custkey") == F.col("c_custkey"))
         .groupBy("o_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(F.round(revenue, 2).alias("revenue"))
+        .agg(revenue.alias("revenue"))
         .select(
             "o_orderkey",
             F.date_format("o_orderdate", "yyyy-MM-dd").alias("o_orderdate"),
@@ -100,7 +122,8 @@ def q3_top_unshipped(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 Q3_SQL = """
 SELECT o_orderkey, strftime(o_orderdate, '%Y-%m-%d') AS o_orderdate, o_orderpriority,
-       round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
+       CAST(round(sum(CAST(l_extendedprice AS DECIMAL(15,2))
+                      * (1 - CAST(l_discount AS DECIMAL(15,2)))), 2) AS DOUBLE) AS revenue
 FROM lineitem
 JOIN orders   ON l_orderkey = o_orderkey
 JOIN customer ON o_custkey = c_custkey
@@ -122,7 +145,7 @@ def q5_nation_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     supp = load_table(spark, sf_dir, "supplier")
     orders = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")
-    revenue = F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount")))
+    revenue = money_sum(money("l_extendedprice") * (1 - money("l_discount")))
     return (
         li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
         .join(supp, F.col("l_suppkey") == F.col("s_suppkey"))
@@ -134,13 +157,15 @@ def q5_nation_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(nation), F.col("s_nationkey") == F.col("n_nationkey"))
         .join(F.broadcast(region), F.col("n_regionkey") == F.col("r_regionkey"))
         .groupBy("n_name")
-        .agg(F.round(revenue, 2).alias("revenue"))
+        .agg(revenue.alias("revenue"))
         .orderBy(F.col("revenue").desc(), F.col("n_name"))
     )
 
 
 Q5_SQL = """
-SELECT n_name, round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
+SELECT n_name,
+       CAST(round(sum(CAST(l_extendedprice AS DECIMAL(15,2))
+                      * (1 - CAST(l_discount AS DECIMAL(15,2)))), 2) AS DOUBLE) AS revenue
 FROM lineitem
 JOIN orders   ON l_orderkey = o_orderkey
 JOIN supplier ON l_suppkey = s_suppkey

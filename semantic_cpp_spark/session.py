@@ -25,6 +25,23 @@ directory (see that module). The engine's parent directory goes on the
 workers' ``PYTHONPATH`` so the daemon does not depend on the JVM's
 working directory. Every call logs the filesystem and the daemon in use,
 and why, in one INFO line.
+
+Generated-code cache. Whole-stage codegen compiles each operator
+pipeline's Java source with Janino and keeps the class in one per-JVM
+LRU of ``spark.sql.codegen.cache.maxEntries`` classes, 100 by default.
+An LRU under a repeating query mix misses almost every lookup once the
+loop's distinct classes exceed it, and none once they fit: one pass of
+the 10 perfbench headline queries needs 151 classes, so at 100 it
+recompiled 137 of them on every pass and ran them interpreted until the
+JIT caught up again. ``get_spark`` sets 4096, which covers the engine's
+largest loop, a full registry sweep (~3,200 classes at sf0.001;
+``bench.py``'s 14 queries need 238). A retained class costs ~8 KB of
+class metadata, so a full cache holds ~32 MB (SCALING.md "Generated code
+that stays compiled"). The conf is static, so it binds only when this
+call launches the JVM; unlike the two settings above it is not limited
+to local masters, since every executor JVM keeps its own cache and
+long-lived executors running a repeated mix thrash it the same way. The
+INFO line gives the size bound.
 """
 
 from __future__ import annotations
@@ -82,6 +99,11 @@ STOCK_DAEMON = "pyspark.daemon"
 _DAEMON_KEY = "spark.python.daemon.module"
 _PYPATH_KEY = "spark.executorEnv.PYTHONPATH"
 _ENGINE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_CODEGEN_CACHE_KEY = "spark.sql.codegen.cache.maxEntries"
+# Spark's default; what a JVM this call did not launch keeps.
+STOCK_CODEGEN_CACHE_ENTRIES = 100
+# Generated classes the JVM keeps compiled; sized in the module docstring.
+CODEGEN_CACHE_ENTRIES = 4096
 
 
 def _javac() -> str | None:
@@ -203,6 +225,12 @@ def get_spark(
     - Fork-free local filesystem and the ``pyworker`` Python daemon when
       this call launches a local[…] JVM (see the module docstring);
       logged at INFO either way.
+    - A generated-code cache of ``CODEGEN_CACHE_ENTRIES`` (4096) classes,
+      on any master, when this call launches the JVM: it is a static conf,
+      so a reused JVM keeps the size it was started with (Spark's default
+      is 100). Sized to cover a full registry sweep's ~3,200 classes, at
+      ~8 KB of class metadata each; see the module docstring. The INFO
+      line gives the bound size.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
     master = master or os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
@@ -233,6 +261,7 @@ def get_spark(
         # hostile-byte fuzzing exposed this (r6); REPLACE restores the
         # reference's policy. Pinned by tests/test_charsets_hypothesis.py.
         .config("spark.sql.legacy.codingErrorAction", "true")
+        .config(_CODEGEN_CACHE_KEY, str(CODEGEN_CACHE_ENTRIES))
     )
     # Under spark-submit the JVM is up before Python and hands over its
     # gateway port; either way this call's classpath could not apply.
@@ -251,10 +280,12 @@ def get_spark(
     spark.sparkContext.setLogLevel("WARN")
     bound = spark.sparkContext.getConf()
     _LOG.info(
-        "get_spark: local filesystem %s (%s), python worker daemon %s",
+        "get_spark: local filesystem %s (%s), python worker daemon %s, "
+        "codegen cache %s classes",
         bound.get(_FS_KEY, STOCK_FS),
         fs_reason,
         bound.get(_DAEMON_KEY, STOCK_DAEMON),
+        bound.get(_CODEGEN_CACHE_KEY, str(STOCK_CODEGEN_CACHE_ENTRIES)),
     )
     # ADVICE r15: builder confs only take effect when THIS call launches
     # the JVM; getOrCreate against a pre-existing session silently keeps
@@ -276,6 +307,13 @@ def get_spark(
     except Exception:
         pass
     return spark
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Generated classes Janino has compiled in this JVM so far (Spark's
+    ``CodegenMetrics``): a codegen-cache miss adds one, a hit none."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str):

@@ -1111,3 +1111,32 @@ def test_headline_build_jobs(spark, qs):
     tracker = sc.statusTracker()
     got = {q: len(tracker.getJobIdsForGroup(f"{tag}:{q}")) for q in bench.BENCH_QUERIES}
     assert got == _HEADLINE_BUILD_JOBS
+
+
+def test_headline_codegen_stays_compiled(spark, qs):
+    """A repeated pass of the headline queries compiles no generated code.
+
+    Whole-stage codegen classes live in one per-JVM LRU; ``get_spark``
+    sizes it to the engine's working set. A cache smaller than a pass's
+    distinct classes recompiles almost all of them on every pass, and so
+    does a query whose generated code carries a literal that changes per
+    call. The first pass warms the cache; the second runs as the benchmark
+    does (memos flushed, then a noop write, where most classes compile)
+    and must not move Janino's compile count."""
+    import bench
+    from semantic_cpp_spark.indexing import release_ordinal_caches
+    from semantic_cpp_spark.session import codegen_compiles
+
+    def run(q):
+        release_ordinal_caches()
+        qs[q](spark, SF).write.format("noop").mode("overwrite").save()
+
+    for q in bench.BENCH_QUERIES:
+        run(q)
+    deltas = {}
+    for q in bench.BENCH_QUERIES:
+        before = codegen_compiles(spark)
+        run(q)
+        deltas[q] = codegen_compiles(spark) - before
+    release_ordinal_caches()
+    assert not any(deltas.values()), f"classes compiled per query on a warm pass: {deltas}"

@@ -309,3 +309,107 @@ def test_every_oracle_result_type_is_canonical():
         f"oracle result columns outside the canonical type set "
         f"(cast them, e.g. ::BIGINT): {offenders}"
     )
+
+
+# Three returned lines of one BUILDING order whose exact discounted
+# revenue, 123187.5750, and exact discount amount, 3688.8550, each end on
+# a half cent; summed as doubles in any order they are 123187.57499999998
+# and 3688.8549999999996, which round down instead of up. Each line passes
+# the filters of every query below.
+_HALF_CENT_LINES = [  # (l_extendedprice, l_discount, l_tax)
+    (11743.79, 0.02, 0.06),
+    (76503.87, 0.03, 0.00),
+    (38628.77, 0.03, 0.08),
+]
+
+
+def _write_half_cent_fixture(sf_dir, cust_nation: int) -> None:
+    """The lines above, supplied from NATION_1 to a customer in
+    ``cust_nation`` (``rel_q5`` needs the same nation, ``rel_q7`` another)."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    i64, i32, f64, s = pa.int64(), pa.int32(), pa.float64(), pa.string()
+    ts = pa.timestamp("us")
+    n = len(_HALF_CENT_LINES)
+    tables = {
+        "region": {"r_regionkey": (i32, [0]), "r_name": (s, ["ASIA"])},
+        "nation": {"n_nationkey": (i32, [1, 2]), "n_name": (s, ["NATION_1", "NATION_2"]),
+                   "n_regionkey": (i32, [0, 0])},
+        "customer": {"c_custkey": (i64, [1]), "c_name": (s, ["C1"]),
+                     "c_nationkey": (i32, [cust_nation]), "c_acctbal": (f64, [0.0]),
+                     "c_mktsegment": (s, ["BUILDING"])},
+        "supplier": {"s_suppkey": (i64, [1]), "s_name": (s, ["S1"]),
+                     "s_nationkey": (i32, [1]), "s_acctbal": (f64, [0.0])},
+        "part": {"p_partkey": (i64, [1]), "p_name": (s, ["P1"]), "p_brand": (s, ["Brand#1"]),
+                 "p_type": (s, ["PROMO"]), "p_size": (i32, [5]), "p_retailprice": (f64, [1.0])},
+        "orders": {"o_orderkey": (i64, [1]), "o_custkey": (i64, [1]),
+                   "o_orderstatus": (s, ["F"]), "o_totalprice": (f64, [0.0]),
+                   "o_orderdate": (ts, [datetime.datetime(1996, 1, 10)]),
+                   "o_orderpriority": (s, ["1-URGENT"])},
+        "lineitem": {
+            "l_orderkey": (i64, [1] * n), "l_partkey": (i64, [1] * n),
+            "l_suppkey": (i64, [1] * n), "l_linenumber": (i32, list(range(1, n + 1))),
+            "l_quantity": (f64, [5.0] * n),
+            "l_extendedprice": (f64, [p for p, _, _ in _HALF_CENT_LINES]),
+            "l_discount": (f64, [d for _, d, _ in _HALF_CENT_LINES]),
+            "l_tax": (f64, [t for _, _, t in _HALF_CENT_LINES]),
+            "l_returnflag": (s, ["R"] * n), "l_linestatus": (s, ["F"] * n),
+            "l_shipdate": (ts, [datetime.datetime(1996, 3, 1)] * n),
+        },
+    }
+    for name, cols in tables.items():
+        pq.write_table(
+            pa.table({c: pa.array(v, type=t) for c, (t, v) in cols.items()}),
+            f"{sf_dir}/{name}.parquet",
+        )
+
+
+def test_money_sums_round_the_exact_decimal_half_up(spark, tmp_path):
+    """Queries that round a sum of products of 2-decimal columns to cents
+    answer the half-up rounding of the exact decimal sum, from Spark and
+    from the DuckDB oracle alike, where a double sum rounds the wrong way
+    at a half-cent tie."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    D = lambda v: Decimal(repr(v))  # noqa: E731
+    cents = lambda x: float(x.quantize(Decimal("0.01"), ROUND_HALF_UP))  # noqa: E731
+    disc = [D(p) * (1 - D(d)) for p, d, _ in _HALF_CENT_LINES]
+    charge = [x * (1 + D(t)) for x, (_, _, t) in zip(disc, _HALF_CENT_LINES)]
+    assert sum(disc) == Decimal("123187.5750")
+    assert sum(D(p) * D(d) for p, d, _ in _HALF_CENT_LINES) == Decimal("3688.8550")
+    assert round(sum(p * (1 - d) for p, d, _ in _HALF_CENT_LINES), 2) == 123187.57
+    assert round(sum(p * d for p, d, _ in _HALF_CENT_LINES), 2) == 3688.85
+    revenue = {"revenue": 123187.58}
+    want = {  # customer nation -> query -> column -> value
+        1: {
+            "rel_q1_pricing_summary": {"sum_disc_price": 123187.58,
+                                       "sum_charge": cents(sum(charge))},
+            "rel_q3_top_revenue": revenue,
+            "rel_q5_nation_revenue": revenue,
+            "rel_q6_forecast_revenue": {"revenue": 3688.86},
+            "rel_q10_returned_items": revenue,
+            "rel_q19_bracketed_discounts": revenue,
+            "rel_brand_return_rate": {"revenue_at_risk": 123187.58},
+        },
+        2: {"rel_q7_nation_volume": revenue},
+    }
+    qs, sql = registry.queries(), registry.oracle_sql()
+    got, expect = {}, {}
+    for cust_nation, queries in want.items():
+        sf_dir = tmp_path / f"cust_nation_{cust_nation}"
+        sf_dir.mkdir()
+        _write_half_cent_fixture(sf_dir, cust_nation)
+        con = duckdb.connect()
+        for t in ("region", "nation", "customer", "supplier", "part", "orders", "lineitem"):
+            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
+        for name, cols in queries.items():
+            (row,) = qs[name](spark, str(sf_dir)).collect()
+            res = con.execute(sql[name])
+            (orow,) = res.fetchall()
+            oracle = dict(zip([d[0] for d in res.description], orow))
+            got[name] = {c: (row[c], oracle[c]) for c in cols}
+            expect[name] = {c: (v, v) for c, v in cols.items()}
+    assert got == expect

@@ -1170,14 +1170,17 @@ def test_nio_fs_jar_is_cached_outside_repo_and_tmpdir(spark):
 def test_get_spark_logs_one_local_fs_line(spark, caplog):
     import logging
 
-    from semantic_cpp_spark.session import NIO_FS, PY_DAEMON, get_spark
+    from semantic_cpp_spark.session import (
+        CODEGEN_CACHE_ENTRIES, NIO_FS, PY_DAEMON, get_spark,
+    )
 
     with caplog.at_level(logging.INFO, logger="semantic_cpp_spark.session"):
         assert get_spark("tests", master="local[4]", shuffle_partitions=4) is spark
     lines = [r.getMessage() for r in caplog.records if "local filesystem" in r.getMessage()]
     assert lines == [
         f"get_spark: local filesystem {NIO_FS} (existing JVM), "
-        f"python worker daemon {PY_DAEMON}"
+        f"python worker daemon {PY_DAEMON}, "
+        f"codegen cache {CODEGEN_CACHE_ENTRIES} classes"
     ]
 
 
