@@ -89,15 +89,15 @@ def main() -> None:
     # steady-state number comparable across rounds without chasing it.
     runs = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3")))
 
-    # Cache-flush protocol (VERDICT r15 #3 — de-gaming): several
-    # operators keep plan-keyed persisted-intermediate memos
-    # (indexing._RANGE_CACHE, dedup._SIG_CACHE, eventflow._DF_MEMO).
-    # They are a legitimate production feature (reusing a signature
-    # index across queries in one session), but left alone here the
-    # UNTIMED warm-up would populate them and every timed run would
-    # measure warm persisted state. Flushing between the warm-up and
-    # each timed run makes every timed run rebuild its persisted
-    # intermediates from the parquet inputs INSIDE the timed region.
+    # Cache-flush protocol (VERDICT r15 #3 — de-gaming): the engine
+    # keeps probe results and persisted intermediates in one plan-keyed
+    # memo (indexing.memo). It is a legitimate production feature
+    # (reusing a signature index across queries in one session), but
+    # left alone here the UNTIMED warm-up would populate it and every
+    # timed run would measure warm persisted state. Flushing between the
+    # warm-up and each timed run makes every timed run rebuild its
+    # persisted intermediates from the parquet inputs INSIDE the timed
+    # region.
     # The warm-up itself stays: it pays the JIT / parquet-footer /
     # Arrow-init costs that are session properties, not query work.
     from semantic_cpp_spark.indexing import release_ordinal_caches

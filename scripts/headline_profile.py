@@ -12,9 +12,12 @@ from /proc with ``perfbench.workloads.cpu_snapshot``, JIT compiler
 threads left out, as the benchmark's ``query_cpu_s``), the Spark jobs
 the phase started and the generated classes it compiled (Janino compiles,
 from Spark's ``CodegenMetrics``; 0 once the session's codegen cache holds
-the query's classes). Every query starts with the engine's memos flushed
-(``release_ordinal_caches``), as in the benchmark's timed passes. Job and
-compile counts are those of the last pass.
+the query's classes). Every query starts with the engine's memo flushed
+(``release_ordinal_caches``), as in the benchmark's timed passes, so its
+build should read 0 memo hits; the misses count its memoised probes and
+persists (``indexing.memo_counts``). Job, compile and memo counts are
+those of the last pass; the JSON's total also splits memo misses by
+lookup kind.
 
 Usage: python scripts/headline_profile.py <sf_dir> [query ...] [--warm N] [--passes N]
 
@@ -29,6 +32,7 @@ import json
 import os
 import statistics
 import sys
+from collections import Counter
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
@@ -62,19 +66,20 @@ def main() -> None:
     args = ap.parse_args()
 
     from semantic_cpp_spark import registry
-    from semantic_cpp_spark.indexing import release_ordinal_caches
+    from semantic_cpp_spark.indexing import memo_counts, release_ordinal_caches
     from semantic_cpp_spark.session import get_spark
 
     spark = get_spark("headline_profile")
     spark.sparkContext.setLogLevel("ERROR")
     qs = registry.queries()
     cpu = {q: {"build": [], "exec": []} for q in args.queries}
-    compiled = {}
+    compiled, memo = {}, {}
     last = args.warm + args.passes - 1
     try:
         for p in range(args.warm + args.passes):
             for q in args.queries:
                 release_ordinal_caches()
+                before = memo_counts()
                 df, build, build_n = _phase(
                     spark, f"{q}:{p}:build", lambda: qs[q](spark, args.sf_dir)
                 )
@@ -83,6 +88,7 @@ def main() -> None:
                     lambda: df.write.format("noop").mode("overwrite").save(),
                 )
                 compiled[q] = (build_n, run_n)
+                memo[q] = memo_counts() - before
                 if p >= args.warm:
                     cpu[q]["build"].append(build)
                     cpu[q]["exec"].append(run)
@@ -98,18 +104,27 @@ def main() -> None:
                 "exec_cpu_s": round(statistics.median(cpu[q]["exec"]), 3),
                 "exec_jobs": len(tracker.getJobIdsForGroup(f"{q}:{last}:exec")),
                 "exec_compiles": compiled[q][1],
+                "memo_hits": memo[q]["hits"],
+                "memo_misses": memo[q]["misses"],
             }
     finally:
         spark.stop()
 
     print(f"{'query':<26}{'build_cpu_s':>12}{'jobs':>6}{'compiles':>9}"
-          f"{'exec_cpu_s':>12}{'jobs':>6}{'compiles':>9}")
+          f"{'exec_cpu_s':>12}{'jobs':>6}{'compiles':>9}{'memo_hits':>10}{'memo_misses':>12}")
     cols = ("build_cpu_s", "build_jobs", "build_compiles",
-            "exec_cpu_s", "exec_jobs", "exec_compiles")
+            "exec_cpu_s", "exec_jobs", "exec_compiles", "memo_hits", "memo_misses")
     tot = {k: round(sum(r[k] for r in out.values()), 3) for k in cols}
     for q, r in [*out.items(), ("total", tot)]:
         print(f"{q:<26}{r['build_cpu_s']:>12.3f}{r['build_jobs']:>6}{r['build_compiles']:>9}"
-              f"{r['exec_cpu_s']:>12.3f}{r['exec_jobs']:>6}{r['exec_compiles']:>9}")
+              f"{r['exec_cpu_s']:>12.3f}{r['exec_jobs']:>6}{r['exec_compiles']:>9}"
+              f"{r['memo_hits']:>10}{r['memo_misses']:>12}")
+    by_kind = sum(memo.values(), Counter())
+    tot["memo_misses_by_kind"] = {
+        k.removesuffix(" misses"): v for k, v in sorted(by_kind.items())
+        if k.endswith(" misses") and k != "misses"
+    }
+    print(f"memo misses by kind: {tot['memo_misses_by_kind']}")
     print(json.dumps({"sf_dir": args.sf_dir, "warm": args.warm, "passes": args.passes,
                       "queries": out, "total": tot}))
 

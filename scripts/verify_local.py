@@ -8,7 +8,9 @@ from "wrong answer").
 
 The summary line also gives the generated classes the sweep compiled
 (Janino compiles, from Spark's ``CodegenMetrics``), so a change in how
-often generated code is rebuilt shows without a profiler.
+often generated code is rebuilt shows without a profiler, and the
+engine memo's hits and misses over the sweep (``indexing.memo_counts``;
+the sweep never flushes the memo, so queries over one plan share it).
 
 Usage: python scripts/verify_local.py [sf_dir] [name_filter]
 """
@@ -68,6 +70,7 @@ def main():
     name_filter = sys.argv[2] if len(sys.argv) > 2 else ""
 
     import __spark_entry__ as e
+    from semantic_cpp_spark.indexing import memo_counts
     from semantic_cpp_spark.session import codegen_compiles, get_spark
 
     spark = get_spark("verify_local")
@@ -77,7 +80,7 @@ def main():
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
         )
 
-    compiled0, t_sweep = codegen_compiles(spark), time.time()
+    compiled0, memo0, t_sweep = codegen_compiles(spark), memo_counts(), time.time()
     qs, oracles = e.queries(), e.oracle_sql()
     passed = failed = skipped = 0
     for name, fn in qs.items():
@@ -125,8 +128,10 @@ def main():
         else:
             print(f"PASS {name} ({len(srows)} rows, {time.time()-t0:.1f}s)", flush=True)
             passed += 1
+    memo = memo_counts() - memo0
     print(f"\n{passed} passed, {failed} failed, {skipped} rows-only, "
           f"{codegen_compiles(spark) - compiled0} classes compiled, "
+          f"{memo['hits']} memo hits, {memo['misses']} memo misses, "
           f"{time.time() - t_sweep:.0f} s")
     return 1 if failed else 0
 

@@ -30,7 +30,8 @@ sources guarantee one (event_id, doc_id, ... or an explicit position).
 
 from __future__ import annotations
 
-from typing import Iterable, Union
+from collections import Counter
+from typing import Any, Callable, Iterable, Union
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -41,39 +42,62 @@ IDX = "__idx"
 _PID = "__sem_pid"
 _OFF = "__sem_off"
 
-# density-probe memo: (semanticHash, input-file-snapshot hash, key) →
-# (lo, n, dense). The auto strategy's probe is an eager aggregate per
-# with_ordinal call; chained re-basing ops would otherwise re-scan the key
-# column at every plan-construction step. semanticHash identifies the
-# logical plan and the file-snapshot hash ties it to the data listing, so
-# a re-read after append/overwrite misses the memo instead of serving
-# stale density. Bounded FIFO so long sessions can't grow it unboundedly.
-_PROBE_CACHE: dict[tuple[int, int, str], tuple[int, int, bool]] = {}
-_PROBE_CACHE_MAX = 512
+# The engine's one plan-keyed memo: (analyzed semanticHash, input-file-
+# snapshot hash, *tag) → a probe result or a pinned DataFrame. The hash
+# identifies the logical plan and the file snapshot ties it to the data
+# listing: appending a file to a source directory leaves semanticHash
+# unchanged (a file index compares by root paths), so a re-read after
+# append/overwrite misses instead of serving stale results. Bounded FIFO
+# so a long session cannot grow it without limit; flushed only by
+# release_ordinal_caches at session boundaries.
+_MEMO: dict = {}
+_MEMO_MAX = 512
 
-# range-strategy persists outstanding in this session (advisor r1: these
-# leaked). Lifetime must span every materialisation of the result plan —
-# laziness makes the "right" unpersist moment unknowable — so we register
-# them and let callers flush at natural boundaries.
+# lookups since process start: "hits", "misses", "<tag> hits", "<tag> misses"
+_MEMO_COUNTS: Counter = Counter()
+
+# persists outstanding in this session: every memoised persist is made by
+# pin. Lifetime must span every materialisation of plans built on them —
+# laziness makes the "right" unpersist moment unknowable — so a memo
+# eviction never unpersists; callers flush at natural boundaries.
 _PERSISTED: list = []
 
-# range-strategy persist memo: (semanticHash, file-snapshot hash, keys, n)
-# → the persisted range-partitioned DataFrame, so identical plans reuse one
-# cache entry instead of re-persisting per call.
-_RANGE_CACHE: dict = {}
 
-# other modules with plan-keyed persist memos (pipeline.dedup) register a
-# flush callback here so release_ordinal_caches clears the whole engine.
-_RELEASE_HOOKS: list = []
+def memo(df: DataFrame, tag: tuple, compute: Callable[[], Any]) -> Any:
+    """``compute()``'s value for ``df``'s plan and file snapshot under
+    ``tag`` (its first element names the lookup kind), computed once per
+    session between flushes. A persist made inside ``compute`` must go
+    through ``pin``."""
+    key = (
+        df._jdf.queryExecution().analyzed().semanticHash(),
+        hash(tuple(sorted(df.inputFiles()))),
+        *tag,
+    )
+    hit = key in _MEMO
+    outcome = "hits" if hit else "misses"
+    _MEMO_COUNTS.update((outcome, f"{tag[0]} {outcome}"))
+    if not hit:
+        value = compute()
+        if len(_MEMO) >= _MEMO_MAX:
+            _MEMO.pop(next(iter(_MEMO)))
+        _MEMO[key] = value
+    return _MEMO[key]
+
+
+def memo_counts() -> Counter:
+    """Memo lookups since the process started: ``"hits"``, ``"misses"``
+    and the same per lookup kind (``"density misses"``, ...)."""
+    return Counter(_MEMO_COUNTS)
 
 
 def release_ordinal_caches() -> int:
-    """Unpersist every range-strategy input cached by with_ordinal; call
-    at session boundaries (bench teardown, test fixture finalizers). Any
-    later re-materialisation of a dependent plan recomputes the range
-    partitioning — results stay correct row-set-wise; only the (already
-    materialised) ordinal assignment must not be recomputed under a
-    changed sampling, which is why the flush belongs at boundaries."""
+    """Empty the memo and unpersist every DataFrame ``pin`` registered;
+    return how many it unpersisted. Call at session boundaries (bench
+    teardown, test fixture finalizers). Any later re-materialisation of
+    a dependent plan recomputes its input — results stay correct
+    row-set-wise; only an (already materialised) ordinal assignment must
+    not be recomputed under a changed sampling, which is why the flush
+    belongs at boundaries."""
     n = 0
     while _PERSISTED:
         df = _PERSISTED.pop()
@@ -82,13 +106,7 @@ def release_ordinal_caches() -> int:
             n += 1
         except Exception:
             pass
-    _RANGE_CACHE.clear()
-    _PROBE_CACHE.clear()
-    for hook in _RELEASE_HOOKS:
-        try:
-            hook()
-        except Exception:
-            pass
+    _MEMO.clear()
     return n
 
 
@@ -141,6 +159,31 @@ def _leading_numeric_key(df: DataFrame, order_by: list[ColumnOrName]) -> str | N
     return name if isinstance(dtype, _NUMERIC) else None
 
 
+def _density(df: DataFrame, key: str) -> tuple[int, int, bool]:
+    """(min, count, dense) of integer column ``key``: one eager aggregate."""
+    probe = df.agg(
+        F.min(key).alias("lo"), F.max(key).alias("hi"), F.count(key).alias("n")
+    ).first()
+    n = int(probe["n"])
+    lo = int(probe["lo"]) if n else 0
+    return lo, n, n > 0 and int(probe["hi"]) - lo + 1 == n
+
+
+def _qbounds(df: DataFrame, qkey: str, n: int) -> list[float]:
+    """Sorted distinct approximate n-quantile boundaries of ``qkey``.
+
+    percentile_approx (codegen agg) measured ~2x faster than
+    DataFrame.stat.approxQuantile's RDD path for the same sketch; accuracy
+    1000 bounds the sketch size (balance-only — boundary placement never
+    affects values). Nulls are ignored by the sketch; NaNs are dropped
+    from the bounds (a NaN bound would act as +inf anyway)."""
+    probs = F.array(*[F.lit(i / n) for i in range(1, n)])
+    row = df.agg(
+        F.percentile_approx(F.col(qkey).cast("double"), probs, F.lit(1000)).alias("__b")
+    ).first()
+    return sorted({b for b in row["__b"] or [] if b is not None and b == b})
+
+
 def with_ordinal(
     df: DataFrame,
     order_by: Iterable[ColumnOrName],
@@ -148,7 +191,6 @@ def with_ordinal(
     strategy: str = "auto",
     num_partitions: int | None = None,
     bucket_width: int = 1 << 16,
-    memoize: bool = True,
 ) -> DataFrame:
     """Attach a dense 0..n-1 LongType ordinal ``name`` ordered by ``order_by``.
 
@@ -165,7 +207,7 @@ def with_ordinal(
     semanticHash with the relation's input-file snapshot, so re-reading a
     path after an append/overwrite (a new file listing) misses the memo,
     but mutating files in place behind a live DataFrame is undefined —
-    pass ``memoize=False`` to force a fresh probe.
+    call ``release_ordinal_caches()`` to force a fresh probe.
     """
     order_by = list(order_by)
     cols = _cols(order_by)
@@ -186,28 +228,9 @@ def with_ordinal(
         if key is not None:
             if len(order_by) == 1:
                 # single-key density probe: dense → ordinal is a pure map.
-                # Memoised per (analyzed plan semanticHash, file snapshot)
-                # so chained ops don't re-run the eager key-column scan,
-                # while a changed file listing invalidates naturally.
-                ck = (
-                    df._jdf.queryExecution().analyzed().semanticHash(),
-                    hash(tuple(sorted(df.inputFiles()))),
-                    key,
-                )
-                hit = _PROBE_CACHE.get(ck) if memoize else None
-                if hit is None:
-                    probe = df.agg(
-                        F.min(key).alias("lo"),
-                        F.max(key).alias("hi"),
-                        F.count(key).alias("n"),
-                    ).first()
-                    n = int(probe["n"])
-                    lo = int(probe["lo"]) if n else 0
-                    dense = n > 0 and int(probe["hi"]) - lo + 1 == n
-                    if len(_PROBE_CACHE) >= _PROBE_CACHE_MAX:
-                        _PROBE_CACHE.pop(next(iter(_PROBE_CACHE)))
-                    hit = _PROBE_CACHE[ck] = (lo, n, dense)
-                lo, n, dense = hit
+                # Memoised so chained ops don't re-run the eager
+                # key-column scan.
+                lo, n, dense = memo(df, ("density", key), lambda: _density(df, key))
                 if n == 0:
                     return df.withColumn(name, F.lit(0).cast("long"))
                 if dense:
@@ -258,33 +281,7 @@ def with_ordinal(
         if qkey is not None:
             # the bounds probe and the final job both read df
             df = pin_if_nondeterministic(df)
-            bk = (
-                df._jdf.queryExecution().analyzed().semanticHash(),
-                hash(tuple(sorted(df.inputFiles()))),
-                "qbounds",
-                qkey,
-                n,
-            )
-            bounds = _PROBE_CACHE.get(bk) if memoize else None
-            if bounds is None:
-                # percentile_approx (codegen agg) measured ~2x faster
-                # than DataFrame.stat.approxQuantile's RDD path for the
-                # same sketch; accuracy 1000 bounds the sketch size
-                # (balance-only — boundary placement never affects
-                # values). Nulls are ignored by the sketch; NaNs are
-                # dropped from the bounds below (a NaN bound would act
-                # as +inf anyway).
-                probs = F.array(*[F.lit(i / n) for i in range(1, n)])
-                row = df.agg(
-                    F.percentile_approx(
-                        F.col(qkey).cast("double"), probs, F.lit(1000)
-                    ).alias("__b")
-                ).first()
-                raw = row["__b"] or []
-                bounds = sorted({b for b in raw if b is not None and b == b})
-                if len(_PROBE_CACHE) >= _PROBE_CACHE_MAX:
-                    _PROBE_CACHE.pop(next(iter(_PROBE_CACHE)))
-                _PROBE_CACHE[bk] = bounds
+            bounds = memo(df, ("qbounds", qkey, n), lambda: _qbounds(df, qkey, n))
         if bounds:
             # bucket = #bounds <= key, as a plain comparison-sum chain:
             # a filter() higher-order function here trips an optimizer
@@ -312,18 +309,13 @@ def with_ordinal(
             # DataFrame — re-persisting an identical plan just trips
             # CacheManager's "already cached" warning and grows
             # _PERSISTED.
-            rk = (
-                df._jdf.queryExecution().analyzed().semanticHash(),
-                hash(tuple(sorted(df.inputFiles()))),
-                tuple(str(c) for c in cols),
-                n,
-            )
-            tagged = _RANGE_CACHE.get(rk)
-            if tagged is None:
-                tagged = pin(
+            tagged = memo(
+                df,
+                ("range", tuple(str(c) for c in cols), n),
+                lambda: pin(
                     df.repartitionByRange(n, *cols).withColumn(_PID, F.spark_partition_id())
-                )
-                _RANGE_CACHE[rk] = tagged
+                ),
+            )
     else:
         raise ValueError(f"unknown strategy {strategy!r}")
 

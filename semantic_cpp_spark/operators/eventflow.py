@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from semantic_cpp_spark.indexing import memo, pin
+
 
 def sessionize(
     df: DataFrame,
@@ -211,42 +213,13 @@ def merge_intervals(
     )
 
 
-# plan-keyed persisted-intermediate memo (flushed by
-# indexing.release_ordinal_caches via the shared release hook — the same
-# lifecycle as dedup's signature cache): conversion_latency and
-# rfm_segments both feed one derived table into several downstream jobs
-# (counts, rank selections, 1-row aggregates); without a persist the
-# expensive upstream (funnel scan+shuffle / per-user rollup) re-executes
-# per job (self-review r6).
-_DF_MEMO: dict = {}
-
-
-def _flush_df_memo() -> None:
-    while _DF_MEMO:
-        _, df = _DF_MEMO.popitem()
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-
-
-from semantic_cpp_spark.indexing import _RELEASE_HOOKS  # noqa: E402
-
-_RELEASE_HOOKS.append(_flush_df_memo)
-
-
 def _persisted(df: DataFrame) -> DataFrame:
-    # key includes the resolved input files, like dedup._persisted_signatures:
-    # appending files to a source directory leaves the plan's semanticHash
-    # unchanged, and a hash-only key would silently serve the old snapshot
-    key = (
-        df._jdf.queryExecution().analyzed().semanticHash(),
-        hash(tuple(sorted(df.inputFiles()))),
-    )
-    hit = _DF_MEMO.get(key)
-    if hit is None:
-        hit = _DF_MEMO[key] = df.persist()
-    return hit
+    """``df`` pinned once per plan and file snapshot (``indexing.memo``):
+    conversion_latency and rfm_segments both feed one derived table into
+    several downstream jobs (counts, rank selections, 1-row aggregates);
+    without a persist the expensive upstream (funnel scan+shuffle /
+    per-user rollup) re-executes per job (self-review r6)."""
+    return memo(df, ("eventflow",), lambda: pin(df))
 
 
 def conversion_latency(

@@ -1,18 +1,29 @@
 """Row-location machinery: with_ordinal strategy equivalence and
-determinism, exact percentiles by histogram narrowing, and the parquet
-schema memo every fixture load goes through."""
+determinism, the engine's plan-keyed memo and its one flush, exact
+percentiles by histogram narrowing, and the parquet schema memo every
+fixture load goes through."""
 
 import logging
 import math
 import random
+from collections import Counter
 from decimal import Decimal
 
 import pytest
 from pyspark.sql import functions as F
 
+from semantic_cpp_spark import indexing
 from semantic_cpp_spark.functions import stats
 from semantic_cpp_spark.functions.stats import narrow_ranges, percentiles_exact_sorted
-from semantic_cpp_spark.indexing import IDX, normalize_index, rebase_index, with_ordinal
+from semantic_cpp_spark.indexing import (
+    IDX,
+    memo,
+    memo_counts,
+    normalize_index,
+    rebase_index,
+    release_ordinal_caches,
+    with_ordinal,
+)
 
 
 def _mk(spark, n=1000):
@@ -136,8 +147,6 @@ def test_range_quantile_bounds_path(spark):
 def test_range_quantile_bounds_deterministic(spark):
     """two independent constructions produce identical ordinals (the
     boundaries are frozen literals, not a nondeterministic sample)."""
-    from semantic_cpp_spark.indexing import release_ordinal_caches
-
     df = spark.range(2000).select(
         (F.col("id") % 97 * 1.5).alias("k"), F.col("id").alias("tie")
     )
@@ -156,8 +165,6 @@ def test_range_quantile_bounds_pins_nondeterministic_input(spark):
     """The bounds probe and the final job read the input twice: a
     nondeterministic input is pinned, so the ordinal is still dense and
     ordered by the key the rows carry."""
-    from semantic_cpp_spark.indexing import release_ordinal_caches
-
     df = spark.range(3000).select(_noisy()("id").alias("k"), F.col("id").alias("tie"))
     try:
         out = sorted(with_ordinal(df, ["k", "tie"], strategy="range").collect(),
@@ -172,15 +179,13 @@ def test_range_quantile_bounds_pins_nondeterministic_input(spark):
 def _ordinal_over_pinned(df, order_by, **kw):
     """(rows by ordinal, the pinned input's rows) of one ``with_ordinal``
     call whose input must be pinned; caches released afterwards."""
-    from semantic_cpp_spark import indexing
-
     before = len(indexing._PERSISTED)
     try:
         out = sorted(with_ordinal(df, order_by, **kw).collect(), key=lambda r: r[IDX])
         assert len(indexing._PERSISTED) == before + 1
         pinned = indexing._PERSISTED[-1].collect()
     finally:
-        indexing.release_ordinal_caches()
+        release_ordinal_caches()
     return out, pinned
 
 
@@ -210,13 +215,163 @@ def test_bucket_ordinal_pins_nondeterministic_input(spark, strategy):
 
 @pytest.mark.parametrize("strategy", ["auto", "bucket"])
 def test_deterministic_ordinal_input_is_not_pinned(spark, strategy):
-    from semantic_cpp_spark import indexing
-
     before = len(indexing._PERSISTED)
     df = _mk(spark, 200)
     out = with_ordinal(df, ["key"], strategy=strategy, bucket_width=64)
     assert sorted(r[IDX] for r in out.collect()) == list(range(200))
     assert len(indexing._PERSISTED) == before
+
+
+# -- the engine memo (indexing.memo) ---------------------------------------
+
+
+def _counted(fn):
+    """(fn(), the memo lookups it made)."""
+    before = memo_counts()
+    out = fn()
+    return out, memo_counts() - before
+
+
+def _unreachable():
+    raise AssertionError("memo recomputed an entry it holds")
+
+
+def _persistent_rdds(spark):
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+def test_ordinal_probe_memoised(spark):
+    """The auto-strategy density probe runs its eager aggregate once per
+    logical plan, not once per with_ordinal call; a filtered plan is
+    another plan."""
+    df = spark.range(100).select(F.col("id").alias("k"), (F.col("id") * 2).alias("v"))
+    release_ordinal_caches()
+    _, d = _counted(lambda: with_ordinal(df, ["k"]))
+    assert d == Counter({"misses": 1, "density misses": 1})
+    # the entry holds (lo, n, dense)
+    assert memo(df, ("density", "k"), _unreachable) == (0, 100, True)
+    # same plan again → a hit, no second probe
+    _, d = _counted(lambda: with_ordinal(df, ["k"]))
+    assert d == Counter({"hits": 1, "density hits": 1})
+    kept = df.filter("k >= 50")
+    _, d = _counted(lambda: with_ordinal(kept, ["k"]))
+    assert d == Counter({"misses": 1, "density misses": 1})
+    assert memo(kept, ("density", "k"), _unreachable) == (50, 50, True)
+    release_ordinal_caches()
+
+
+def test_release_ordinal_caches(spark):
+    """Range-strategy persists are memoised per plan and unpersisted by
+    release_ordinal_caches, which also empties the memo."""
+    df = spark.createDataFrame(
+        [("b", 1), ("a", 2), ("c", 3)], schema="s string, v int"
+    )
+    release_ordinal_caches()
+    before = _persistent_rdds(spark)
+    out, d = _counted(lambda: with_ordinal(df, ["s"], strategy="range"))
+    assert d == Counter({"misses": 1, "range misses": 1})
+    assert [r["s"] for r in out.orderBy("__idx").collect()] == ["a", "b", "c"]
+    _, d = _counted(lambda: with_ordinal(df, ["s"], strategy="range"))
+    assert d == Counter({"hits": 1, "range hits": 1})
+    assert release_ordinal_caches() == 1
+    assert _persistent_rdds(spark) <= before
+    _, d = _counted(lambda: with_ordinal(df, ["s"], strategy="range"))
+    assert d["range misses"] == 1
+    release_ordinal_caches()
+
+
+def test_release_unpersists_signature_and_eventflow_persists(spark, tmp_path):
+    """The MinHash signatures and the event-flow intermediate are pinned
+    through the memo, so the one flush counts and unpersists them."""
+    from semantic_cpp_spark.operators.eventflow import conversion_latency
+    from semantic_cpp_spark.pipeline.dedup import minhash_lsh_pairs
+
+    docs, events = str(tmp_path / "documents"), str(tmp_path / "events")
+    text = "a near duplicate document about the river bank and its fox"
+    spark.createDataFrame(
+        [(0, text), (1, text + " too"), (2, "something else entirely")],
+        "doc_id long, text string",
+    ).write.parquet(docs)
+    steps = ["signup", "view", "purchase"]
+    spark.createDataFrame(
+        [(u, u * 100 + t, step) for u in range(5) for t, step in enumerate(steps[: 1 + u % 3])],
+        "user_id long, tus long, event_type string",
+    ).write.parquet(events)
+    release_ordinal_caches()
+    before = _persistent_rdds(spark)
+
+    def build():
+        for df in (
+            minhash_lsh_pairs(spark.read.parquet(docs), F.col("text"), F.col("doc_id")),
+            conversion_latency(spark.read.parquet(events), steps),
+        ):
+            df.write.format("noop").mode("overwrite").save()
+
+    _, d = _counted(build)
+    assert d["signatures misses"] == 1 and d["eventflow misses"] == 1
+    assert len(_persistent_rdds(spark) - before) == 2
+    assert release_ordinal_caches() == 2
+    assert _persistent_rdds(spark) <= before
+
+
+def test_memo_stays_within_bound_and_eviction_keeps_persists(spark, monkeypatch):
+    """The memo is a bounded FIFO. Evicting a pinned DataFrame's entry
+    does not unpersist it: plans built on it may still run, so it stays
+    registered until release_ordinal_caches."""
+    monkeypatch.setattr(indexing, "_MEMO_MAX", 4)
+    release_ordinal_caches()
+    df = spark.range(10)
+    pinned = memo(df, ("pinned",), lambda: indexing.pin(df.select("id")))
+    for i in range(10):
+        assert memo(df, ("filler", i), lambda: i) == i
+        assert len(indexing._MEMO) <= 4
+    _, d = _counted(lambda: memo(df, ("filler", 9), _unreachable))
+    assert d["hits"] == 1
+    _, d = _counted(lambda: memo(df, ("pinned",), lambda: None))
+    assert d["misses"] == 1
+    assert pinned.storageLevel.useMemory
+    assert release_ordinal_caches() == 1
+    assert not pinned.storageLevel.useMemory
+
+
+def test_hot_route_probe_reruns_after_append(spark, tmp_path):
+    """minhash_lsh_pairs memoises its route probe per corpus plan and file
+    snapshot. Appending a file to the corpus directory leaves the plan's
+    semanticHash unchanged, so a rebuild in the same session, with no
+    flush, must still run the probe against the new snapshot."""
+    import uuid
+
+    from semantic_cpp_spark.pipeline.dedup import minhash_lsh_pairs
+
+    schema = "doc_id long, text string"
+    corpus = str(tmp_path / "docs")
+    base = "the quick brown fox jumps over the lazy dog near the river bank"
+    spark.createDataFrame(
+        [(0, base), (1, "an entirely different sentence about stock markets today")],
+        schema,
+    ).write.parquet(corpus)
+    sc = spark.sparkContext
+
+    def build():
+        docs = spark.read.schema(schema).parquet(corpus)
+        group = f"hot_route_{uuid.uuid4().hex[:8]}"
+        sc.setJobGroup(group, group)
+        try:
+            pairs = minhash_lsh_pairs(docs, F.col("text"), F.col("doc_id"))
+        finally:
+            sc._jsc.clearJobGroup()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return pairs, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    try:
+        pairs, first_jobs = build()
+        assert first_jobs >= 1 and pairs.count() == 0
+        spark.createDataFrame([(2, base)], schema).write.mode("append").parquet(corpus)
+        pairs, rebuild_jobs = build()
+        assert rebuild_jobs == first_jobs
+        assert [(r["d1"], r["d2"]) for r in pairs.collect()] == [(0, 2)]
+    finally:
+        release_ordinal_caches()
 
 
 # -- exact percentiles (stats.percentiles_exact_sorted) ---------------------
@@ -377,15 +532,13 @@ def test_percentiles_sorted_pins_nondeterministic_input(spark, caplog):
     input: the answer equals the same percentiles over those rows."""
     import numpy as np
 
-    from semantic_cpp_spark import indexing
-
     df = spark.range(4000).select(_noisy()("id").alias("v")).filter(F.rand() < 0.7)
     try:
         out, names, rec = _percentiles(df, caplog)
         got = out.first()
         rows = [r["__v"] for r in indexing._PERSISTED[-1].collect()]
     finally:
-        indexing.release_ordinal_caches()
+        release_ordinal_caches()
     assert rec["pinned"] and rec["n"] == len(rows)
     for i, nm in enumerate(names):
         assert _close(got[nm], float(np.percentile(rows, 100 * _PS[i]))), _PS[i]
@@ -394,8 +547,6 @@ def test_percentiles_sorted_pins_nondeterministic_input(spark, caplog):
 def test_percentiles_sorted_recomputes_on_count_mismatch(spark, caplog, monkeypatch):
     """A round whose counts do not add up is never used: the call pins
     its input and starts over."""
-    from semantic_cpp_spark import indexing
-
     calls = []
 
     def stale_once(ranges, hist, need):
@@ -408,7 +559,7 @@ def test_percentiles_sorted_recomputes_on_count_mismatch(spark, caplog, monkeypa
         out, names, rec = _percentiles(df, caplog)
         got = out.first()
     finally:
-        indexing.release_ordinal_caches()
+        release_ordinal_caches()
     assert len(calls) >= 2 and rec["pinned"]
     for nm, exp in zip(names, _builtin(df)):
         assert _close(got[nm], exp)

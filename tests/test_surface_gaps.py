@@ -252,42 +252,6 @@ def test_iterate_closed_form_is_verified_not_assumed(spark):
     assert big.to_df().filter("__idx = 49999").first()["value"] == 1 + 2 * 49999
 
 
-def test_ordinal_probe_memoised(spark):
-    """The auto-strategy density probe must run its eager aggregate once
-    per logical plan, not once per with_ordinal call."""
-    from semantic_cpp_spark import indexing
-    from semantic_cpp_spark.indexing import with_ordinal
-
-    df = spark.range(100).select(F.col("id").alias("k"), (F.col("id") * 2).alias("v"))
-    indexing._PROBE_CACHE.clear()
-    with_ordinal(df, ["k"])
-    assert len(indexing._PROBE_CACHE) == 1
-    ((_, n, dense),) = [indexing._PROBE_CACHE[k] for k in indexing._PROBE_CACHE]
-    assert n == 100 and dense
-    # same plan again → still one entry (hit, no second probe job)
-    with_ordinal(df, ["k"])
-    assert len(indexing._PROBE_CACHE) == 1
-    # a different plan gets its own entry
-    with_ordinal(df.filter("k >= 50"), ["k"])
-    assert len(indexing._PROBE_CACHE) == 2
-
-
-def test_release_ordinal_caches(spark):
-    """Range-strategy persists are registered and flushed by
-    release_ordinal_caches (r1 advisor: they leaked over long sessions)."""
-    from semantic_cpp_spark import indexing
-    from semantic_cpp_spark.indexing import with_ordinal
-
-    df = spark.createDataFrame(
-        [("b", 1), ("a", 2), ("c", 3)], schema="s string, v int"
-    )
-    out = with_ordinal(df, ["s"], strategy="range")
-    assert [r["s"] for r in out.orderBy("__idx").collect()] == ["a", "b", "c"]
-    assert len(indexing._PERSISTED) >= 1
-    released = indexing.release_ordinal_caches()
-    assert released >= 1 and not indexing._PERSISTED
-
-
 def test_sql_api_over_fixture_views(spark):
     """The whole engine surface is reachable via plain SQL once views are
     registered — Catalyst plans SQL and DataFrame identically."""
