@@ -21,8 +21,9 @@ lookup kind.
 
 Usage: python scripts/headline_profile.py <sf_dir> [query ...] [--warm N] [--passes N]
 
-Prints one row per query with the median CPU per phase, then one JSON
-object with the same figures as its last line.
+Prints the JVM's class archive state (``session.class_archive_state``),
+one row per query with the median CPU per phase, then one JSON object
+with the same figures as its last line.
 """
 
 from __future__ import annotations
@@ -38,7 +39,7 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
 from perfbench.workloads import HEADLINE_QUERIES, cpu_delta_s, cpu_snapshot  # noqa: E402
-from semantic_cpp_spark.session import codegen_compiles  # noqa: E402
+from semantic_cpp_spark.session import class_archive_state, codegen_compiles  # noqa: E402
 
 
 def _phase(spark, group, fn):
@@ -71,6 +72,7 @@ def main() -> None:
 
     spark = get_spark("headline_profile")
     spark.sparkContext.setLogLevel("ERROR")
+    archive = class_archive_state(spark)
     qs = registry.queries()
     cpu = {q: {"build": [], "exec": []} for q in args.queries}
     compiled, memo = {}, {}
@@ -110,6 +112,7 @@ def main() -> None:
     finally:
         spark.stop()
 
+    print(f"class archive {archive}")
     print(f"{'query':<26}{'build_cpu_s':>12}{'jobs':>6}{'compiles':>9}"
           f"{'exec_cpu_s':>12}{'jobs':>6}{'compiles':>9}{'memo_hits':>10}{'memo_misses':>12}")
     cols = ("build_cpu_s", "build_jobs", "build_compiles",
@@ -126,7 +129,7 @@ def main() -> None:
     }
     print(f"memo misses by kind: {tot['memo_misses_by_kind']}")
     print(json.dumps({"sf_dir": args.sf_dir, "warm": args.warm, "passes": args.passes,
-                      "queries": out, "total": tot}))
+                      "class_archive": archive, "queries": out, "total": tot}))
 
 
 if __name__ == "__main__":

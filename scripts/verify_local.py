@@ -71,9 +71,10 @@ def main():
 
     import __spark_entry__ as e
     from semantic_cpp_spark.indexing import memo_counts
-    from semantic_cpp_spark.session import codegen_compiles, get_spark
+    from semantic_cpp_spark.session import class_archive_state, codegen_compiles, get_spark
 
     spark = get_spark("verify_local")
+    archive = class_archive_state(spark)
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
@@ -132,7 +133,7 @@ def main():
     print(f"\n{passed} passed, {failed} failed, {skipped} rows-only, "
           f"{codegen_compiles(spark) - compiled0} classes compiled, "
           f"{memo['hits']} memo hits, {memo['misses']} memo misses, "
-          f"{time.time() - t_sweep:.0f} s")
+          f"class archive {archive}, {time.time() - t_sweep:.0f} s")
     return 1 if failed else 0
 
 

@@ -58,13 +58,6 @@ def stddev_pop(col: Column) -> Column:
     return F.stddev_pop(col)
 
 
-def median_exact(col: Column) -> Column:
-    """useMedian: exact midpoint-average (reference collector.h:2205-2249).
-    Spark `percentile` (exact, linear interpolation) matches the
-    even-n average rule at p=0.5."""
-    return F.percentile(col, F.lit(0.5))
-
-
 def percentile_exact(col: Column, p: float) -> Column:
     """usePercentile: exact linear interpolation on rank p/100·(n−1)
     (reference collector.h:2279-2335) — Spark's exact `percentile` uses the
@@ -104,19 +97,6 @@ def kurtosis_ref(col: Column) -> Column:
     term = (n * (n + 1) * (n - 1) * m4) / ((n - 2) * (n - 3) * F.pow(s, 4) * F.pow(n, 2))
     adj = 3 * F.pow(n - 1, 2) / ((n - 2) * (n - 3))
     return F.when((cnt < 4) | (s == 0), F.lit(0.0)).otherwise(term - adj)
-
-
-def mode_deterministic(col: Column, idx: Column) -> Column:
-    """useMode: most frequent value (reference collector.h:2251-2277 — its
-    phasor-magnitude trick reduces to occurrence count for integer
-    indices; ties there are unordered_map-order nondeterministic).
-    We pin the tie-break deterministically: smallest value wins.
-    Single-expression form for ungrouped use; for grouped use prefer the
-    two-level groupBy pipeline in operators.collectors."""
-    # mode() builtin is non-deterministic on ties; use max_by over
-    # (count, -value) pairs built from a collected map — small-cardinality
-    # only. Callers with big data use the groupBy pipeline instead.
-    raise NotImplementedError("use operators.collectors.mode_df (groupBy pipeline)")
 
 
 # Exact percentiles by histogram narrowing (percentiles_exact_sorted).

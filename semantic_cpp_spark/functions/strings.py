@@ -114,10 +114,6 @@ def starts_with(col: Column, prefix: str) -> Column:
     return F.startswith(col, F.lit(prefix))
 
 
-def ends_with(col: Column, suffix: str) -> Column:
-    return F.endswith(col, F.lit(suffix))
-
-
 def contains(col: Column, needle: str) -> Column:
     return F.contains(col, F.lit(needle))
 
@@ -126,10 +122,6 @@ def sub_clamped(col: Column, start: int, length: int) -> Column:
     """Charsequence::sub clamps instead of throwing (charsequence.h:786-810);
     Spark substring already clamps to string bounds. 0-based start."""
     return F.substring(col, start + 1, length)
-
-
-def repeat_str(col: Column, count: int) -> Column:
-    return F.repeat(col, count)
 
 
 def reverse_str(col: Column) -> Column:

@@ -33,7 +33,7 @@ from __future__ import annotations
 from collections import Counter
 from typing import Any, Callable, Iterable, Union
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.storagelevel import StorageLevel
@@ -140,6 +140,16 @@ _QNUMERIC = _NUMERIC + (T.FloatType, T.DoubleType, T.DecimalType)
 ColumnOrName = Union[Column, str]
 
 
+def one_window() -> WindowSpec:
+    """A window over all rows as one partition, for frames bounded by
+    construction (a per-bucket counts table, a top-k list). The explicit
+    key silences WindowExec's "No Partition Defined" warning, so that
+    warning stays a signal for a real accidental global window.
+    pmod(spark_partition_id(), 1) is always 0 but not foldable: a plain
+    lit(0) is folded out of the partition spec and the warning returns."""
+    return Window.partitionBy(F.pmod(F.spark_partition_id(), F.lit(1)))
+
+
 def _cols(order_by: Iterable[ColumnOrName]) -> list[Column]:
     return [F.col(c) if isinstance(c, str) else c for c in order_by]
 
@@ -215,7 +225,7 @@ def with_ordinal(
         raise ValueError("with_ordinal requires at least one order column")
 
     if strategy == "window":
-        w = Window.partitionBy(F.pmod(F.spark_partition_id(), F.lit(1))).orderBy(*cols)
+        w = one_window().orderBy(*cols)
         return df.withColumn(name, (F.row_number().over(w) - 1).cast("long"))
 
     key = _leading_numeric_key(df, order_by)
@@ -322,16 +332,7 @@ def with_ordinal(
     counts = tagged.groupBy(_PID).agg(F.count(F.lit(1)).alias("__cnt"))
     # The offsets cumulative sum is a GLOBAL window by design — but only
     # over the tiny per-bucket counts table (one row per bucket/partition).
-    # The explicit single-partition key silences WindowExec's "No Partition
-    # Defined" warning so it stays a signal for REAL accidental global
-    # windows. pmod(spark_partition_id(), 1) is always 0 but non-foldable
-    # (a plain lit(0) is constant-folded out of the partition spec and the
-    # warning returns).
-    w_off = (
-        Window.partitionBy(F.pmod(F.spark_partition_id(), F.lit(1)))
-        .orderBy(_PID)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
+    w_off = one_window().orderBy(_PID).rowsBetween(Window.unboundedPreceding, -1)
     offsets = counts.withColumn(
         _OFF, F.coalesce(F.sum("__cnt").over(w_off), F.lit(0)).cast("long")
     ).select(_PID, _OFF)

@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from semantic_cpp_spark.indexing import one_window
 from semantic_cpp_spark.pipeline.text import (
     materialize_tokens,
     tokens,
@@ -1019,7 +1020,7 @@ def dsir_train(
         F.coalesce(F.col("r_b"), F.lit(0)).cast("long").alias("r_b"),
         F.coalesce(F.col("t_b"), F.lit(0)).cast("long").alias("t_b"),
     )
-    w = Window.partitionBy()
+    w = one_window()
     tt = F.sum("t_b").over(w).cast("long")
     rt = F.sum("r_b").over(w).cast("long")
     nll_t = F.round(

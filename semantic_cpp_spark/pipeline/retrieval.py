@@ -24,6 +24,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from semantic_cpp_spark.functions import stats
+from semantic_cpp_spark.indexing import one_window
 from semantic_cpp_spark.pipeline.text import tokens
 
 BM25_K1 = 1.2
@@ -366,8 +367,6 @@ def zipf_fit(df: DataFrame, text: Column, top_n: int = 100) -> DataFrame:
     MOST ``top_n`` rows — bounded by construction, so the single-
     partition sort is a constant, not a scale risk. The OLS reduces the
     n rows to closed-form power sums (one tiny aggregate)."""
-    from pyspark.sql import Window
-
     t = tokens(text)
     top = (
         df.select(F.explode(t).alias("w"))
@@ -377,7 +376,7 @@ def zipf_fit(df: DataFrame, text: Column, top_n: int = 100) -> DataFrame:
         .limit(top_n)
     )
     # ≤ top_n rows from here on — the un-partitioned window is bounded
-    w = Window.orderBy(F.desc("n_w"), "w")
+    w = one_window().orderBy(F.desc("n_w"), "w")
     pts = top.withColumn("rnk", F.row_number().over(w)).select(
         F.log("rnk").alias("x"), F.log("n_w").alias("y")
     )
@@ -431,12 +430,10 @@ def hybrid_rrf(
     doc_id tie-break.
 
     Returns (doc_id, rk, rrf, lex_rank, vec_rank)."""
-    from pyspark.sql import Window
-
     from semantic_cpp_spark.pipeline.similarity import cosine_topk
 
     lex = bm25_topk(docs, text, id_col, query_terms, k=k_each)
-    wl = Window.orderBy(F.col("score").desc(), "doc_id")  # ≤k_each rows
+    wl = one_window().orderBy(F.col("score").desc(), "doc_id")  # ≤k_each rows
     lex_r = lex.select(
         "doc_id", F.row_number().over(wl).cast("long").alias("lex_rank")
     )
@@ -449,7 +446,7 @@ def hybrid_rrf(
     ) + F.coalesce(
         F.lit(1.0) / (F.lit(float(c)) + F.col("vec_rank")), F.lit(0.0)
     )
-    wf = Window.orderBy(F.round(rrf, 6).desc(), "doc_id")  # ≤2·k_each rows
+    wf = one_window().orderBy(F.round(rrf, 6).desc(), "doc_id")  # ≤2·k_each rows
     return (
         j.withColumn("rrf", F.round(rrf, 6))
         .withColumn("rk", F.row_number().over(wf).cast("long"))

@@ -61,14 +61,6 @@ def token_count(col: Column) -> Column:
     return F.size(tokens(col)).cast("long")
 
 
-def avg_token_len(col: Column) -> Column:
-    t = tokens(col)
-    total = F.aggregate(
-        F.transform(t, lambda w: F.length(w)), F.lit(0), lambda a, x: a + x
-    )
-    return total.cast("double") / F.size(t)
-
-
 def alpha_ratio(col: Column) -> Column:
     """Fraction of [a-z] characters (lowercase alpha density)."""
     return (
@@ -203,14 +195,6 @@ def dup_ngram_fraction_t(t: Column, n: int) -> Column:
     )
 
 
-def dup_ngram_fraction(col: Column, n: int) -> Column:
-    """Column-convenience form of :func:`dup_ngram_fraction_t` — carries
-    the O(L²) collapse trap when used on a hot path (the inner token
-    array is an expression); gates go through ``materialize_tokens`` +
-    the ``_t`` form instead."""
-    return dup_ngram_fraction_t(tokens(F.lower(col)), n)
-
-
 def gopher_signals_t(t: Column) -> dict[str, Column]:
     """The signal battery over a LOWERCASED token-array column ``t``;
     each entry is a pure Column. Pass a materialized attribute (see
@@ -262,12 +246,6 @@ def gopher_keep_signals(s: dict[str, Column]) -> Column:
         & (s["dup_2gram_frac"] <= GOPHER_MAX_DUP_2GRAM_FRAC)
         & (s["dup_3gram_frac"] <= GOPHER_MAX_DUP_3GRAM_FRAC)
     )
-
-
-def gopher_keep(col: Column) -> Column:
-    """Composite keep/drop decision straight from raw text (convenience
-    form; same hot-path caveat as :func:`gopher_signals`)."""
-    return gopher_keep_signals(gopher_signals(col))
 
 
 # BPE-ish sub-word tokenisation: letter runs, digit runs, single

@@ -42,20 +42,51 @@ call launches the JVM; unlike the two settings above it is not limited
 to local masters, since every executor JVM keeps its own cache and
 long-lived executors running a repeated mix thrash it the same way. The
 INFO line gives the size bound.
+
+Class archive. A JVM loads ~19,600 classes before its first query ends,
+most of them parsed and verified from the ~250 jars of
+``$SPARK_HOME/jars``. When it launches a ``local[…]`` JVM (the gate of
+the two settings above), ``get_spark`` binds a JDK 13+ dynamic AppCDS
+archive of those classes, kept in the jar's cache dir per key
+(``class_archive_key``: the JDK, the heap size, the classpath and every
+Spark jar's stamp). The first launch of a key dumps it at JVM exit
+(``-XX:ArchiveClassesAtExit``, ~165 MB in ~15 s while the JVM exits); a
+later launch checks the dump with ``-Xshare:on`` once its writer JVM is
+gone, publishes it by atomic rename, and maps it
+(``-XX:SharedArchiveFile``): ~11,000 classes come from the archive, and
+a perfbench ``setup_s`` falls 18–35% (SCALING.md "JVM start from a class
+archive"). CDS maps an archive only for the exact classpath it was dumped
+with, and it cannot share a non-empty directory on it; the launcher puts
+the Spark conf dir there, so a conf dir holding only ``*.template`` files
+is swapped for an empty one for the launch, and one with real files
+(``spark-defaults.conf``, ``log4j2.properties``) skips the archive. The
+flags go in ``spark.driver.defaultJavaOptions``, so a caller's
+``extraJavaOptions`` still apply. Every CDS log line goes to a per-JVM
+file in the cache instead of stdout; a JVM that cannot use its archive
+runs unshared and says so only there, so the INFO line's state
+(``class_archive_state``) is read from that file. The cache keeps the
+``ARCHIVES_KEPT`` most recently used archives and any a live process maps.
 """
 
 from __future__ import annotations
 
+import fcntl
+import glob
 import hashlib
+import json
 import logging
 import os
+import re
+import secrets
 import shutil
 import subprocess
 import tempfile
 import zipfile
 from collections.abc import Callable
+from contextlib import contextmanager
 
 from pyspark import SparkContext
+from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -104,10 +135,17 @@ _CODEGEN_CACHE_KEY = "spark.sql.codegen.cache.maxEntries"
 STOCK_CODEGEN_CACHE_ENTRIES = 100
 # Generated classes the JVM keeps compiled; sized in the module docstring.
 CODEGEN_CACHE_ENTRIES = 4096
+_JOPTS_KEY = "spark.driver.defaultJavaOptions"
+# Keys whose engine value and caller value are both kept, joined by this.
+_JOINED = {_CP_KEY: os.pathsep, _PYPATH_KEY: os.pathsep, _JOPTS_KEY: " "}
+# Class archives kept in the cache, most recently used first (~170 MB each).
+ARCHIVES_KEPT = 3
+# Dumps of one key that may fail before the key stops dumping.
+_DUMP_TRIES = 2
 
 
-def _javac() -> str | None:
-    """The ``javac`` beside the ``java`` Spark's launcher runs
+def _jdk_tool(name: str) -> str | None:
+    """The JDK tool ``name`` beside the ``java`` Spark's launcher runs
     (``$JAVA_HOME/bin/java``, else ``java`` on PATH)."""
     if os.environ.get("JAVA_HOME"):
         bindir = os.path.join(os.environ["JAVA_HOME"], "bin")
@@ -116,8 +154,15 @@ def _javac() -> str | None:
         if java is None:
             return None
         bindir = os.path.dirname(os.path.realpath(java))
-    javac = os.path.join(bindir, "javac")
-    return javac if os.access(javac, os.X_OK) else None
+    tool = os.path.join(bindir, name)
+    return tool if os.access(tool, os.X_OK) else None
+
+
+def _cache_dir() -> str:
+    return os.path.join(
+        os.environ.get("XDG_CACHE_HOME") or os.path.expanduser("~/.cache"),
+        "semantic_cpp_spark",
+    )
 
 
 def nio_fs_jar() -> str | None:
@@ -129,9 +174,8 @@ def nio_fs_jar() -> str | None:
     version and the compiler, and is published with an atomic rename so
     concurrent sessions never load a half-written file."""
     import pyspark
-    from pyspark.find_spark_home import _find_spark_home
 
-    javac = _javac()
+    javac = _jdk_tool("javac")
     if javac is None:
         return None
     sources = sorted(
@@ -141,10 +185,7 @@ def nio_fs_jar() -> str | None:
     for src in sources:
         with open(src, "rb") as f:
             key.update(f.read())
-    cache = os.path.join(
-        os.environ.get("XDG_CACHE_HOME") or os.path.expanduser("~/.cache"),
-        "semantic_cpp_spark",
-    )
+    cache = _cache_dir()
     jar = os.path.join(cache, f"nio-localfs-{key.hexdigest()[:16]}.jar")
     if os.path.exists(jar):
         return jar
@@ -209,6 +250,296 @@ def python_daemon_conf(master: str, jvm_running: bool) -> dict[str, str]:
     return {_DAEMON_KEY: PY_DAEMON, _PYPATH_KEY: _ENGINE_ROOT}
 
 
+def class_archive_key(java: str, spark_home: str, conf: dict[str, str],
+                      conf_dir: str) -> str | None:
+    """Cache key of the class archive that a JVM launched by ``java``
+    with session conf ``conf`` and Spark conf dir ``conf_dir`` can map;
+    None for a JDK before 13, which has no dynamic archives, or when the
+    JDK's ``release`` file or the Spark jars cannot be read.
+
+    It covers what the JVM checks before it maps an archive (the JDK
+    build, the heap size behind the compressed-oops mode, the classpath:
+    ``conf``'s extra classpath, ``conf_dir`` and every jar of
+    ``$SPARK_HOME/jars`` by name, size and mtime), so a changed jar or
+    JDK makes a new archive instead of retrying a stale one."""
+    java = os.path.realpath(java)
+    jars = os.path.join(spark_home, "jars")
+    try:
+        with open(os.path.join(os.path.dirname(os.path.dirname(java)), "release"), "rb") as f:
+            release = f.read()
+        stamps = [(n, os.stat(os.path.join(jars, n))) for n in sorted(os.listdir(jars))
+                  if n.endswith(".jar")]
+    except OSError:
+        return None
+    major = re.search(rb'^JAVA_VERSION="(\d+)', release, re.M)
+    if major is None or int(major.group(1)) < 13:
+        return None
+    key = hashlib.sha256(release)
+    for part in (java, conf.get("spark.driver.memory", ""), conf.get(_CP_KEY, ""), conf_dir):
+        key.update(f"\0{part}".encode())
+    for name, st in stamps:
+        key.update(f"\0{name}\0{st.st_size}\0{st.st_mtime_ns}".encode())
+    return key.hexdigest()[:16]
+
+
+def _alive(pid: int) -> bool:
+    """Whether process ``pid`` runs; an exited, unreaped one does not."""
+    if pid <= 0:
+        return False
+    if os.path.isdir("/proc/self"):
+        try:
+            with open(f"/proc/{pid}/stat") as f:
+                return f.read().rsplit(")", 1)[1].split()[0] != "Z"
+        except OSError:
+            return False
+    try:
+        os.kill(pid, 0)
+    except ProcessLookupError:
+        return False
+    except PermissionError:
+        pass
+    return True
+
+
+def _remove(path: str) -> None:
+    try:
+        os.remove(path)
+    except FileNotFoundError:
+        pass
+
+
+def _line_count(path: str) -> int:
+    try:
+        with open(path) as f:
+            return sum(1 for _ in f)
+    except FileNotFoundError:
+        return 0
+
+
+def _write_json(path: str, obj: dict) -> None:
+    with open(path + ".tmp", "w") as f:
+        json.dump(obj, f)
+    os.replace(path + ".tmp", path)
+
+
+def archive_maps(java: str, classpath: str, jvm_args: list[str], archive: str) -> bool:
+    """Whether ``java`` with ``jvm_args`` maps ``archive`` for
+    ``classpath``. ``-Xshare:on`` makes a JVM that cannot map it fail at
+    start instead of running unshared; a truncated archive crashes it,
+    and the crash report goes to a temporary directory."""
+    with tempfile.TemporaryDirectory() as tmp:
+        try:
+            r = subprocess.run(
+                [java, "-Xshare:on", *jvm_args, f"-XX:SharedArchiveFile={archive}",
+                 "-cp", classpath, "-version"],
+                cwd=tmp, capture_output=True, timeout=120,
+            )
+        except (OSError, subprocess.SubprocessError):
+            return False
+    return r.returncode == 0
+
+
+def _settle_dumps(cache: str) -> None:
+    """Publish each dump whose writer JVM is gone and whose archive maps;
+    delete the others and count them against their key."""
+    for side in glob.glob(os.path.join(cache, "cds-*.*.json")):
+        try:
+            with open(side) as f:
+                rec = dict(json.load(f))
+        except (OSError, ValueError, TypeError):
+            rec = {}
+        if _alive(rec.get("pid", 0)):
+            continue
+        part = side[:-len(".json")] + ".part"
+        key = os.path.basename(side).split(".")[0]
+        done = {"java", "classpath", "jvm_args"} <= rec.keys()
+        if done and os.path.exists(part) and archive_maps(
+            rec["java"], rec["classpath"], rec["jvm_args"], part
+        ):
+            os.replace(part, os.path.join(cache, f"{key}.jsa"))
+        else:
+            _LOG.warning("get_spark: class archive dump %s did not complete or map; "
+                         "deleted", part)
+            _remove(part)
+            with open(os.path.join(cache, f"{key}.failed"), "a") as f:
+                f.write(os.path.basename(part) + "\n")
+        _remove(side)
+    for part in glob.glob(os.path.join(cache, "cds-*.part")):
+        if not os.path.exists(part[:-len(".part")] + ".json"):
+            _remove(part)
+
+
+def _mapped_files() -> set[str] | None:
+    """Files mapped by a process this user can see; None when unknown."""
+    if not os.path.isdir("/proc/self"):
+        return None
+    mapped = set()
+    for pid in filter(str.isdigit, os.listdir("/proc")):
+        try:
+            with open(f"/proc/{pid}/maps") as f:
+                mapped.update(line.split(None, 5)[5].strip() for line in f if ".jsa" in line)
+        except (OSError, IndexError):
+            continue
+    return mapped
+
+
+def _prune(cache: str) -> None:
+    """Keep the ``ARCHIVES_KEPT`` most recently used archives, and any
+    other that a live process maps; drop the CDS logs of dead JVMs."""
+    archives = sorted(glob.glob(os.path.join(cache, "cds-*.jsa")),
+                      key=os.path.getmtime, reverse=True)[ARCHIVES_KEPT:]
+    mapped = _mapped_files() if archives else None
+    for path in archives:
+        if mapped is not None and path not in mapped:
+            _remove(path)
+    for log in glob.glob(os.path.join(cache, "cds-logs", "*-*.log")):
+        pid = log[:-len(".log")].rsplit("-", 1)[1]
+        if pid.isdigit() and not _alive(int(pid)):
+            _remove(log)
+
+
+@contextmanager
+def _locked(cache: str):
+    with open(os.path.join(cache, "cds.lock"), "a") as lock:
+        fcntl.flock(lock, fcntl.LOCK_EX)
+        yield
+
+
+def class_archive_conf(
+    master: str, jvm_running: bool, conf: dict[str, str], java: str | None,
+    spark_home: str, cache: str,
+) -> tuple[dict[str, str], dict[str, str], str]:
+    """Session conf that launches the JVM with a class-data-sharing
+    archive, the environment it launches under, and the reason:
+    ``hit`` (map the archive), ``miss`` (dump one at exit), or why there
+    is none (``non-local master``, ``existing JVM``, ``conf dir has
+    files``, ``no java``, ``no JDK 13+ or Spark jars``, ``cache path
+    has a separator``, ``dump in flight``, ``dump failed twice``).
+
+    ``conf`` is the session conf the JVM launches with, ``cache`` the
+    directory that holds the archives. Under the cache's lock the call
+    settles finished dumps (``_settle_dumps``), touches the archive it
+    maps, prunes the cache (``_prune``), or claims the one dump of its
+    key in a sidecar that ``get_spark`` completes with the JVM's pid and
+    classpath (``_record_dump_writer``)."""
+    why = _unbindable(master, jvm_running)
+    if why:
+        return {}, {}, why
+    conf_dir = os.environ.get("SPARK_CONF_DIR") or os.path.join(spark_home, "conf")
+    if any(not n.endswith(".template") for n in
+           (os.listdir(conf_dir) if os.path.isdir(conf_dir) else ())):
+        return {}, {}, "conf dir has files"
+    if java is None:
+        return {}, {}, "no java"
+    empty = os.path.join(cache, "cds-conf")
+    key = class_archive_key(java, spark_home, conf, empty)
+    if key is None:
+        return {}, {}, "no JDK 13+ or Spark jars"
+    if re.search(r"[\s:'\"]", cache):
+        return {}, {}, "cache path has a separator"
+    token = secrets.token_hex(6)
+    try:
+        flag, why = _claim_archive(cache, key, token, java)
+    except OSError as ex:
+        _LOG.warning("get_spark: class archive cache %s unusable: %s", cache, ex)
+        return {}, {}, "cache not writable"
+    if flag is None:
+        return {}, {}, why
+    # CDS warnings go to stdout by default (hundreds at a dump): every cds
+    # tag goes to a per-JVM file instead, the one record of what mapped.
+    log = os.path.join(cache, "cds-logs", f"{token}-%p.log")
+    opts = f"{flag} -Xlog:cds*=off -Xlog:cds=info,cds+dynamic=info:file={log}::filecount=0"
+    return {_JOPTS_KEY: opts}, {"SPARK_CONF_DIR": empty}, why
+
+
+def _claim_archive(cache: str, key: str, token: str, java: str) -> tuple[str | None, str]:
+    """(JVM flag, reason) for a launch of ``key``: map its archive, or
+    claim its one dump; no flag when a dump is in flight or failed twice."""
+    os.makedirs(os.path.join(cache, "cds-conf"), exist_ok=True)
+    os.makedirs(os.path.join(cache, "cds-logs"), exist_ok=True)
+    archive = os.path.join(cache, f"cds-{key}.jsa")
+    with _locked(cache):
+        _settle_dumps(cache)
+        hit = os.path.exists(archive)
+        if hit:
+            os.utime(archive)  # most recently used: kept by the prune
+        _prune(cache)
+        if hit:
+            return f"-XX:SharedArchiveFile={archive}", "hit"
+        if glob.glob(os.path.join(cache, f"cds-{key}.*.json")):
+            return None, "dump in flight"
+        if _line_count(os.path.join(cache, f"cds-{key}.failed")) >= _DUMP_TRIES:
+            return None, "dump failed twice"
+        part = os.path.join(cache, f"cds-{key}.{token}.part")
+        _write_json(part[:-len(".part")] + ".json", {"pid": os.getpid(), "java": java})
+        return f"-XX:ArchiveClassesAtExit={part}", "miss"
+
+
+def merge_conf(conf: dict[str, str], extra: dict[str, str]) -> dict[str, str]:
+    """``conf`` updated by ``extra``; for a key of ``_JOINED`` set in both,
+    both values are kept, ``conf``'s first."""
+    out = dict(conf)
+    for k, v in extra.items():
+        out[k] = _JOINED[k].join([out[k], v]) if k in _JOINED and k in out else v
+    return out
+
+
+_ARCHIVE_FLAG = re.compile(r"-XX:(ArchiveClassesAtExit|SharedArchiveFile)=(\S+)")
+_CDS_LOG_FLAG = re.compile(r"-Xlog:cds=\S*?:file=([^:\s]+)")
+
+
+def _record_dump_writer(spark: SparkSession, opts: str, java: str) -> None:
+    """Complete the claim of a dump launch with the JVM's pid, classpath
+    and heap flags: what ``_settle_dumps`` needs to check the archive."""
+    flag = _ARCHIVE_FLAG.search(opts)
+    if flag is None or flag.group(1) != "ArchiveClassesAtExit":
+        return
+    jvm = spark.sparkContext._jvm
+    bean = jvm.java.lang.management.ManagementFactory.getRuntimeMXBean()
+    _write_json(flag.group(2)[:-len(".part")] + ".json", {
+        "pid": bean.getPid(),
+        "java": java,
+        "classpath": jvm.java.lang.System.getProperty("java.class.path"),
+        "jvm_args": [a for a in bean.getInputArguments() if re.match(r"-Xm|-XX:[+-]Use", a)],
+    })
+
+
+def _read_cds_log(text: str, dumping: bool) -> tuple[str, str | None]:
+    """(state, why) of a JVM from its CDS log: a mismatched archive is
+    unmapped in the log and nowhere else."""
+    failed = re.search(r"UseSharedSpaces: (.*?)(?: \(hint|$)|(Unable to use shared archive.*)",
+                       text, re.M)
+    if failed:
+        return "unmapped", failed.group(1) or failed.group(2)
+    if dumping:
+        ok = re.search(r"Mapped static +region #0", text)
+        return ("dumping", None) if ok else ("unmapped", "base archive not mapped")
+    ok = "Mapped dynamic region #0" in text
+    return ("mapped", None) if ok else ("unmapped", "archive not in the log")
+
+
+def _archive_state(spark: SparkSession) -> tuple[str, str | None]:
+    opts = spark.sparkContext.getConf().get(_JOPTS_KEY, "")
+    flag, log = _ARCHIVE_FLAG.search(opts), _CDS_LOG_FLAG.search(opts)
+    if flag is None or log is None:
+        return "skipped", None
+    pid = spark.sparkContext._jvm.java.lang.ProcessHandle.current().pid()
+    try:
+        with open(log.group(1).replace("%p", str(pid)), errors="replace") as f:
+            text = f.read()
+    except OSError:
+        return "unmapped", "no CDS log"
+    return _read_cds_log(text, flag.group(1) == "ArchiveClassesAtExit")
+
+
+def class_archive_state(spark: SparkSession) -> str:
+    """``mapped``, ``dumping``, ``unmapped`` or ``skipped``: what the
+    JVM under ``spark`` did with a class archive, read from its own CDS
+    log. ``skipped`` when it was launched without one (a JVM that
+    ``get_spark`` did not launch, or one it launched unshared)."""
+    return _archive_state(spark)[0]
+
+
 def get_spark(
     app_name: str = "semantic_cpp_spark",
     master: str | None = None,
@@ -231,6 +562,11 @@ def get_spark(
       is 100). Sized to cover a full registry sweep's ~3,200 classes, at
       ~8 KB of class metadata each; see the module docstring. The INFO
       line gives the bound size.
+    - A class-data-sharing archive of the Spark classes when this call
+      launches a local[…] JVM: the first launch of a JDK and jar set
+      dumps it at JVM exit, later ones map it (see the module docstring).
+      The INFO line ends with ``class archive <state> (<reason>)``, the
+      state read from the JVM's own CDS log.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
     master = master or os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
@@ -270,22 +606,40 @@ def get_spark(
     )
     conf, fs_reason = local_fs_conf(master, jvm_running, nio_fs_jar)
     conf.update(python_daemon_conf(master, jvm_running))
-    for k, v in (extra_conf or {}).items():
-        if k in (_CP_KEY, _PYPATH_KEY) and k in conf:
-            v = os.pathsep.join([conf[k], v])
-        conf[k] = v
-    for k, v in conf.items():
+    extra_conf = extra_conf or {}
+    java = _jdk_tool("java")
+    archive, env, archive_reason = class_archive_conf(
+        master, jvm_running,
+        merge_conf({"spark.driver.memory": _default_driver_mem(master), **conf},
+                   extra_conf),
+        java, _find_spark_home(), _cache_dir(),
+    )
+    for k, v in merge_conf(merge_conf(conf, archive), extra_conf).items():
         builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+    saved = {k: os.environ.get(k) for k in env}
+    os.environ.update(env)
+    try:
+        spark = builder.getOrCreate()
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                os.environ.pop(k, None)
+            else:
+                os.environ[k] = v
+    if archive:
+        _record_dump_writer(spark, archive[_JOPTS_KEY], java)
     spark.sparkContext.setLogLevel("WARN")
     bound = spark.sparkContext.getConf()
+    state, why = _archive_state(spark)
     _LOG.info(
         "get_spark: local filesystem %s (%s), python worker daemon %s, "
-        "codegen cache %s classes",
+        "codegen cache %s classes, class archive %s (%s)",
         bound.get(_FS_KEY, STOCK_FS),
         fs_reason,
         bound.get(_DAEMON_KEY, STOCK_DAEMON),
         bound.get(_CODEGEN_CACHE_KEY, str(STOCK_CODEGEN_CACHE_ENTRIES)),
+        state,
+        why or archive_reason,
     )
     # ADVICE r15: builder confs only take effect when THIS call launches
     # the JVM; getOrCreate against a pre-existing session silently keeps

@@ -136,6 +136,36 @@ print("DONE_MARKER")
     assert "Asked to cache already cached data" not in combined
 
 
+def _window_nodes(node):
+    """WindowExec nodes of an executed physical plan, through adaptive
+    plans, query stages and reused exchanges."""
+    cls = node.getClass().getSimpleName()
+    if cls == "WindowExec":
+        yield node
+    inner = {"AdaptiveSparkPlanExec": "executedPlan", "ReusedExchangeExec": "child"}.get(cls)
+    if inner is None and cls.endswith("QueryStageExec"):
+        inner = "plan"
+    kids = [getattr(node, inner)()] if inner else []
+    children = node.children()
+    kids += [children.apply(i) for i in range(children.size())]
+    for kid in kids:
+        yield from _window_nodes(kid)
+
+
+@pytest.mark.parametrize("name", ["ir_hybrid_rrf", "txt_redundancy_curve",
+                                  "samp_dsir_logweights", "txt_zipf_fit"])
+def test_bounded_windows_have_a_partition_key(spark, qs, name):
+    """Windows over rows bounded by construction (a top-k list, a decile
+    rollup, a bucket spine) run as one partition through
+    ``indexing.one_window``'s explicit key, so that WindowExec's "No
+    Partition Defined" warning only ever flags a real global window."""
+    df = qs[name](spark, SF)
+    df.collect()
+    windows = list(_window_nodes(df._jdf.queryExecution().executedPlan()))
+    assert windows, name
+    assert all(not w.partitionSpec().isEmpty() for w in windows), [w.toString() for w in windows]
+
+
 def test_bernoulli_sample_is_zero_exchange(spark, qs):
     """Deterministic hash sampling must be a pure narrow filter — any
     Exchange would mean the sampling decision shuffles data."""

@@ -1171,7 +1171,7 @@ def test_get_spark_logs_one_local_fs_line(spark, caplog):
     import logging
 
     from semantic_cpp_spark.session import (
-        CODEGEN_CACHE_ENTRIES, NIO_FS, PY_DAEMON, get_spark,
+        CODEGEN_CACHE_ENTRIES, NIO_FS, PY_DAEMON, class_archive_state, get_spark,
     )
 
     with caplog.at_level(logging.INFO, logger="semantic_cpp_spark.session"):
@@ -1180,8 +1180,270 @@ def test_get_spark_logs_one_local_fs_line(spark, caplog):
     assert lines == [
         f"get_spark: local filesystem {NIO_FS} (existing JVM), "
         f"python worker daemon {PY_DAEMON}, "
-        f"codegen cache {CODEGEN_CACHE_ENTRIES} classes"
+        f"codegen cache {CODEGEN_CACHE_ENTRIES} classes, "
+        f"class archive {class_archive_state(spark)} (existing JVM)"
     ]
+
+
+# -- class-data-sharing archive (session.class_archive_conf) ------------------
+# A local JVM launched by get_spark maps a dynamic AppCDS archive of the
+# Spark classes, dumped by the first launch of a key. The archive must
+# only ever be mapped by a JVM whose JDK and classpath it was dumped for,
+# and a partial dump must never be published.
+
+
+def _spark_home(tmp_path, conf_files=("spark-defaults.conf.template", "workers.template")):
+    home = tmp_path / "spark"
+    (home / "jars").mkdir(parents=True)
+    for name in ("spark-core.jar", "scala-library.jar"):
+        (home / "jars" / name).write_bytes(b"jar")
+    (home / "conf").mkdir()
+    for name in conf_files:
+        (home / "conf" / name).write_text("")
+    return str(home)
+
+
+def _archive_call(home, cache, conf=None, master="local[4]", jvm_running=False):
+    from semantic_cpp_spark import session
+
+    conf = {"spark.driver.memory": "1g", **(conf or {})}
+    return session.class_archive_conf(
+        master, jvm_running, conf, session._jdk_tool("java"), home, str(cache))
+
+
+def _flag(conf, name):
+    import re
+
+    m = re.search(rf"-XX:{name}=(\S+)", conf["spark.driver.defaultJavaOptions"])
+    return m and m.group(1)
+
+
+def _dead_pid():
+    import subprocess
+
+    p = subprocess.Popen(["true"])
+    p.wait()
+    return p.pid
+
+
+def test_class_archive_conf_binds_only_when_safe(tmp_path, monkeypatch):
+    monkeypatch.delenv("SPARK_CONF_DIR", raising=False)
+    home, cache = _spark_home(tmp_path), tmp_path / "cache"
+    cache.mkdir()
+    for master in ("yarn", "spark://h:7077", "local-cluster[2,1,1024]"):
+        assert _archive_call(home, cache, master=master) == ({}, {}, "non-local master")
+    assert _archive_call(home, cache, jvm_running=True) == ({}, {}, "existing JVM")
+    real = _spark_home(tmp_path / "real", ("spark-defaults.conf.template", "spark-defaults.conf"))
+    assert _archive_call(real, cache) == ({}, {}, "conf dir has files")
+    monkeypatch.setenv("SPARK_CONF_DIR", os.path.join(real, "conf"))
+    assert _archive_call(home, cache) == ({}, {}, "conf dir has files")
+    assert os.listdir(cache) == []
+
+
+def test_class_archive_conf_dumps_once_then_maps(tmp_path, monkeypatch):
+    monkeypatch.delenv("SPARK_CONF_DIR", raising=False)
+    home, cache = _spark_home(tmp_path), tmp_path / "cache"
+    cache.mkdir()
+    empty = str(cache / "cds-conf")
+
+    conf, env, why = _archive_call(home, cache)  # templates only: a miss
+    assert (why, env) == ("miss", {"SPARK_CONF_DIR": empty})
+    assert os.listdir(empty) == []
+    part = _flag(conf, "ArchiveClassesAtExit")
+    assert part.startswith(str(cache / "cds-")) and part.endswith(".part")
+    opts = conf["spark.driver.defaultJavaOptions"]
+    assert "-Xlog:cds*=off " in opts and ":file=" + str(cache / "cds-logs") in opts
+
+    # this process is the claimed writer: a second launch neither dumps nor maps
+    assert _archive_call(home, cache) == ({}, {}, "dump in flight")
+
+    archive = part.rsplit(".", 2)[0] + ".jsa"
+    os.remove(part[: -len(".part")] + ".json")
+    with open(archive, "wb") as f:
+        f.write(b"published")
+    os.utime(archive, (1, 1))
+    conf, env, why = _archive_call(home, cache)
+    assert (why, env) == ("hit", {"SPARK_CONF_DIR": empty})
+    assert _flag(conf, "SharedArchiveFile") == archive
+    assert _flag(conf, "ArchiveClassesAtExit") is None
+    assert os.path.getmtime(archive) > 1  # touched on use
+
+    # one jar restamped: a new key, so a new dump and never the old archive
+    jar = os.path.join(home, "jars", "spark-core.jar")
+    os.utime(jar, ns=(os.stat(jar).st_atime_ns, os.stat(jar).st_mtime_ns + 1))
+    conf, _, why = _archive_call(home, cache)
+    assert why == "miss"
+    assert _flag(conf, "SharedArchiveFile") is None
+    assert not _flag(conf, "ArchiveClassesAtExit").startswith(archive[: -len(".jsa")])
+    # another heap size is another compressed-oops mode: another key too
+    assert _archive_call(home, cache, {"spark.driver.memory": "40g"})[2] == "miss"
+
+
+def test_class_archive_flags_keep_caller_java_options(tmp_path, monkeypatch):
+    from semantic_cpp_spark.session import merge_conf
+
+    monkeypatch.delenv("SPARK_CONF_DIR", raising=False)
+    home, cache = _spark_home(tmp_path), tmp_path / "cache"
+    cache.mkdir()
+    archive, _, _ = _archive_call(home, cache)
+    engine = archive["spark.driver.defaultJavaOptions"]
+    caller = {
+        "spark.driver.extraJavaOptions": "-Djava.io.tmpdir=/w/tmp",
+        "spark.driver.defaultJavaOptions": "-Dcaller=1",
+    }
+    got = merge_conf(merge_conf({"spark.driver.extraClassPath": "/jars/nio.jar"}, archive),
+                     {**caller, "spark.driver.extraClassPath": "/jars/more.jar"})
+    assert got == {
+        "spark.driver.extraJavaOptions": "-Djava.io.tmpdir=/w/tmp",
+        "spark.driver.defaultJavaOptions": engine + " -Dcaller=1",
+        "spark.driver.extraClassPath": os.pathsep.join(["/jars/nio.jar", "/jars/more.jar"]),
+    }
+
+
+def _small_archive(tmp_path, classpath):
+    """A real dynamic archive of the JDK's own start-up classes."""
+    import subprocess
+
+    from semantic_cpp_spark.session import _jdk_tool
+
+    path = str(tmp_path / "small.jsa")
+    subprocess.run([_jdk_tool("java"), f"-XX:ArchiveClassesAtExit={path}", "-Xlog:cds=off",
+                    "-cp", classpath, "-version"], check=True, capture_output=True, timeout=120)
+    with open(path, "rb") as f:
+        return f.read()
+
+
+def test_class_archive_partial_dump_is_never_published(tmp_path, monkeypatch):
+    """A dump whose writer is gone is published only if a JVM maps it
+    (``-Xshare:on ... -version``, no Spark session): a truncated or
+    garbage ``.part`` is deleted, and a key whose dump failed twice
+    stops dumping."""
+    import json
+
+    from semantic_cpp_spark.session import _jdk_tool
+
+    monkeypatch.delenv("SPARK_CONF_DIR", raising=False)
+    home, cache = _spark_home(tmp_path), tmp_path / "cache"
+    cache.mkdir()
+    classpath = os.path.join(home, "jars", "spark-core.jar")
+    good = _small_archive(tmp_path, classpath)
+
+    def dump(conf, content):
+        """Complete a claimed dump as a JVM that exited would leave it."""
+        part = _flag(conf, "ArchiveClassesAtExit")
+        with open(part, "wb") as f:
+            f.write(content)
+        with open(part[: -len(".part")] + ".json", "w") as f:
+            json.dump({"pid": _dead_pid(), "java": _jdk_tool("java"),
+                       "classpath": classpath, "jvm_args": ["-Xmx1g"]}, f)
+        return part
+
+    conf, _, why = _archive_call(home, cache)
+    assert why == "miss"
+    for bad in (good[: len(good) // 2], os.urandom(len(good))):
+        part = dump(conf, bad)
+        key = os.path.basename(part).split(".")[0]
+        # settles the dead writer's dump, then claims the next while under the limit
+        conf, _, why = _archive_call(home, cache)
+        assert not os.path.exists(part)
+        assert not os.path.exists(cache / f"{key}.jsa")
+    assert why == "dump failed twice"
+    assert [f for f in os.listdir(cache) if f.endswith((".part", ".jsa"))] == []
+
+    os.remove(cache / f"{key}.failed")
+    conf, _, why = _archive_call(home, cache)
+    assert why == "miss"
+    dump(conf, good)
+    conf, _, why = _archive_call(home, cache)
+    assert why == "hit" and _flag(conf, "SharedArchiveFile") == str(cache / f"{key}.jsa")
+    with open(cache / f"{key}.jsa", "rb") as f:
+        assert f.read() == good
+
+
+def test_class_archive_cache_keeps_recent_and_mapped(tmp_path, monkeypatch):
+    import mmap
+
+    monkeypatch.delenv("SPARK_CONF_DIR", raising=False)
+    home, cache = _spark_home(tmp_path), tmp_path / "cache"
+    (cache / "cds-logs").mkdir(parents=True)
+    old = []
+    for i in range(5):
+        path = cache / f"cds-{i:016x}.jsa"
+        path.write_bytes(b"archive")
+        os.utime(path, (100 + i, 100 + i))
+        old.append(path)
+    stale_log = cache / "cds-logs" / f"abc-{_dead_pid()}.log"
+    live_log = cache / "cds-logs" / f"abc-{os.getpid()}.log"
+    stale_log.write_text("")
+    live_log.write_text("")
+    with open(old[0], "rb") as f, mmap.mmap(f.fileno(), 0, access=mmap.ACCESS_READ):
+        _archive_call(home, cache)  # a miss, which prunes
+        kept = sorted(p.name for p in cache.glob("cds-*.jsa"))
+    # the three most recently used, plus the oldest, which a process maps
+    assert kept == [old[0].name, old[2].name, old[3].name, old[4].name]
+    assert not stale_log.exists() and live_log.exists()
+
+
+def test_read_cds_log_states():
+    from semantic_cpp_spark.session import _read_cds_log
+
+    static = "[0.008s][info][cds] Mapped static  region #0 at base 0x7f (ReadWrite)\n"
+    dynamic = "[0.017s][info][cds] Mapped dynamic region #0 at base 0x7f (ReadWrite)\n"
+    mismatch = (
+        "[0.109s][info][cds] UseSharedSpaces: shared class paths mismatch "
+        "(hint: enable -Xlog:class+path=info to diagnose the failure)\n"
+        "[0.117s][warning][cds,dynamic] Unable to use shared archive. "
+        "The top archive failed to load: /c/a.jsa\n"
+    )
+    assert _read_cds_log(static + dynamic, dumping=False) == ("mapped", None)
+    assert _read_cds_log(static, dumping=True) == ("dumping", None)
+    assert _read_cds_log(static + dynamic + mismatch, dumping=False) == (
+        "unmapped", "shared class paths mismatch")
+    assert _read_cds_log(static, dumping=False)[0] == "unmapped"
+    assert _read_cds_log("", dumping=True)[0] == "unmapped"
+
+
+_ARCHIVE_LAUNCH = r"""
+import json, logging, sys
+logging.basicConfig(level=logging.INFO, stream=sys.stdout, format="%(message)s")
+from pyspark import SparkContext
+from semantic_cpp_spark.session import get_spark
+import __spark_entry__ as e
+spark = get_spark("archive_probe", master="local[2]", shuffle_partitions=2)
+rows = e.queries()["agg_skew_kurt"](spark, sys.argv[1]).collect()
+print("ROWS " + json.dumps(sorted(map(str, rows))))
+spark.stop()
+gateway = SparkContext._gateway
+gateway.shutdown()
+gateway.proc.stdin.close()
+gateway.proc.wait(timeout=240)  # a dumping JVM writes its archive at exit
+"""
+
+
+def test_get_spark_dumps_then_maps_class_archive(tmp_path):
+    """First launch of a fresh cache dumps the archive at JVM exit; the
+    next launch maps it (as read from its CDS log) and answers the same."""
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {**os.environ, "PYTHONPATH": root, "XDG_CACHE_HOME": str(tmp_path),
+           "SPARK_GRAFT_DRIVER_MEM": "1g"}
+    env.pop("SPARK_CONF_DIR", None)
+    runs = []
+    for _ in range(2):
+        out = subprocess.run([sys.executable, "-c", _ARCHIVE_LAUNCH, SF], env=env, cwd=root,
+                             capture_output=True, text=True, timeout=600)
+        assert out.returncode == 0, out.stderr[-3000:]
+        lines = out.stdout.splitlines()
+        info = [ln for ln in lines if ln.startswith("get_spark: ")]
+        rows = [ln for ln in lines if ln.startswith("ROWS ")]
+        assert len(info) == 1 and len(rows) == 1, out.stdout[-3000:]
+        assert "cds" not in out.stdout.replace(str(tmp_path), "").lower()
+        runs.append((info[0].rsplit(", ", 1)[1], rows[0]))
+    assert [state for state, _ in runs] == [
+        "class archive dumping (miss)", "class archive mapped (hit)"]
+    assert runs[0][1] == runs[1][1]
 
 
 @pytest.mark.parametrize("mode", [0o644, 0o755, 0o600, 0o777, 0o1777])
