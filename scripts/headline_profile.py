@@ -15,9 +15,10 @@ from Spark's ``CodegenMetrics``; 0 once the session's codegen cache holds
 the query's classes). Every query starts with the engine's memo flushed
 (``release_ordinal_caches``), as in the benchmark's timed passes, so its
 build should read 0 memo hits; the misses count its memoised probes and
-persists (``indexing.memo_counts``). Job, compile and memo counts are
-those of the last pass; the JSON's total also splits memo misses by
-lookup kind.
+persists (``indexing.memo_counts``), and ``footers`` counts the density
+misses read from parquet footers with no job. Job, compile and memo
+counts are those of the last pass; the JSON's total also splits memo
+misses by lookup kind.
 
 Usage: python scripts/headline_profile.py <sf_dir> [query ...] [--warm N] [--passes N]
 
@@ -108,20 +109,22 @@ def main() -> None:
                 "exec_compiles": compiled[q][1],
                 "memo_hits": memo[q]["hits"],
                 "memo_misses": memo[q]["misses"],
+                "density_footers": memo[q]["density footers"],
             }
     finally:
         spark.stop()
 
     print(f"class archive {archive}")
     print(f"{'query':<26}{'build_cpu_s':>12}{'jobs':>6}{'compiles':>9}"
-          f"{'exec_cpu_s':>12}{'jobs':>6}{'compiles':>9}{'memo_hits':>10}{'memo_misses':>12}")
-    cols = ("build_cpu_s", "build_jobs", "build_compiles",
-            "exec_cpu_s", "exec_jobs", "exec_compiles", "memo_hits", "memo_misses")
+          f"{'exec_cpu_s':>12}{'jobs':>6}{'compiles':>9}{'memo_hits':>10}{'memo_misses':>12}"
+          f"{'footers':>8}")
+    cols = ("build_cpu_s", "build_jobs", "build_compiles", "exec_cpu_s", "exec_jobs",
+            "exec_compiles", "memo_hits", "memo_misses", "density_footers")
     tot = {k: round(sum(r[k] for r in out.values()), 3) for k in cols}
     for q, r in [*out.items(), ("total", tot)]:
         print(f"{q:<26}{r['build_cpu_s']:>12.3f}{r['build_jobs']:>6}{r['build_compiles']:>9}"
               f"{r['exec_cpu_s']:>12.3f}{r['exec_jobs']:>6}{r['exec_compiles']:>9}"
-              f"{r['memo_hits']:>10}{r['memo_misses']:>12}")
+              f"{r['memo_hits']:>10}{r['memo_misses']:>12}{r['density_footers']:>8}")
     by_kind = sum(memo.values(), Counter())
     tot["memo_misses_by_kind"] = {
         k.removesuffix(" misses"): v for k, v in sorted(by_kind.items())

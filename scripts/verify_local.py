@@ -10,7 +10,8 @@ The summary line also gives the generated classes the sweep compiled
 (Janino compiles, from Spark's ``CodegenMetrics``), so a change in how
 often generated code is rebuilt shows without a profiler, and the
 engine memo's hits and misses over the sweep (``indexing.memo_counts``;
-the sweep never flushes the memo, so queries over one plan share it).
+the sweep never flushes the memo, so queries over one plan share it),
+with how many density misses parquet footers answered without a job.
 
 Usage: python scripts/verify_local.py [sf_dir] [name_filter]
 """
@@ -132,7 +133,8 @@ def main():
     memo = memo_counts() - memo0
     print(f"\n{passed} passed, {failed} failed, {skipped} rows-only, "
           f"{codegen_compiles(spark) - compiled0} classes compiled, "
-          f"{memo['hits']} memo hits, {memo['misses']} memo misses, "
+          f"{memo['hits']} memo hits, {memo['misses']} memo misses "
+          f"({memo['density footers']} density probes read from footers), "
           f"class archive {archive}, {time.time() - t_sweep:.0f} s")
     return 1 if failed else 0
 

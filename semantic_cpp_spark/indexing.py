@@ -32,11 +32,15 @@ from __future__ import annotations
 
 from collections import Counter
 from typing import Any, Callable, Iterable, Union
+from urllib.parse import urlparse
+from urllib.request import url2pathname
 
 from pyspark.sql import Column, DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.storagelevel import StorageLevel
+
+from semantic_cpp_spark.session import parquet_int_stats
 
 IDX = "__idx"
 _PID = "__sem_pid"
@@ -86,7 +90,9 @@ def memo(df: DataFrame, tag: tuple, compute: Callable[[], Any]) -> Any:
 
 def memo_counts() -> Counter:
     """Memo lookups since the process started: ``"hits"``, ``"misses"``
-    and the same per lookup kind (``"density misses"``, ...)."""
+    and the same per lookup kind (``"density misses"``, ...), plus
+    ``"density footers"``: density misses answered from parquet footers
+    with no job (``_density``)."""
     return Counter(_MEMO_COUNTS)
 
 
@@ -169,14 +175,64 @@ def _leading_numeric_key(df: DataFrame, order_by: list[ColumnOrName]) -> str | N
     return name if isinstance(dtype, _NUMERIC) else None
 
 
+_BITS = {"byte": 8, "short": 16, "integer": 32, "long": 64}
+_PROJECT = "org.apache.spark.sql.catalyst.plans.logical.Project"
+_ATTRIBUTE = "org.apache.spark.sql.catalyst.expressions.AttributeReference"
+_LOGICAL_RELATION = "org.apache.spark.sql.execution.datasources.LogicalRelation"
+_FS_RELATION = "org.apache.spark.sql.execution.datasources.HadoopFsRelation"
+# exact class: a subclass (a table format's reader) may drop rows the
+# footers still count
+_PARQUET = "org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat"
+
+
+def _footer_density(df: DataFrame, key: str) -> tuple[int | None, int | None, int] | None:
+    """(min, max, count) of ``key`` from parquet footers, or None when
+    ``df.select(key)`` is not a bare scan of them: its optimized plan must
+    be exactly ``Project[<key attribute>]`` over an unpartitioned parquet
+    relation of local (``file:``) files, or that relation alone when the
+    key is its only column. Then the footers describe exactly the rows a
+    probe would aggregate."""
+    scan = df.select(key)
+    plan = scan._jdf.queryExecution().optimizedPlan()
+    if plan.getClass().getName() == _PROJECT:
+        attrs, rel = plan.projectList(), plan.child()
+    else:
+        attrs, rel = plan.output(), plan
+    if attrs.size() != 1:
+        return None
+    attr = attrs.apply(0)
+    if (attr.getClass().getName() != _ATTRIBUTE
+            or rel.getClass().getName() != _LOGICAL_RELATION):
+        return None
+    fs = rel.relation()
+    if (fs.getClass().getName() != _FS_RELATION
+            or fs.fileFormat().getClass().getName() != _PARQUET
+            or not fs.partitionSchema().isEmpty()):
+        return None
+    files = scan.inputFiles()
+    if not all(f.startswith("file:") for f in files):
+        return None
+    return parquet_int_stats([url2pathname(urlparse(f).path) for f in files],
+                             attr.name(), _BITS[attr.dataType().typeName()])
+
+
 def _density(df: DataFrame, key: str) -> tuple[int, int, bool]:
-    """(min, count, dense) of integer column ``key``: one eager aggregate."""
-    probe = df.agg(
-        F.min(key).alias("lo"), F.max(key).alias("hi"), F.count(key).alias("n")
-    ).first()
-    n = int(probe["n"])
-    lo = int(probe["lo"]) if n else 0
-    return lo, n, n > 0 and int(probe["hi"]) - lo + 1 == n
+    """(min, count, dense) of integer column ``key``. Read from the
+    parquet footers when ``df.select(key)`` is a bare scan of local
+    parquet files that record the column's statistics (``_footer_density``;
+    counted as ``"density footers"`` in ``memo_counts``), with no job;
+    else one eager min/max/count aggregate. Both give the same answer."""
+    stats = _footer_density(df, key)
+    if stats is not None:
+        _MEMO_COUNTS["density footers"] += 1
+        lo, hi, n = stats
+    else:
+        probe = df.agg(
+            F.min(key).alias("lo"), F.max(key).alias("hi"), F.count(key).alias("n")
+        ).first()
+        lo, hi, n = probe["lo"], probe["hi"], int(probe["n"])
+    lo = int(lo) if n else 0
+    return lo, n, n > 0 and int(hi) - lo + 1 == n
 
 
 def _qbounds(df: DataFrame, qkey: str, n: int) -> list[float]:
@@ -205,9 +261,11 @@ def with_ordinal(
     """Attach a dense 0..n-1 LongType ordinal ``name`` ordered by ``order_by``.
 
     strategy: "auto" probes a single integer-like key for DENSITY first
-    (min/max/count agg on the pruned key column — one cheap pass): a dense
-    key means ``name = key - min`` is a pure narrow map and the big side
-    NEVER shuffles — the dominant case for well-formed ids (event_id,
+    (min/max/count of the key column: read from the parquet footers when
+    ``df`` is a bare scan of local parquet files, else one aggregate job
+    over the pruned column; see ``_density``): a dense key means
+    ``name = key - min`` is a pure narrow map and the big side NEVER
+    shuffles — the dominant case for well-formed ids (event_id,
     doc_id, a previous __idx before filtering). Non-dense integer keys use
     "bucket"; compound/non-numeric keys use "range". "window" (global
     row_number — single-task sort) exists for tests/cross-checks only.

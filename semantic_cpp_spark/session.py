@@ -66,6 +66,24 @@ file in the cache instead of stdout; a JVM that cannot use its archive
 runs unshared and says so only there, so the INFO line's state
 (``class_archive_state``) is read from that file. The cache keeps the
 ``ARCHIVES_KEPT`` most recently used archives and any a live process maps.
+
+Call-site capture. pyspark 4 wraps every classic ``Column`` and
+``DataFrame`` method to record the Python file and line that called it:
+a ``getActiveSession``, a conf read, ``PySparkCurrentOrigin.set`` and
+``clear`` on the JVM, and a Python stack walk per call. Building one pass
+of ``bench.py``'s 14 headline queries at sf0.001 sent 11,643 py4j
+commands with it, and sends 5,068 without it and with footer-read
+density probes (``indexing._density``). ``get_spark`` turns it off
+(``spark.python.sql.dataFrameDebugging.enabled=false``) on any master.
+The trade: a DataFrame error's context no longer names the Python file
+and line of the failing call. Spark still names the failing function
+(the fragment, e.g. ``divide``), but the call site it gives is a JVM
+reflection frame. pyspark reads the conf once per process
+(``pyspark.errors.utils.is_debugging_enabled``) and keeps the answer,
+so it is set where the session is constructed, and the first session
+that runs a Column method in a process decides it for every later one;
+the INFO line says which held. A plain session built without
+``get_spark`` keeps pyspark's default, as it does for the codegen cache.
 """
 
 from __future__ import annotations
@@ -86,6 +104,7 @@ from collections.abc import Callable
 from contextlib import contextmanager
 
 from pyspark import SparkContext
+from pyspark.errors.utils import is_debugging_enabled
 from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -135,6 +154,7 @@ _CODEGEN_CACHE_KEY = "spark.sql.codegen.cache.maxEntries"
 STOCK_CODEGEN_CACHE_ENTRIES = 100
 # Generated classes the JVM keeps compiled; sized in the module docstring.
 CODEGEN_CACHE_ENTRIES = 4096
+_CALL_SITE_KEY = "spark.python.sql.dataFrameDebugging.enabled"
 _JOPTS_KEY = "spark.driver.defaultJavaOptions"
 # Keys whose engine value and caller value are both kept, joined by this.
 _JOINED = {_CP_KEY: os.pathsep, _PYPATH_KEY: os.pathsep, _JOPTS_KEY: " "}
@@ -565,8 +585,12 @@ def get_spark(
     - A class-data-sharing archive of the Spark classes when this call
       launches a local[…] JVM: the first launch of a JDK and jar set
       dumps it at JVM exit, later ones map it (see the module docstring).
-      The INFO line ends with ``class archive <state> (<reason>)``, the
+      The INFO line gives ``class archive <state> (<reason>)``, the
       state read from the JVM's own CDS log.
+    - No DataFrame call-site capture, on any master: error contexts lose
+      the Python file and line, building a query sends about half the
+      py4j commands (see the module docstring). The INFO line ends with
+      ``call-site capture <on|off>``, the state this process holds.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
     master = master or os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
@@ -598,6 +622,10 @@ def get_spark(
         # reference's policy. Pinned by tests/test_charsets_hypothesis.py.
         .config("spark.sql.legacy.codingErrorAction", "true")
         .config(_CODEGEN_CACHE_KEY, str(CODEGEN_CACHE_ENTRIES))
+        # No DataFrame call-site capture (module docstring). Set at
+        # construction: pyspark caches the conf's value at its first read
+        # in the process.
+        .config(_CALL_SITE_KEY, "false")
     )
     # Under spark-submit the JVM is up before Python and hands over its
     # gateway port; either way this call's classpath could not apply.
@@ -633,13 +661,14 @@ def get_spark(
     state, why = _archive_state(spark)
     _LOG.info(
         "get_spark: local filesystem %s (%s), python worker daemon %s, "
-        "codegen cache %s classes, class archive %s (%s)",
+        "codegen cache %s classes, class archive %s (%s), call-site capture %s",
         bound.get(_FS_KEY, STOCK_FS),
         fs_reason,
         bound.get(_DAEMON_KEY, STOCK_DAEMON),
         bound.get(_CODEGEN_CACHE_KEY, str(STOCK_CODEGEN_CACHE_ENTRIES)),
         state,
         why or archive_reason,
+        "on" if is_debugging_enabled() else "off",
     )
     # ADVICE r15: builder confs only take effect when THIS call launches
     # the JVM; getOrCreate against a pre-existing session silently keeps
@@ -765,6 +794,62 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
             _SCHEMA_MEMO.pop(next(iter(_SCHEMA_MEMO)))
         _SCHEMA_MEMO[key] = df.schema
     return df
+
+
+# bit width of each physical integer type a signed column may be stored as
+_PARQUET_INT_BITS = {"INT32": 32, "INT64": 64}
+
+
+def parquet_int_stats(
+    files: list[str], column: str, bits: int
+) -> tuple[int | None, int | None, int] | None:
+    """``(min, max, non-null count)`` of the signed integer column
+    ``column`` over the local parquet ``files``, read from their footers
+    alone (no Spark job; pyarrow reads a footer in ~1 ms). min and max are
+    None when the count is 0. None, so the caller runs its own scan, unless
+    in every file the only leaf column whose path matches ``column`` case-
+    insensitively is a top-level column of exactly that name, stored as
+    INT32/INT64 with no logical type or a signed INT of at most ``bits``
+    bits, and every non-empty row group records min, max and a null
+    count. Nothing is memoized: the footers are read again on every
+    call."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    lo = hi = None
+    n = 0
+    try:
+        for path in files:
+            meta = pq.read_metadata(path)
+            leaves = [i for i in range(meta.num_columns)
+                      if meta.schema.column(i).path.lower() == column.lower()]
+            if len(leaves) != 1:
+                return None
+            leaf = meta.schema.column(leaves[0])
+            if leaf.path != column or leaf.name != column:  # nested or other case
+                return None
+            width = _PARQUET_INT_BITS.get(leaf.physical_type)
+            kind = leaf.logical_type.type
+            if width and kind == "INT":
+                logical = json.loads(leaf.logical_type.to_json())
+                width = logical["bitWidth"] if logical["isSigned"] else None
+            elif kind != "NONE":
+                width = None
+            if width is None or width > bits:
+                return None
+            for g in range(meta.num_row_groups):
+                group = meta.row_group(g)
+                if group.num_rows == 0:
+                    continue
+                st = group.column(leaves[0]).statistics
+                if st is None or not (st.has_min_max and st.has_null_count):
+                    return None
+                lo = st.min if lo is None else min(lo, st.min)
+                hi = st.max if hi is None else max(hi, st.max)
+                n += group.num_rows - st.null_count
+    except (OSError, pa.ArrowException):
+        return None
+    return lo, hi, n
 
 
 def ts_micros(df: DataFrame, col: str = "ts") -> Column:

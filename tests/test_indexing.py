@@ -651,3 +651,190 @@ def test_schema_memo_skips_unstampable_path(spark, caplog):
         with pytest.raises(Exception, match="PATH_NOT_FOUND|does not exist"):
             read_parquet(spark, "/nonexistent/x.parquet")
     assert [r.decision["memo"] for r in caplog.records if hasattr(r, "decision")] == ["unstamped"]
+
+
+# -- density from parquet footers (indexing._density) ------------------------
+# A density probe over a bare scan of local parquet files is answered from
+# their footers with no job; every other shape runs the aggregate. Either
+# way the answer is the aggregate's.
+
+_INT_TYPES = ("byte", "short", "integer", "long")
+
+
+@pytest.fixture(scope="module")
+def sf_dir(tmp_path_factory):
+    """The fixture's tables at sf0.001, written by the benchmark's
+    generator."""
+    from perfbench.gen import generate
+
+    out = str(tmp_path_factory.mktemp("sf0.001"))
+    generate(out, 0.001, 7)
+    return out
+
+
+def _probe(df, key):
+    """(min, max, non-null count) of ``key`` by the aggregate job."""
+    return tuple(df.agg(F.min(key), F.max(key), F.count(key)).first())
+
+
+def _density_jobs(spark, df, key):
+    """(_density's answer, whether footers gave it, Spark jobs it started)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"density_{uuid.uuid4().hex[:8]}"
+    footers = memo_counts()["density footers"]
+    sc.setJobGroup(group, group)
+    try:
+        got = indexing._density(df, key)
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    from_footers = memo_counts()["density footers"] - footers
+    return got, from_footers, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _as_density(stats):
+    lo, hi, n = stats
+    return (lo if n else 0, n, n > 0 and hi - lo + 1 == n)
+
+
+def test_footer_density_matches_probe_on_fixture(spark, sf_dir):
+    """Every integer column of every fixture table: the footers answer,
+    with the aggregate's (min, max, count) and no job."""
+    import glob
+    import os
+
+    from semantic_cpp_spark.session import load_table
+
+    checked = []
+    for path in sorted(glob.glob(os.path.join(sf_dir, "*.parquet"))):
+        table = os.path.basename(path).removesuffix(".parquet")
+        df = load_table(spark, sf_dir, table)
+        for field in df.schema.fields:
+            if field.dataType.typeName() not in _INT_TYPES:
+                continue
+            expect = _probe(df, field.name)
+            assert indexing._footer_density(df, field.name) == expect, (table, field.name)
+            got, from_footers, jobs = _density_jobs(spark, df, field.name)
+            assert (got, from_footers, jobs) == (_as_density(expect), 1, 0), (table, field.name)
+            checked.append(f"{table}.{field.name}")
+    assert {"events.event_id", "documents.doc_id", "lineitem.l_linenumber"} <= set(checked)
+
+
+def _write(path, table, **kw):
+    import pyarrow.parquet as pq
+
+    pq.write_table(table, path, **kw)
+    return path
+
+
+def _filtered(spark, tmp_path):
+    import pyarrow as pa
+
+    path = _write(str(tmp_path / "kv.parquet"),
+                  pa.table({"k": pa.array(range(60), pa.int64()),
+                            "v": pa.array([i % 7 for i in range(60)], pa.int64())}))
+    return spark.read.parquet(path).filter(F.col("v") > 2), "k"
+
+
+def _partitioned(spark, tmp_path):
+    out = str(tmp_path / "parts")
+    spark.range(50).select(F.col("id").alias("k"), (F.col("id") % 3).alias("p")) \
+        .write.partitionBy("p").parquet(out)
+    return spark.read.parquet(out), "k"
+
+
+def _no_statistics(spark, tmp_path):
+    import pyarrow as pa
+
+    path = _write(str(tmp_path / "nostats.parquet"),
+                  pa.table({"k": pa.array(range(10, 40), pa.int64())}),
+                  write_statistics=False)
+    return spark.read.parquet(path), "k"
+
+
+def _unsigned(spark, tmp_path):
+    import pyarrow as pa
+
+    path = _write(str(tmp_path / "unsigned.parquet"),
+                  pa.table({"k": pa.array(range(5, 25), pa.uint32())}))
+    return spark.read.parquet(path), "k"
+
+
+def _csv(spark, tmp_path):
+    path = str(tmp_path / "k.csv")
+    with open(path, "w") as f:
+        f.write("".join(f"{i}\n" for i in range(3, 30)))
+    return spark.read.schema("k long").csv(path), "k"
+
+
+def _case_mismatch(spark, tmp_path):
+    import pyarrow as pa
+
+    path = _write(str(tmp_path / "upper.parquet"),
+                  pa.table({"K": pa.array(range(7, 19), pa.int64())}))
+    return spark.read.schema("k long").parquet(path), "k"
+
+
+@pytest.mark.parametrize("case", [_filtered, _partitioned, _no_statistics,
+                                  _unsigned, _csv, _case_mismatch],
+                         ids=lambda f: f.__name__.lstrip("_"))
+def test_footer_density_falls_back_to_probe(spark, tmp_path, case):
+    """Plans and files the footers cannot answer for exactly run the
+    aggregate, with its answer."""
+    df, key = case(spark, tmp_path)
+    expect = _probe(df, key)
+    assert expect[2] > 0
+    assert indexing._footer_density(df, key) is None
+    got, from_footers, jobs = _density_jobs(spark, df, key)
+    assert (got, from_footers) == (_as_density(expect), 0) and jobs >= 1
+
+
+def test_footer_density_multi_file_directory(spark, sf_dir, tmp_path):
+    """A directory of several files (the benchmark's stream backlog split)
+    sums their footers."""
+    import os
+    import shutil
+
+    from perfbench.gen import STREAM_DIR, split_stream
+
+    shutil.copyfile(os.path.join(sf_dir, "events.parquet"), tmp_path / "events.parquet")
+    split_stream(str(tmp_path), 4, 1)
+    df = spark.read.parquet(str(tmp_path / STREAM_DIR))
+    assert len(df.inputFiles()) == 4
+    expect = _probe(df, "event_id")
+    assert indexing._footer_density(df, "event_id") == expect
+    assert _density_jobs(spark, df, "event_id") == (_as_density(expect), 1, 0)
+    out = with_ordinal(df, ["event_id"]).select("event_id", IDX).collect()
+    assert sorted(r[IDX] for r in out) == list(range(expect[2]))
+    assert all(r[IDX] == r["event_id"] - expect[0] for r in out)
+
+
+def test_footer_density_counts_only_non_nulls(spark, tmp_path):
+    import pyarrow as pa
+
+    keys = [None if i % 4 == 0 else i for i in range(100, 140)]
+    path = _write(str(tmp_path / "nulls.parquet"),
+                  pa.table({"k": pa.array(keys, pa.int32())}), row_group_size=16)
+    df = spark.read.parquet(path)
+    expect = _probe(df, "k")
+    assert expect == (101, 139, 30)
+    assert indexing._footer_density(df, "k") == expect
+    assert _density_jobs(spark, df, "k") == ((101, 30, False), 1, 0)
+
+
+def test_footer_density_empty_file(spark, tmp_path):
+    """An empty file counts 0 rows: the ordinal is the constant column."""
+    import pyarrow as pa
+
+    path = _write(str(tmp_path / "empty.parquet"),
+                  pa.table({"k": pa.array([], pa.int64()), "v": pa.array([], pa.string())}))
+    df = spark.read.parquet(path)
+    assert indexing._footer_density(df, "k") == _probe(df, "k") == (None, None, 0)
+    assert _density_jobs(spark, df, "k") == ((0, 0, False), 1, 0)
+    release_ordinal_caches()
+    out = with_ordinal(df, ["k"])
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert "0 AS __idx" in plan and "Window" not in plan and "Join" not in plan
+    assert out.collect() == []

@@ -1181,7 +1181,8 @@ def test_get_spark_logs_one_local_fs_line(spark, caplog):
         f"get_spark: local filesystem {NIO_FS} (existing JVM), "
         f"python worker daemon {PY_DAEMON}, "
         f"codegen cache {CODEGEN_CACHE_ENTRIES} classes, "
-        f"class archive {class_archive_state(spark)} (existing JVM)"
+        f"class archive {class_archive_state(spark)} (existing JVM), "
+        "call-site capture off"
     ]
 
 
@@ -1440,7 +1441,7 @@ def test_get_spark_dumps_then_maps_class_archive(tmp_path):
         rows = [ln for ln in lines if ln.startswith("ROWS ")]
         assert len(info) == 1 and len(rows) == 1, out.stdout[-3000:]
         assert "cds" not in out.stdout.replace(str(tmp_path), "").lower()
-        runs.append((info[0].rsplit(", ", 1)[1], rows[0]))
+        runs.append((info[0].split(", ")[-2], rows[0]))
     assert [state for state, _ in runs] == [
         "class archive dumping (miss)", "class archive mapped (hit)"]
     assert runs[0][1] == runs[1][1]
