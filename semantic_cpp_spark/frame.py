@@ -21,9 +21,13 @@ Two coordinates are tracked because the reference distinguishes them:
   without reordering pushes — after which e.g. ``reverse().limit(2)``
   still takes the first two PUSHED elements (pinned by tests).
 
-``__ord`` is any monotone-in-push-order unique long (not necessarily
-dense); ranking it densifies on demand via the scalable ordinal machinery
-(shuffle-free for already-dense streams).
+``__ord`` is dense 0..n-1 in every frame, by construction: engine
+sources number their rows densely, every operator keeps or re-numbers it
+densely, and a frame a caller builds from its own DataFrame is re-numbered
+once, lazily, at construction. So the counter operators read push
+positions directly (limit/skip/sub filter on them, drop_while and
+concatenate shift them, filter/distinct re-number survivors with the
+lazy bucket rebase); none of them runs an eager job.
 
 User callables receive Columns ``(value)`` or ``(value, idx)`` — the
 reference's arity-dispatched index-aware lambda pattern
@@ -39,7 +43,7 @@ from typing import Any, Callable, Union
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from semantic_cpp_spark.indexing import IDX, normalize_index, with_ordinal
+from semantic_cpp_spark.indexing import IDX, normalize_index, rebase_index, with_ordinal
 
 VALUE = "value"
 ORD = "__ord"
@@ -92,8 +96,9 @@ class SemanticFrame:
 
     ``df`` must contain LongType ``__idx`` and a value column (any Spark
     type — the reference's template parameter E, SURVEY.md §1.3);
-    ``__ord`` is attached as ``__idx`` when absent (sources push in index
-    order).
+    ``__ord`` is taken as ``__idx`` when absent (sources push in index
+    order). Either need only be unique: the push order is re-numbered
+    dense 0..n-1 here, by the lazy bucket rebase (no eager job).
     """
 
     def __init__(self, df: DataFrame, value_col: str = VALUE):
@@ -101,7 +106,7 @@ class SemanticFrame:
             df = df.withColumnRenamed(value_col, VALUE)
         if ORD not in df.columns:
             df = df.withColumn(ORD, F.col(IDX))
-        self.df = df.select(IDX, ORD, VALUE)
+        self.df = rebase_index(df, ORD).select(IDX, ORD, VALUE)
 
     # -- plumbing ---------------------------------------------------------
 
@@ -113,19 +118,36 @@ class SemanticFrame:
     def _i(self) -> Column:
         return F.col(IDX)
 
-    def _with(self, df: DataFrame) -> "SemanticFrame":
-        return SemanticFrame(df)
+    @classmethod
+    def _with(cls, df: DataFrame) -> "SemanticFrame":
+        """A frame over ``df`` whose ``__ord`` (``__idx`` when absent) is
+        already dense 0..n-1 — engine sources and this class's operators,
+        which need no re-numbering."""
+        frame = cls.__new__(cls)
+        if ORD not in df.columns:
+            df = df.withColumn(ORD, F.col(IDX))
+        frame.df = df.select(IDX, ORD, VALUE)
+        return frame
 
-    def _ranked(self) -> DataFrame:
-        """Attach dense arrival rank ``__rk`` (0-based) by push order."""
-        return with_ordinal(self.df, [ORD], name="__rk")
+    def _recounted(self, df: DataFrame) -> "SemanticFrame":
+        """The dense push order of ``df`` becomes both the logical index
+        and the push order (the counter-emitting operators renumber
+        both)."""
+        return self._with(df.select(F.col(ORD).alias(IDX), ORD, VALUE))
 
-    @staticmethod
-    def _from_rank(df: DataFrame) -> DataFrame:
-        """Rank becomes both the logical index and the push order (the
-        counter-emitting operators renumber both)."""
-        return df.select(
-            F.col("__rk").alias(IDX), F.col("__rk").alias(ORD), F.col(VALUE)
+    def _positions(self, start: int, end: int | None = None) -> "SemanticFrame":
+        """Push positions [start, end), each emitted at its position (the
+        operator's counter includes the skipped prefix); the survivors'
+        push order counts from 0 again."""
+        keep = F.col(ORD) >= start
+        if end is not None:
+            keep = keep & (F.col(ORD) < end)
+        return self._with(
+            self.df.filter(keep).select(
+                F.col(ORD).alias(IDX),
+                (F.col(ORD) - F.lit(max(start, 0))).alias(ORD),
+                VALUE,
+            )
         )
 
     def to_df(self) -> DataFrame:
@@ -166,8 +188,8 @@ class SemanticFrame:
     def filter(self, pred: ColumnFn) -> "SemanticFrame":
         """Keep matches; emits its own counter in push order
         (reference semantic.h:1197-1216: accept(element, count))."""
-        kept = SemanticFrame(self.df.filter(_apply(pred, self._v, self._i)))
-        return self._with(self._from_rank(kept._ranked()))
+        kept = self.df.filter(_apply(pred, self._v, self._i))
+        return self._recounted(rebase_index(kept, ORD))
 
     def flat(self, fn: ColumnFn | None = None) -> "SemanticFrame":
         """Flatten an array-valued element (or extractor result) 1:N;
@@ -178,8 +200,8 @@ class SemanticFrame:
         exploded = self.df.select(
             F.col(ORD).alias("__pord"), F.posexplode(arr).alias("__pos", VALUE)
         )
-        out = with_ordinal(exploded, ["__pord", "__pos"], name="__rk")
-        return self._with(self._from_rank(out))
+        out = with_ordinal(exploded, ["__pord", "__pos"], name=ORD)
+        return self._recounted(out)
 
     def flat_map(self, fn: ColumnFn) -> "SemanticFrame":
         """Alias of flat(extractor) — reference flatMap semantic.h:1309-1335."""
@@ -221,12 +243,12 @@ class SemanticFrame:
         k = self._v if key is None else _apply(key, self._v, self._i)
         tagged = self.df.withColumn("__k", k)
         w = Window.partitionBy("__k").orderBy(ORD)
-        kept = SemanticFrame(
+        kept = (
             tagged.withColumn("__rn", F.row_number().over(w))
             .filter(F.col("__rn") == 1)
             .drop("__k", "__rn")
         )
-        return self._with(self._from_rank(kept._ranked()))
+        return self._recounted(rebase_index(kept, ORD))
 
     def take_while(self, pred: ColumnFn) -> "SemanticFrame":
         """Emit (with original indices) while pred holds in push order,
@@ -245,15 +267,16 @@ class SemanticFrame:
     def drop_while(self, pred: ColumnFn) -> "SemanticFrame":
         """Drop the leading push-order run while pred holds; everything
         from the first failure onward is emitted re-counted
-        (reference semantic.h:1166-1195)."""
+        (reference semantic.h:1166-1195). The survivors are a suffix of
+        the push order, so their new position is ``__ord - cut``."""
         fail = F.when(~_apply(pred, self._v, self._i), F.col(ORD))
         cut = self.df.agg(F.min(fail).alias("__cut"))
-        kept = SemanticFrame(
+        kept = (
             self.df.crossJoin(F.broadcast(cut))
             .filter(F.col("__cut").isNotNull() & (F.col(ORD) >= F.col("__cut")))
-            .drop("__cut")
+            .withColumn(ORD, F.col(ORD) - F.col("__cut"))
         )
-        return self._with(self._from_rank(kept._ranked()))
+        return self._recounted(kept)
 
     # -- size control / index ops / ordering (SURVEY §2.3) ----------------
 
@@ -261,30 +284,21 @@ class SemanticFrame:
         """First n elements by PUSH order, emitted with the operator's own
         counter 0..n-1 (reference semantic.h:1359-1374) — observable after
         skip/translate/reverse: reverse().limit(2) takes the first two
-        PUSHED elements. For dense streams the rank is a shuffle-free map
-        and Spark's LimitPushDown supplies the short-circuit."""
-        ranked = self._ranked()
-        return self._with(self._from_rank(ranked.filter(F.col("__rk") < n)))
+        PUSHED elements. The push order is dense, so this is a filter on
+        it: a narrow map, no job before the main one."""
+        return self._positions(0, n)
 
     def skip(self, n: int) -> "SemanticFrame":
         """Drop the first n pushed elements; the emitted index is the
         arrival counter INCLUDING the skipped prefix (reference
         semantic.h:1463-1481: accept(element, count)) — output indices
         start at n."""
-        ranked = self._ranked()
-        return self._with(self._from_rank(ranked.filter(F.col("__rk") >= n)))
+        return self._positions(n)
 
     def sub(self, start: int, end: int) -> "SemanticFrame":
         """Slice arrival positions [start, end); emitted index = arrival
         position (reference semantic.h:1512-1530)."""
-        ranked = self._ranked()
-        return self._with(
-            self._from_rank(
-                ranked.filter(
-                    (F.col("__rk") >= start) & (F.col("__rk") < end)
-                )
-            )
-        )
+        return self._positions(start, end)
 
     def reverse(self) -> "SemanticFrame":
         """Negate indices; push order unchanged (reference
@@ -302,17 +316,13 @@ class SemanticFrame:
     def concatenate(self, other: "SemanticFrame") -> "SemanticFrame":
         """Append another stream; both sides re-numbered with one running
         count across the boundary in push order (reference
-        semantic.h:1012-1120)."""
-        left = self._from_rank(self._ranked())
-        cnt = left.agg(F.count(F.lit(1)).cast("long").alias("__lc"))
-        right = (
-            self._from_rank(other._ranked())
-            .crossJoin(F.broadcast(cnt))
-            .withColumn(IDX, F.col(IDX) + F.col("__lc"))
-            .withColumn(ORD, F.col(ORD) + F.col("__lc"))
-            .drop("__lc")
+        semantic.h:1012-1120): the right side's push order is offset by
+        the left count."""
+        cnt = self.df.agg(F.count(F.lit(1)).cast("long").alias("__lc"))
+        right = other.df.crossJoin(F.broadcast(cnt)).withColumn(
+            ORD, F.col(ORD) + F.col("__lc")
         )
-        return self._with(left.unionByName(right))
+        return self._recounted(self.df.unionByName(right.drop("__lc")))
 
     def concatenate_element(self, element: Any) -> "SemanticFrame":
         """concatenate(single element) — the reference's scalar overload
@@ -320,13 +330,13 @@ class SemanticFrame:
         one = self.df.sparkSession.createDataFrame(
             [(0, 0, element)], schema=self.df.schema
         )
-        return self.concatenate(SemanticFrame(one))
+        return self.concatenate(self._with(one))
 
     def concatenate_container(self, items: list) -> "SemanticFrame":
         """concatenate(container) — the container overload (branch 4)."""
         rows = [(i, i, v) for i, v in enumerate(items)]
         other = self.df.sparkSession.createDataFrame(rows, schema=self.df.schema)
-        return self.concatenate(SemanticFrame(other))
+        return self.concatenate(self._with(other))
 
     def parallel(self, n: int | None = None) -> "SemanticFrame":
         """Concurrency declaration → repartition hint. Reference quirk: the
@@ -356,7 +366,7 @@ class SemanticFrame:
             F.col(ORD).asc(),
         ]
         out = with_ordinal(tagged, order, name="__rk")
-        return self._with(self._from_rank(out))
+        return self._recounted(out.drop(ORD).withColumnRenamed("__rk", ORD))
 
     # -- materialisation seams (SURVEY §1.2) ------------------------------
 
@@ -532,8 +542,7 @@ class SemanticFrame:
         encounter order."""
         from semantic_cpp_spark.operators.collectors import partition_chunks
 
-        ranked = self._from_rank(self._ranked())
-        return partition_chunks(ranked, size)
+        return partition_chunks(self.df, size, idx=ORD)
 
     def partition_by(self, key_fn: ColumnFn, value_fn: ColumnFn | None = None) -> DataFrame:
         """usePartitionBy (collector.h:2138-2203)."""

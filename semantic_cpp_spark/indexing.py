@@ -266,7 +266,7 @@ def with_ordinal(
     over the pruned column; see ``_density``): a dense key means
     ``name = key - min`` is a pure narrow map and the big side NEVER
     shuffles — the dominant case for well-formed ids (event_id,
-    doc_id, a previous __idx before filtering). Non-dense integer keys use
+    doc_id, a position column). Non-dense integer keys use
     "bucket"; compound/non-numeric keys use "range". "window" (global
     row_number — single-task sort) exists for tests/cross-checks only.
 
@@ -409,8 +409,10 @@ def rebase_index(df: DataFrame, name: str = IDX) -> DataFrame:
     concatenate (e.g. semantic.h:1207 re-counts survivors) but PRESERVES
     them through map/skip/sub/peek — callers pick the matching behavior.
 
-    The incoming index is unique (dense upstream, filtered here), so the
-    deterministic bucket strategy always applies.
+    The incoming index is unique (a dense one filtered, or a caller's
+    sparse one), so the deterministic bucket strategy always applies: lazy,
+    with no eager probe. ``SemanticFrame`` re-numbers its push order this
+    way after filter/distinct and once for a caller-built frame.
     """
     tmp = f"{name}__new"
     out = with_ordinal(df, [name], name=tmp, strategy="bucket")

@@ -41,7 +41,7 @@ def partition_chunks(df: DataFrame, size: int, idx: str = IDX) -> DataFrame:
     Output: (chunk, values array)."""
     size = max(int(size), 1)
     chunk = F.floor(F.col(idx) / F.lit(size)).cast("long")
-    return group_collect(df, chunk).withColumnRenamed("key", "chunk")
+    return group_collect(df, chunk, idx=idx).withColumnRenamed("key", "chunk")
 
 
 def partition_by_key(

@@ -1,10 +1,12 @@
 """Stream-construction factories (reference semantic.h:1653-2417, SURVEY §2.1).
 
 Every factory yields a SemanticFrame: a DataFrame (__idx: long, value)
-with __idx dense 0..n-1 in the factory's natural order. Distributed
-sources (`spark.range`, parquet scans) compute __idx without a global
-sort where the source itself provides the order (range arithmetic,
-unique order keys).
+with __idx dense 0..n-1 in the factory's natural order, so it is wrapped
+as the frame's push order as is (``SemanticFrame._with``), without the
+re-numbering a caller-built frame gets. Distributed sources
+(`spark.range`, parquet scans) compute __idx without a global sort where
+the source itself provides the order (range arithmetic, unique order
+keys).
 """
 
 from __future__ import annotations
@@ -36,12 +38,12 @@ def from_range(
             (F.col("id") - F.lit(lo)).cast("long").alias(IDX),
             F.col("id").alias(VALUE),
         )
-        return SemanticFrame(df)
+        return SemanticFrame._with(df)
     if step == 0:
         return use_empty(spark, "long")
     df = spark.range(start, end, step)
     idx = ((F.col("id") - F.lit(start)) / F.lit(step)).cast("long")
-    return SemanticFrame(df.select(idx.alias(IDX), F.col("id").alias(VALUE)))
+    return SemanticFrame._with(df.select(idx.alias(IDX), F.col("id").alias(VALUE)))
 
 
 def from_range_closed(
@@ -65,7 +67,7 @@ def from_container(spark: SparkSession, items: Sequence[Any]) -> SemanticFrame:
     df = spark.createDataFrame(
         [(i, v) for i, v in enumerate(items)], schema=(IDX, VALUE)
     )
-    return SemanticFrame(df)
+    return SemanticFrame._with(df)
 
 
 def from_repeat(spark: SparkSession, element: Any, count: int) -> SemanticFrame:
@@ -73,7 +75,7 @@ def from_repeat(spark: SparkSession, element: Any, count: int) -> SemanticFrame:
     df = spark.range(count).select(
         F.col("id").alias(IDX), F.lit(element).alias(VALUE)
     )
-    return SemanticFrame(df)
+    return SemanticFrame._with(df)
 
 
 _ITERATE_UNROLL_MAX = 128
@@ -190,7 +192,7 @@ def iterate(
         df = spark.range(limit).select(
             F.col("id").alias(IDX), closed_fn(F.col("id")).alias(VALUE)
         )
-        return SemanticFrame(df)
+        return SemanticFrame._with(df)
     # probe looked affine but the recurrence diverges somewhere in
     # [0, limit), or was never affine — exact unroll while plannable.
     if limit <= _ITERATE_UNROLL_HARD:
@@ -316,7 +318,7 @@ def use_random(
     if integers:
         v = F.floor(v).cast("long")
     df = spark.range(count).select(F.col("id").alias(IDX), v.alias(VALUE))
-    return SemanticFrame(df)
+    return SemanticFrame._with(df)
 
 
 def use_blob_text(
@@ -343,7 +345,7 @@ def use_blob_text(
         [(i, int(b)) for i, b in enumerate(data[lo:hi])],
         schema=f"{IDX} long, {VALUE} int",
     )
-    return SemanticFrame(df)
+    return SemanticFrame._with(df)
 
 
 def use_generate(
@@ -359,7 +361,7 @@ def use_generate(
 def use_empty(spark: SparkSession, value_type: str = "string") -> SemanticFrame:
     """useEmpty (reference semantic.h:1975-1981)."""
     df = spark.createDataFrame([], schema=f"{IDX} long, {VALUE} {value_type}")
-    return SemanticFrame(df)
+    return SemanticFrame._with(df)
 
 
 def from_dataframe(
@@ -380,7 +382,7 @@ def from_dataframe(
         isinstance(k, str) for k in keys
     ) else df.select(v.alias(VALUE), "*")
     out = with_ordinal(named, keys, name=IDX, strategy=strategy)
-    return SemanticFrame(out.select(IDX, VALUE))
+    return SemanticFrame._with(out.select(IDX, VALUE))
 
 
 def from_parquet_column(
@@ -403,7 +405,7 @@ def from_text_lines(spark: SparkSession, path: str) -> SemanticFrame:
     raw = spark.read.text(path).select(F.col("value"))
     tagged = raw.withColumn("__mid", F.monotonically_increasing_id())
     out = with_ordinal(tagged, ["__mid"], name=IDX)
-    return SemanticFrame(out.select(IDX, VALUE))
+    return SemanticFrame._with(out.select(IDX, VALUE))
 
 
 def register_fixture_views(spark: SparkSession, sf_dir: str) -> list[str]:

@@ -1,5 +1,6 @@
 """Row-location machinery: with_ordinal strategy equivalence and
-determinism, the engine's plan-keyed memo and its one flush, exact
+determinism, a SemanticFrame's dense push order, the engine's
+plan-keyed memo and its one flush, exact
 percentiles by histogram narrowing, and the parquet schema memo every
 fixture load goes through."""
 
@@ -220,6 +221,77 @@ def test_deterministic_ordinal_input_is_not_pinned(spark, strategy):
     out = with_ordinal(df, ["key"], strategy=strategy, bucket_width=64)
     assert sorted(r[IDX] for r in out.collect()) == list(range(200))
     assert len(indexing._PERSISTED) == before
+
+
+# -- a SemanticFrame's dense push order (frame.ORD) -------------------------
+
+_VALUES = [3, 1, 4, 1, 5, 9, 2, 6, 5, 3, 5, 8, 9, 7, 9, 3]
+
+
+def _counter_ops(s):
+    """pairs() of every counter operator over ``s`` (partition: its
+    chunks), the operators that emit their own running count."""
+    return {
+        "filter": s.filter(lambda v: v > 3).pairs(),
+        "distinct": s.distinct().pairs(),
+        "drop_while": s.drop_while(lambda v: v < 5).pairs(),
+        "limit": s.limit(5).pairs(),
+        "skip": s.skip(11).pairs(),
+        "sub": s.sub(4, 9).pairs(),
+        "concatenate": s.concatenate(s).pairs(),
+        "partition": sorted((r["chunk"], r["values"]) for r in s.partition(3).collect()),
+    }
+
+
+def test_caller_frame_with_sparse_index_counts_like_dense(spark):
+    """A caller may build a SemanticFrame on an ``__idx`` that is unique
+    but not dense (here 10·i over three partitions). Its push order is
+    re-numbered dense once at construction, so every counter operator
+    answers as it does on a dense source of the same values."""
+    from semantic_cpp_spark.frame import SemanticFrame
+    from semantic_cpp_spark.sources import from_container
+
+    v = _VALUES
+    first = [x for i, x in enumerate(v) if x not in v[:i]]
+    cut = next(i for i, x in enumerate(v) if x >= 5)
+    expect = {
+        "filter": list(enumerate(x for x in v if x > 3)),
+        "distinct": list(enumerate(first)),
+        "drop_while": list(enumerate(v[cut:])),
+        "limit": list(enumerate(v[:5])),
+        "skip": [(i, v[i]) for i in range(11, len(v))],
+        "sub": [(i, v[i]) for i in range(4, 9)],
+        "concatenate": list(enumerate(v + v)),
+        "partition": [(c, v[3 * c:3 * c + 3]) for c in range((len(v) + 2) // 3)],
+    }
+    rows = [(10 * i, x) for i, x in enumerate(v)]
+    sparse = SemanticFrame(
+        spark.createDataFrame(rows, f"{IDX} long, value long").repartition(3)
+    )
+    try:
+        assert sparse.pairs() == rows
+        assert _counter_ops(sparse) == expect
+        assert _counter_ops(from_container(spark, v)) == expect
+    finally:
+        release_ordinal_caches()
+
+
+def test_random_frame_filter_pins_input_once(spark):
+    """use_random's values change on every evaluation of the plan, and
+    filter's bucket re-numbering reads its input in two jobs (the bucket
+    counts, then the numbering), so building the filter pins that input
+    once and the survivors are numbered over the rows both jobs saw."""
+    from semantic_cpp_spark.sources import use_random
+
+    before = len(indexing._PERSISTED)
+    try:
+        kept = use_random(spark, 2000).filter(lambda v: v < 0.5)
+        assert len(indexing._PERSISTED) == before + 1
+        pairs = kept.pairs()
+    finally:
+        release_ordinal_caches()
+    assert [i for i, _ in pairs] == list(range(len(pairs)))
+    assert 0 < len(pairs) < 2000 and all(x < 0.5 for _, x in pairs)
 
 
 # -- the engine memo (indexing.memo) ---------------------------------------

@@ -1101,15 +1101,16 @@ def test_running_stats_is_native_stateful_aggregate(spark):
 # bench.py flushes them before every timed run. A new eager probe shows
 # up here as a changed count. Density probes over a bare ``events`` scan
 # are read from parquet footers and start no job; sem_sort_stable keeps
-# its quantile-bounds probe, sem_filter_rebases_idx its density probe
-# after the filter.
+# its quantile-bounds probe. sem_filter_rebases_idx starts none: a
+# frame's push order is dense by construction, so the filter re-numbers
+# its survivors with the lazy bucket rebase, not after a density probe.
 _HEADLINE_BUILD_JOBS = {
     "rel_q1_pricing_summary": 0,
     "rel_q3_top_revenue": 0,
     "rel_q5_nation_revenue": 0,
     "rel_topk_per_segment": 0,
     "sem_sort_stable": 2,
-    "sem_filter_rebases_idx": 2,
+    "sem_filter_rebases_idx": 0,
     "agg_skew_kurt": 0,
     "agg_quantiles": 4,
     "grp_frequency_profile": 0,
@@ -1144,6 +1145,54 @@ def test_headline_build_jobs(spark, qs):
     tracker = sc.statusTracker()
     got = {q: len(tracker.getJobIdsForGroup(f"{tag}:{q}")) for q in bench.BENCH_QUERIES}
     assert got == _HEADLINE_BUILD_JOBS
+
+
+def test_counter_operators_build_no_jobs(spark):
+    """A SemanticFrame's push order is dense 0..n-1 by construction, so
+    building a counter operator (the ones that emit their own running
+    count) on a source frame starts no Spark job and runs no density
+    probe: limit/skip/sub/partition read positions, drop_while and
+    concatenate shift them, filter/distinct re-number survivors with the
+    lazy bucket rebase."""
+    import uuid
+
+    from semantic_cpp_spark.indexing import memo_counts, release_ordinal_caches
+    from semantic_cpp_spark.sources import from_dataframe
+
+    df = spark.range(3000).select(
+        (F.col("id") * 10).alias("k"), (F.col("id") % 7).alias("v")
+    )
+    src = from_dataframe(df, "v", ["k"])
+    other = from_dataframe(df.filter(F.col("k") % 3 == 0), "v", ["k"])
+    builds = {
+        "filter": lambda: src.filter(lambda v: v > 2),
+        "distinct": lambda: src.distinct(),
+        "drop_while": lambda: src.drop_while(lambda v: v < 3),
+        "limit": lambda: src.limit(100),
+        "skip": lambda: src.skip(50),
+        "sub": lambda: src.sub(100, 200),
+        "concatenate": lambda: src.concatenate(other),
+        "partition": lambda: src.partition(10),
+    }
+    sc = spark.sparkContext
+    tag = f"counter_ops_{uuid.uuid4().hex[:8]}"
+    probes = {}
+    try:
+        for op, build in builds.items():
+            before = memo_counts()["density misses"]
+            sc.setJobGroup(f"{tag}:{op}", op)
+            try:
+                build()
+            finally:
+                sc._jsc.clearJobGroup()
+            probes[op] = memo_counts()["density misses"] - before
+    finally:
+        release_ordinal_caches()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    jobs = {op: len(tracker.getJobIdsForGroup(f"{tag}:{op}")) for op in builds}
+    assert jobs == dict.fromkeys(builds, 0)
+    assert probes == dict.fromkeys(builds, 0)
 
 
 # py4j commands bench.py's headline queries sent while built, summed over
